@@ -6537,11 +6537,12 @@ def test_kn3_fit_model_roundtrip_matches_in_pass_verdicts(
 
 
 def test_scoped_caches_release_blocks_after_collect(spark):
-    """r13 (VERDICT r12 item 5): the multi-consumer intermediates the
-    dedup/text ledger builders persist must be RELEASED when the
-    caller drops the result — a 316-entry sweep must not accumulate
-    MEMORY_AND_DISK blocks in the shared session (guide §5: caching
-    competes with execution memory; unpersist when done)."""
+    """The multi-consumer intermediates the dedup/text ledger builders
+    checkpoint must be READ by the result's action — also through a
+    post-processing ``orderBy``/``limit`` on top (d52 lost its chunk
+    cache that way under the former weakref-scoped persist) — and
+    RELEASED once the caller drops the result, so a 316-entry sweep
+    does not accumulate blocks in the shared session."""
     import gc
     import time
 
@@ -6549,34 +6550,76 @@ def test_scoped_caches_release_blocks_after_collect(spark):
     from zappy_spark.queries import QUERIES
 
     sc = spark.sparkContext
+    jsc = sc._jsc.sc()
 
-    def _blocks() -> int:
-        return len(sc._jsc.sc().getRDDStorageInfo())
+    def _cached() -> set[int]:
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    def _persistent() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    def _checkpoint_rdd_ids(df) -> set[int]:
+        # the checkpointed RDDs df's plan reads: its LogicalRDD leaves
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return {
+            leaves.apply(i).rdd().id()
+            for i in range(leaves.size())
+            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+        }
+
+    def _scans(df) -> int:
+        # after the action AQE prints the final plan, then the initial
+        # one; count the final plan's checkpoint reads only
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0].count("Scan ExistingRDD")
+
+    def _gc() -> None:
+        gc.collect()
+        spark._jvm.System.gc()
 
     # In a full-suite session earlier tests' localCheckpoint RDDs
     # linger until ContextCleaner drains them, so assert NET growth
     # (settled count back at/below the baseline), not absolute zero.
-    gc.collect()
-    spark._jvm.System.gc()
+    _gc()
     time.sleep(0.5)
-    base = _blocks()
+    base = len(_cached())
     for name in (
-        "d06_lsh_neardup_pipeline",  # banded + grams caches
-        "d37_prefix_jaccard",  # element-table cache
-        "d52_cdc_dedup",  # chunk-frame cache
-        "t07_tfidf",  # tf cache
+        "d06_lsh_neardup_pipeline",  # banded + grams checkpoints
+        "d37_prefix_jaccard",  # element-table checkpoint
+        "d52_cdc_dedup",  # chunk-frame checkpoint
+        "t07_tfidf",  # tf checkpoint
     ):
+        before = _persistent()
         out = QUERIES[name](spark, SF_SMOKE_DIR)
         assert out.collect()
-        # while the result frame is alive its caches may stay
+        # while the result frame is alive its checkpoints hold blocks
+        # and the executed plan reads them
+        ids = _checkpoint_rdd_ids(out)
+        assert ids and ids <= _persistent() - before, name
+        assert ids <= _cached(), f"{name} never materialized {ids}"
+        assert _scans(out) >= 2, name
         del out
-        gc.collect()
-        # unpersist is non-blocking; give the JVM a moment
+        # the ContextCleaner releases after a JVM GC drops the plan
         for _ in range(100):
-            if _blocks() <= base:
+            _gc()
+            if len(_cached()) <= base:
                 break
             time.sleep(0.1)
-        assert _blocks() <= base, f"{name} leaked persisted blocks"
+        assert len(_cached()) <= base, f"{name} leaked persisted blocks"
+
+    # Two copies of one entry: dropping one must not release the
+    # other's intermediate (equal sub-plans shared ONE CacheManager
+    # entry under the former persist, which either owner could drop).
+    a = QUERIES["d52_cdc_dedup"](spark, SF_SMOKE_DIR)
+    b = QUERIES["d52_cdc_dedup"](spark, SF_SMOKE_DIR)
+    own_b = _checkpoint_rdd_ids(b)
+    assert own_b and not own_b & _checkpoint_rdd_ids(a)
+    del a
+    _gc()
+    time.sleep(0.5)
+    assert b.collect()
+    assert own_b <= _cached()
+    assert _scans(b) >= 2
 
 
 def test_graph_broadcast_gate_paths_agree(spark):
@@ -6599,6 +6642,12 @@ def test_graph_broadcast_gate_paths_agree(spark):
     assert _parse_byte_conf("1g") == 1024**3
     assert _parse_byte_conf("-1") == -1
     assert _parse_byte_conf(524288) == 524288
+    assert _parse_byte_conf("2pb") == 2 * 1024**5
+    assert _parse_byte_conf("1p") == 1024**5
+    # unparseable spellings read as disabled (-1): the gate takes the
+    # shuffle path instead of raising
+    for bad in ("garbage", "", "12zb", "1.5.2m", "nan", "inf"):
+        assert _parse_byte_conf(bad) == -1, bad
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 6)],

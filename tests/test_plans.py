@@ -239,7 +239,7 @@ def test_ann_index_probe_is_partition_pruned(spark, tmp_path):
 
 def test_near_dup_pairs_persists_grams(spark, tmp_path):
     """The shingle frame feeds three consumers (signature agg + both
-    verify-join sides); the plan must read the persisted grams, not
+    verify-join sides); the plan must read the checkpointed grams, not
     rescan the corpus three times (VERDICT r1 next-5)."""
     from zappy_spark.operators.dedup import near_dup_pairs
     from zappy_spark.queries._util import t
@@ -247,16 +247,13 @@ def test_near_dup_pairs_persists_grams(spark, tmp_path):
     docs = t(spark, SF_DIR, "documents")
     out = near_dup_pairs(docs, "text", "doc_id", bands=4, num_hashes=16)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 3, plan[:2000]
-    # and the lazy form stays cache-free (clear first: the cache
-    # manager would otherwise substitute the matching cached subplan)
-    spark.catalog.clearCache()
+    assert plan.count("Scan ExistingRDD") >= 3, plan[:2000]
+    # and the lazy form stays checkpoint-free
     out2 = near_dup_pairs(
         docs, "text", "doc_id", bands=4, num_hashes=16, persist=False
     )
     plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in plan2
-    spark.catalog.clearCache()
+    assert "Scan ExistingRDD" not in plan2
 
 
 # Declared naive-window oracle forms whose scale twin is r40 (the
@@ -349,12 +346,18 @@ def test_scalar_threshold_queries_broadcast(spark):
 
 def test_boilerplate_persists_gram_frame(spark):
     """t13: the exploded (doc, gram) frame feeds the frequency agg AND
-    the hit join — the plan must read the persisted frame twice, not
-    re-explode the corpus."""
-    spark.catalog.clearCache()
+    the hit join — the plan must read the checkpointed frame twice,
+    not re-explode the corpus."""
     plan = _plan(QUERIES["t13_boilerplate"](spark, SF_DIR))
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
-    spark.catalog.clearCache()
+    assert plan.count("Scan ExistingRDD") >= 2, plan[:2000]
+
+
+def test_cdc_dedup_reads_chunk_checkpoint(spark):
+    """d52: the CDC chunk frame feeds the occurrence agg AND the
+    instance join — the plan must read the checkpointed chunks through
+    the query's ``orderBy``, not re-run the chunking chain."""
+    plan = _plan(QUERIES["d52_cdc_dedup"](spark, SF_DIR))
+    assert plan.count("Scan ExistingRDD") >= 2, plan[:2000]
 
 
 def test_bucketed_layout_runs_r02_r10_shapes_shuffle_free(spark):
@@ -1093,7 +1096,7 @@ def test_ngram_novelty_is_pure_hash_aggs(spark):
     assert "Python" not in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan  # rollup merge stays broadcast
-    assert plan.count("InMemoryTableScan") >= 2  # explode runs once
+    assert plan.count("Scan ExistingRDD") >= 2  # explode runs once
 
 
 def test_cusum_is_one_partitioned_window_pass(spark):

@@ -258,14 +258,8 @@ def lsh_candidate_pairs(
     # (id, bucket) rows; MEMORY_AND_DISK spills gracefully.
     # ``persist=False`` keeps the plan fully lazy (the
     # near_dup_pairs contract, plan-pinned in test_plans).
-    # r13 (VERDICT r12 item 5): scope the cache to the returned
-    # frame's lifetime so the blocks are released when the caller
-    # drops the result instead of leaking into the session.
-    banded_c = None
     if persist:
-        from zappy_spark.operators._scoped import cache_scoped
-
-        banded = banded_c = cache_scoped(banded)
+        banded = banded.localCheckpoint(eager=False)
     if max_bucket is not None:
         if max_bucket == "auto":
             max_bucket = auto_max_bucket(banded)
@@ -279,17 +273,14 @@ def lsh_candidate_pairs(
     other = banded.select(
         F.col("_id").alias("_id2"), F.col("bucket").alias("bucket2")
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         banded.join(
             other,
             (F.col("bucket") == F.col("bucket2"))
             & (F.col("_id") < F.col("_id2")),
         )
         .select(F.col("_id").alias("i"), F.col("_id2").alias("j"))
-        .distinct(),
-        banded_c,
+        .distinct()
     )
 
 
@@ -323,11 +314,15 @@ def near_dup_pairs(
 
     The shingle expansion (``grams``) feeds three consumers — the
     signature aggregation and both sides of the verify join — so it is
-    persisted (MEMORY_AND_DISK) by default: one scan+shingle pass
-    instead of three, which at real scale is the difference between
-    reading the corpus once and three times. Spark evicts the cache
-    LRU; pass ``persist=False`` to keep the plan fully lazy (e.g. when
-    the caller checkpoints grams itself)."""
+    lazily local-checkpointed (MEMORY_AND_DISK) by default: one
+    scan+shingle pass instead of three, which at real scale is the
+    difference between reading the corpus once and three times. The
+    blocks live as long as any frame derived from the result (an
+    ``orderBy``/``limit`` on top included) and Spark's ContextCleaner
+    frees them once that plan is garbage-collected; like every
+    localCheckpoint they are not recomputed after executor loss.
+    Pass ``persist=False`` to keep the plan fully lazy (e.g. when the
+    caller checkpoints grams itself)."""
     if bands < 1:
         raise ValueError(f"bands must be >= 1, got {bands}")
     if num_hashes % bands != 0:
@@ -340,11 +335,8 @@ def near_dup_pairs(
         F.col(id_col).alias("_gid"),
         word_shingles(F.col(text_col), k).alias("grams"),
     ).filter(F.size("grams") > 0)
-    grams_c = None
     if persist:
-        from zappy_spark.operators._scoped import cache_scoped
-
-        grams = grams_c = cache_scoped(grams)
+        grams = grams.localCheckpoint(eager=False)
     sig = minhash_signature_from_grams(
         grams.select(F.col("_gid").alias(id_col), "grams"), id_col, num_hashes
     )
@@ -368,9 +360,7 @@ def near_dup_pairs(
         .groupBy("i", "j")
         .agg(F.count("*").alias("_inter"))
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         inter.join(
             sizes.select(F.col("_gid").alias("i"), F.col("_n").alias("_na")),
             "i",
@@ -389,9 +379,7 @@ def near_dup_pairs(
                 )
             ).alias("jac"),
         )
-        .filter(F.col("jac") >= threshold),
-        grams_c,
-        cand,
+        .filter(F.col("jac") >= threshold)
     )
 
 
@@ -611,11 +599,8 @@ def containment_pairs(
         F.col(id_col).alias("_gid"),
         word_shingles(F.col(text_col), k).alias("grams"),
     ).filter(F.size("grams") > 0)
-    grams_c = None
     if persist:
-        from zappy_spark.operators._scoped import cache_scoped
-
-        grams = grams_c = cache_scoped(grams)
+        grams = grams.localCheckpoint(eager=False)
     sig = minhash_signature_from_grams(
         grams.select(F.col("_gid").alias(id_col), "grams"), id_col, num_hashes
     )
@@ -651,9 +636,7 @@ def containment_pairs(
         .groupBy("i", "j")
         .agg(F.count("*").alias("_inter"))
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         inter.join(
             sizes.select(F.col("_gid").alias("i"), F.col("_n").alias("_na")),
             "i",
@@ -670,9 +653,7 @@ def containment_pairs(
                 / F.least("_na", "_nb").cast("double")
             ).alias("cont"),
         )
-        .filter(F.col("cont") >= threshold),
-        grams_c,
-        cand,
+        .filter(F.col("cont") >= threshold)
     )
 
 
@@ -1103,13 +1084,10 @@ def prefix_filter_pairs(
     )
     # r12 (guide §5; the near_dup_pairs persist precedent): the
     # element table feeds FOUR consumers (sizes, df ranking, the
-    # ranked prefix, and both verify sides) — without a persist each
+    # ranked prefix, and both verify sides) — without a checkpoint each
     # re-runs the scan + shingle expansion + explode. MEMORY_AND_DISK
     # spills gracefully at corpus scale; same rows either way.
-    # r13: scoped — released when the caller drops the result.
-    from zappy_spark.operators._scoped import cache_scoped, own
-
-    toks = cache_scoped(toks)
+    toks = toks.localCheckpoint(eager=False)
     sizes = toks.groupBy("doc").agg(F.count("*").alias("sz"))
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("tdf"))
     w = Window.partitionBy("doc").orderBy("tdf", "tok")
@@ -1140,7 +1118,7 @@ def prefix_filter_pairs(
     )
     sa = sizes.select(F.col("doc").alias("i"), F.col("sz").alias("sza"))
     sb = sizes.select(F.col("doc").alias("j"), F.col("sz").alias("szb"))
-    return own(
+    return (
         inter.join(sa, "i")
         .join(sb, "j")
         .select(
@@ -1153,8 +1131,7 @@ def prefix_filter_pairs(
                 6,
             ).alias("jac"),
         )
-        .filter(F.col("jac") >= theta),
-        toks,
+        .filter(F.col("jac") >= theta)
     )
 
 
@@ -1957,16 +1934,13 @@ def cdc_dedup_ledger(
     )
     # r12 (guide §5; the near_dup_pairs persist precedent): the chunk
     # frame feeds BOTH the global occurrence agg and the instance
-    # join — without a persist the whole CDC chain (position explode,
+    # join — without a checkpoint the whole CDC chain (position explode,
     # boundary filter, lag window, chunk hashing) runs twice.
-    # r13: scoped — released when the caller drops the result.
-    from zappy_spark.operators._scoped import cache_scoped, own
-
-    chunks = cache_scoped(chunks)
+    chunks = chunks.localCheckpoint(eager=False)
     occ = chunks.groupBy("chunk_hash").agg(F.count("*").alias("_occ"))
     inst = chunks.join(occ, "chunk_hash")
     dup = (F.col("_occ") > 1).cast("bigint")
-    return own(
+    return (
         inst.groupBy("grp")
         .agg(
             F.count("*").alias("n_chunks"),
@@ -1974,8 +1948,7 @@ def cdc_dedup_ledger(
             F.sum(dup).alias("dup_chunks"),
             F.sum(dup * F.col("chunk_len")).cast("bigint").alias("dup_bytes"),
         )
-        .withColumnRenamed("grp", group_col),
-        chunks,
+        .withColumnRenamed("grp", group_col)
     )
 
 

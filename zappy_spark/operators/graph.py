@@ -25,7 +25,9 @@ from pyspark.sql import functions as F
 
 def _parse_byte_conf(raw: object) -> int:
     """Parse a Spark byte-size conf value ('10485760b', '10MB',
-    '-1', plain int) into bytes."""
+    '2pb', '-1', plain int) into bytes. An unparseable spelling
+    returns -1 (disabled), so the broadcast gate degrades to the
+    shuffle path instead of raising."""
     s = str(raw).strip().lower()
     mult = 1
     for suf, m in (
@@ -33,17 +35,22 @@ def _parse_byte_conf(raw: object) -> int:
         ("mb", 1024**2),
         ("gb", 1024**3),
         ("tb", 1024**4),
+        ("pb", 1024**5),
         ("k", 1024),
         ("m", 1024**2),
         ("g", 1024**3),
         ("t", 1024**4),
+        ("p", 1024**5),
         ("b", 1),
     ):
         if s.endswith(suf):
             s = s[: -len(suf)] or "0"
             mult = m
             break
-    return int(float(s)) * mult
+    try:
+        return int(float(s)) * mult
+    except (ValueError, OverflowError):
+        return -1
 
 
 # Conservative bytes-per-row estimate for a (bigint node, 8-byte

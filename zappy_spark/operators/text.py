@@ -465,24 +465,18 @@ def tf_idf(
     aggregation; document frequency then derives from the tf table
     itself (its rows are already distinct (doc, term) pairs), so the
     corpus is never tokenized twice and there is no separate
-    ``distinct()`` shuffle. tf is persisted by default — it feeds the
-    df aggregation and the final join — and N broadcasts as a 1-row
-    frame from a column-pruned count."""
+    ``distinct()`` shuffle. tf is lazily checkpointed by default — it
+    feeds the df aggregation and the final join — and N broadcasts as
+    a 1-row frame from a column-pruned count."""
     toks = df.select(
         F.col(id_col), F.explode(tokens_ws(F.col(text_col))).alias("term")
     )
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    tf_c = None
     if persist:
-        # r13: scoped — released when the caller drops the result
-        from zappy_spark.operators._scoped import cache_scoped
-
-        tf = tf_c = cache_scoped(tf)
-    from zappy_spark.operators._scoped import own
-
+        tf = tf.localCheckpoint(eager=False)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = df.select(F.count("*").alias("_n"))
-    return own(
+    return (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -497,8 +491,7 @@ def tf_idf(
                     + F.lit(1.0)
                 )
             ).alias("tfidf"),
-        ),
-        tf_c,
+        )
     )
 
 
@@ -733,8 +726,8 @@ def boilerplate_fraction(
     quality filter.
 
     The exploded (doc, gram) frame feeds BOTH the frequency aggregate
-    and the per-doc hit join, so it is persisted by default — at
-    corpus scale the rescan would double the dominant stage. The
+    and the per-doc hit join, so it is lazily checkpointed by default
+    — at corpus scale the rescan would double the dominant stage. The
     frequent-gram side joins on the high-cardinality gram key (an
     equi-shuffle, balanced by construction); no broadcast is assumed
     since the frequent set grows with the corpus.
@@ -748,12 +741,8 @@ def boilerplate_fraction(
             F.array_distinct(word_shingles(F.col(text_col), k))
         ).alias("g"),
     )
-    per_doc_c = None
     if persist:
-        # r13: scoped — released when the caller drops the result
-        from zappy_spark.operators._scoped import cache_scoped
-
-        per_doc = per_doc_c = cache_scoped(per_doc)
+        per_doc = per_doc.localCheckpoint(eager=False)
     freq = (
         per_doc.groupBy("g")
         .agg(F.count("*").alias("n_docs"))
@@ -771,9 +760,7 @@ def boilerplate_fraction(
             F.array_distinct(word_shingles(F.col(text_col), k))
         ).cast("bigint").alias("n_grams"),
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         base.join(hits, id_col, "left")
         .select(
             id_col,
@@ -784,8 +771,7 @@ def boilerplate_fraction(
                 / F.greatest(F.col("n_grams"), F.lit(1)),
                 6,
             ).alias("boilerplate_frac"),
-        ),
-        per_doc_c,
+        )
     )
 
 

@@ -116,20 +116,15 @@ def d06(spark: SparkSession, d: str) -> DataFrame:
     same pair set. Instrument bounded to ``doc_id < 5000`` (a no-op
     at every testdata SF — see d14's docstring; at the 100x fixture
     the unbounded twin exceeded 1800 s in DuckDB)."""
-    from zappy_spark.operators._scoped import own
-
     pairs = dedup.near_dup_pairs(
         t(spark, d, "documents").filter(F.col("doc_id") < 5000),
         "text",
         "doc_id",
         threshold=0.5,
     )
-    return own(
-        pairs.select("i", "j", F.round("jac", 6).alias("jac")).orderBy(
-            "i", "j"
-        ),
-        pairs,
-    )
+    return pairs.select(
+        "i", "j", F.round("jac", 6).alias("jac")
+    ).orderBy("i", "j")
 
 
 # ----------------------------------------------------------- text ops
@@ -145,8 +140,6 @@ def d14(spark: SparkSession, d: str) -> DataFrame:
     ``doc_id < 5000`` (a no-op at every testdata SF): on the
     replica-dense synth fixtures the true pair count is ~1e8, not a
     collectable gate — the r26/v24 bound-the-instrument doctrine."""
-    from zappy_spark.operators._scoped import own
-
     pairs = dedup.containment_pairs(
         t(spark, d, "documents").filter(F.col("doc_id") < 5000),
         "text",
@@ -156,12 +149,9 @@ def d14(spark: SparkSession, d: str) -> DataFrame:
         bands=4,
         anchors=4,
     )
-    return own(
-        pairs.select("i", "j", F.round("cont", 6).alias("cont")).orderBy(
-            "i", "j"
-        ),
-        pairs,
-    )
+    return pairs.select(
+        "i", "j", F.round("cont", 6).alias("cont")
+    ).orderBy("i", "j")
 
 
 def d15(spark: SparkSession, d: str) -> DataFrame:
@@ -336,10 +326,8 @@ def t07(spark: SparkSession, d: str) -> DataFrame:
     """TF-IDF top terms (smooth idf, sklearn convention)."""
     from zappy_spark.operators.text import tf_idf
 
-    from zappy_spark.operators._scoped import own
-
     out = tf_idf(t(spark, d, "documents"), "text", "doc_id")
-    return own(
+    return (
         out.select(
             "doc_id",
             "term",
@@ -348,8 +336,7 @@ def t07(spark: SparkSession, d: str) -> DataFrame:
             F.round("tfidf", 6).alias("ti"),
         )
         .orderBy(F.desc("ti"), "term", "doc_id")
-        .limit(50),
-        out,
+        .limit(50)
     )
 
 
@@ -1865,16 +1852,13 @@ def t13(spark: SparkSession, d: str) -> DataFrame:
     boilerplate_fraction): fraction of each doc's distinct 3-grams
     shared by ≥3 documents. The word-salad corpus shares grams
     heavily, so the score distribution is non-degenerate."""
-    from zappy_spark.operators._scoped import own
-
     out = text.boilerplate_fraction(
         t(spark, d, "documents"), "text", "doc_id", k=3, min_docs=3
     )
-    return own(
+    return (
         out.select("doc_id", "n_grams", "n_freq", "boilerplate_frac")
         .orderBy("doc_id")
-        .limit(100),
-        out,
+        .limit(100)
     )
 
 
@@ -1885,20 +1869,15 @@ def d13(spark: SparkSession, d: str) -> DataFrame:
     md5 hash family as d06, so DuckDB replays the whole pipeline.
     Instrument bounded to ``doc_id < 5000`` (a no-op at every
     testdata SF — see d14's docstring for the measured rationale)."""
-    from zappy_spark.operators._scoped import own
-
     pairs = dedup.containment_pairs(
         t(spark, d, "documents").filter(F.col("doc_id") < 5000),
         "text",
         "doc_id",
         threshold=0.5,
     )
-    return own(
-        pairs.select("i", "j", F.round("cont", 6).alias("cont")).orderBy(
-            "i", "j"
-        ),
-        pairs,
-    )
+    return pairs.select(
+        "i", "j", F.round("cont", 6).alias("cont")
+    ).orderBy("i", "j")
 
 
 def t14(spark: SparkSession, d: str) -> DataFrame:
@@ -2198,9 +2177,7 @@ def d37(spark: SparkSession, d: str) -> DataFrame:
         shingle_k=5,
         max_token_df=100_000,
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(pairs.orderBy(F.desc("jac"), "i", "j").limit(50), pairs)
+    return pairs.orderBy(F.desc("jac"), "i", "j").limit(50)
 
 
 def t26(spark: SparkSession, d: str) -> DataFrame:
@@ -2400,7 +2377,7 @@ def t29(spark: SparkSession, d: str) -> DataFrame:
     MinHash ever runs.
 
     Scale shape: ``source`` rides THROUGH the shingle explode, so
-    the whole query is two hash aggs over one persisted exploded
+    the whole query is two hash aggs over one checkpointed exploded
     frame — no corpus-sized join anywhere (the only join is the
     ~|sources|-row rollup merge): per-source gram totals are a
     direct count, and each gram's first doc comes as
@@ -2409,18 +2386,14 @@ def t29(spark: SparkSession, d: str) -> DataFrame:
     windows, no self-joins;
     every count is an exact integer and the rate is one exact
     integer division (the d39 discipline)."""
-    from zappy_spark.operators._scoped import cache_scoped, own
-
     docs = t(spark, d, "documents")
-    dg = cache_scoped(
-        docs.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.array_distinct(dedup.word_shingles(F.col("text"), 3))
-            ).alias("gram"),
-        )
-    )
+    dg = docs.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.array_distinct(dedup.word_shingles(F.col("text"), 3))
+        ).alias("gram"),
+    ).localCheckpoint(eager=False)
     totals = dg.groupBy("source").agg(F.count("*").alias("n_grams"))
     novel = (
         dg.groupBy("gram")
@@ -2429,7 +2402,7 @@ def t29(spark: SparkSession, d: str) -> DataFrame:
         .groupBy("source")
         .agg(F.count("*").alias("n_novel"))
     )
-    return own(
+    return (
         totals.join(novel, "source", "left")
         .select(
             "source",
@@ -2444,8 +2417,7 @@ def t29(spark: SparkSession, d: str) -> DataFrame:
                 "novelty_rate"
             ),
         )
-        .orderBy("source"),
-        dg,
+        .orderBy("source")
     )
 
 

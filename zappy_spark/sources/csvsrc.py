@@ -53,12 +53,13 @@ def read_csv_corpus(
 
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """ONE-scan split into (clean, quarantine) — same contract as
-    jsonl.split_corrupt, including the SPARK-21610 cache (Spark
+    jsonl.split_corrupt, including the SPARK-21610 checkpoint (Spark
     disallows filtering a raw CSV read on only the corrupt
-    column; the cache also makes both consumers share the scan)."""
+    column; the checkpoint also makes both consumers share the
+    scan)."""
     from pyspark.sql import functions as F
 
-    df = df.cache()
+    df = df.localCheckpoint(eager=False)
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantined = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_line")

@@ -59,11 +59,12 @@ def read_jsonl_corpus(
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """ONE-scan split of a PERMISSIVE read into (clean, quarantine):
     clean drops the corrupt column; quarantine keeps the raw line
-    for replay after the producer is fixed. Spark requires caching
-    the frame before referencing the corrupt column in a filter
-    (SPARK-21610) — the cache also makes the two consumers share the
-    single scan."""
-    df = df.cache()
+    for replay after the producer is fixed. Spark requires
+    materializing the frame before referencing the corrupt column in
+    a filter (SPARK-21610); a lazy local checkpoint does that and
+    makes the two consumers share the single scan. Its blocks are
+    freed once both returned frames are garbage-collected."""
+    df = df.localCheckpoint(eager=False)
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_line")
