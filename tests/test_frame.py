@@ -393,3 +393,112 @@ def test_argmax_argmin_axis0_match_numpy(spark):
     zf = ZappyFrame.from_ndarray(spark, m, num_partitions=4)
     assert np.array_equal(zf.argmax(axis=0), np.argmax(m, axis=0))
     assert np.array_equal(zf.argmin(axis=0), np.argmin(m, axis=0))
+
+
+# -- same-lineage fusion and the one-pass axis-0 statistics -------------
+
+
+def _recipe(zf, k):
+    kept = zf[zf.sum(axis=1) > k]
+    lg = ((kept / kept.sum(axis=1)) * 1e4).log1p()
+    return kept, lg
+
+
+def _executed(zf) -> str:
+    return zf.df._jdf.queryExecution().executedPlan().toString()
+
+
+def _np_recipe(X, k):
+    keep = X.sum(axis=1) > k
+    return np.log1p(X[keep] / X[keep].sum(axis=1, keepdims=True) * 1e4)
+
+
+@pytest.fixture(scope="module")
+def counts(spark):
+    """Count matrix with all-zero rows and rows at or below the
+    threshold (rowsum 0..4 with k=4): dividing by their row sums would
+    raise DIVIDE_BY_ZERO under ANSI if the mask were not applied
+    before the normalization."""
+    rng = np.random.default_rng(31)
+    X = rng.poisson(0.6, size=(60, 8)).astype(np.float64)
+    X[::7] = 0.0
+    X[3] = [4.0, 0, 0, 0, 0, 0, 0, 0]
+    X[5] = [1.0, 1.0, 1.0, 0, 0, 0, 0, 0]
+    return X, ZappyFrame.from_ndarray(spark, X, num_partitions=3)
+
+
+def test_fused_recipe_ansi_zero_rows_match_numpy(spark, counts):
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    X, zf = counts
+    assert (X.sum(axis=1) == 0).any() and (X.sum(axis=1) == 4).any()
+    _, lg = _recipe(zf, 4.0)
+    ref = _np_recipe(X, 4.0)
+    assert np.allclose(lg.mean(axis=0), ref.mean(axis=0), rtol=1e-9)
+    assert np.allclose(lg.var(axis=0), ref.var(axis=0), rtol=1e-9)
+    assert np.allclose(lg.std(axis=0, ddof=1), ref.std(axis=0, ddof=1))
+    assert np.allclose(lg.asndarray(), ref, rtol=1e-9)
+
+
+def test_cross_lineage_vectors_join_and_match_numpy(spark, counts):
+    """A vector from a different frame object keeps the row_id join."""
+    X, zf = counts
+    X2 = X + 1.0
+    zf2 = ZappyFrame.from_ndarray(spark, X2, num_partitions=2)
+    assert np.allclose(
+        zf[zf2.sum(axis=1) > 12.0].asndarray(), X[X2.sum(axis=1) > 12.0]
+    )
+    assert np.allclose(
+        (zf / zf2.sum(axis=1)).asndarray(), X / X2.sum(axis=1)[:, None]
+    )
+    assert "Join" in _executed(zf / zf2.sum(axis=1))
+
+
+def test_var_axis0_no_cancellation(spark, xz):
+    X, _ = xz
+    Y = X + 1e8
+    zf = ZappyFrame.from_ndarray(spark, Y, num_partitions=4)
+    assert np.allclose(zf.var(axis=0), Y.var(axis=0), rtol=1e-6)
+    assert np.allclose(
+        zf.std(axis=0, ddof=1), Y.std(axis=0, ddof=1), rtol=1e-6
+    )
+
+
+def test_same_lineage_mask_and_normalize_plan_has_no_join(counts):
+    _, zf = counts
+    kept, _ = _recipe(zf, 4.0)
+    assert "Join" not in _executed(kept)
+    assert "Join" not in _executed(kept / kept.sum(axis=1))
+
+
+def test_zarr_backed_recipe_scans_once(spark, tmp_path, counts):
+    X, zf = counts
+    zf.to_zarr_v2(str(tmp_path / "z"), chunk_rows=16)
+    zz = ZappyFrame.from_zarrlite(spark, str(tmp_path / "z"))
+    _, lg = _recipe(zz, 4.0)
+    assert _executed(lg).count("BatchScan") == 1
+    ref = _np_recipe(X, 4.0)
+    assert np.allclose(lg.mean(axis=0), ref.mean(axis=0), rtol=1e-9)
+
+
+def test_axis0_statistics_one_pass(spark, counts):
+    """mean then var/std/sum/min/max on one frame: one aggregation."""
+    X, zf = counts
+    _, lg = _recipe(zf, 4.0)
+    sc = spark.sparkContext
+    sc.setJobGroup("axis0-stats", "axis0-stats")
+    try:
+        mu = lg.mean(axis=0)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("axis0-stats"))
+        s2 = lg.var(axis=0)
+        rest = [getattr(lg, f)(axis=0) for f in ("std", "sum", "min", "max")]
+        assert jobs > 0
+        assert len(sc.statusTracker().getJobIdsForGroup("axis0-stats")) == jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ref = _np_recipe(X, 4.0)
+    assert np.allclose(mu, ref.mean(axis=0), rtol=1e-9)
+    assert np.allclose(s2, ref.var(axis=0), rtol=1e-9)
+    for got, f in zip(rest, ("std", "sum", "min", "max")):
+        assert np.allclose(got, getattr(ref, f)(axis=0), rtol=1e-9)
+    mu[:] = -1.0  # callers get a copy: the memo is not mutated
+    assert np.allclose(lg.mean(axis=0), ref.mean(axis=0), rtol=1e-9)

@@ -12,23 +12,30 @@ deliberate (SURVEY §1.2):
 
 - **Explicit row identity.** zappy keeps implicit positional order
   via ``partition_row_counts`` bookkeeping; at 1000-executor scale
-  implicit order is fragile, so rows carry ids and every cross-array
-  binary op is an equi-join on ``row_id`` (co-partitioned joins stay
-  shuffle-light; same-lineage operands fuse into one projection via
-  Catalyst common-subexpression handling).
+  implicit order is fragile, so rows carry ids. A row vector (an
+  axis=1 reduction, or scalar arithmetic and comparisons on one)
+  remembers the DataFrame it was reduced from. Meeting a frame over
+  that same DataFrame object, it is evaluated in the frame's own
+  projection: a mask is a row filter, a broadcast operand a
+  ``transform`` — no join, one scan. Any other operand (a vector
+  from another frame, a same-shape frame) is an equi-join on
+  ``row_id`` (co-partitioned joins stay shuffle-light).
 - **Lazy via Catalyst, not RDD lineage.** Every method composes
   Column expressions; nothing executes until ``asndarray()`` /
   ``to_parquet()`` / an action. No Python runs per element — all
   elementwise ops are JVM HigherOrderFunctions.
 - **axis=0 results are small** (ncols values) and return a local
-  numpy array, matching zappy's driver-side reduce semantics.
+  numpy array, matching zappy's driver-side reduce semantics. The
+  per-column statistics come from one aggregation pass, memoized on
+  the frame at the first axis=0 call: later calls read that snapshot
+  of the source, not the source as it is then.
 - **axis=1 results stay distributed** as a (row_id, value) frame,
   matching zappy's same-chunking column vector.
 """
 
 from __future__ import annotations
 
-import builtins
+import operator
 from collections.abc import Sequence
 
 import numpy as np
@@ -42,70 +49,59 @@ def _lit_vec(arr: Sequence[float]) -> Column:
     return F.array(*[F.lit(float(v)) for v in arr])
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+    Interpreted higher-order functions have no common-subexpression
+    elimination, so a row scalar referenced inside an element lambda
+    would be recomputed per element (O(n²) per row); binding it as
+    the one element of an array evaluates it once."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _vector_op(fn):
+    """A ZappyVector operator: ``fn(value, scalar)`` composed onto the
+    vector's per-row expression."""
+    return lambda self, other: self._arith(lambda v: fn(v, float(other)))
+
+
 class ZappyVector:
     """A distributed column vector: (row_id, value) — the result of an
     axis=1 reduction, usable as a broadcast operand (zappy's
-    ``X / X.sum(axis=1)[:, np.newaxis]`` pattern)."""
+    ``X / X.sum(axis=1)[:, np.newaxis]`` pattern) or a row mask.
 
-    def __init__(self, df: DataFrame):
-        self.df = df  # columns: row_id, value
+    It is kept as the DataFrame it was reduced from (``_base``) plus
+    a per-row Column expression over that DataFrame's ``vec``
+    (``_expr``). Scalar arithmetic and comparisons compose onto the
+    expression, so the vector stays fusable with its source frame."""
+
+    def __init__(self, base: DataFrame, expr: Column):
+        self._base = base
+        self._expr = expr
+
+    @property
+    def df(self) -> DataFrame:  # columns: row_id, value
+        return self._base.select("row_id", self._expr.alias("value"))
 
     def asndarray(self) -> np.ndarray:
         pdf = self.df.orderBy("row_id").toPandas()
         return pdf["value"].to_numpy()
 
-    def _cmp(self, op: str, other: float) -> "ZappyVector":
-        c = F.col("value")
-        expr = {
-            ">": c > other, ">=": c >= other, "<": c < other,
-            "<=": c <= other, "==": c == other, "!=": c != other,
-        }[op]
-        return ZappyVector(self.df.select("row_id", expr.alias("value")))
-
     def _arith(self, fn) -> "ZappyVector":
-        return ZappyVector(
-            self.df.select("row_id", fn(F.col("value")).alias("value"))
-        )
+        return ZappyVector(self._base, fn(self._expr))
 
-    def __add__(self, other: float) -> "ZappyVector":
-        return self._arith(lambda v: v + float(other))
-
-    __radd__ = __add__
-
-    def __sub__(self, other: float) -> "ZappyVector":
-        return self._arith(lambda v: v - float(other))
-
-    def __rsub__(self, other: float) -> "ZappyVector":
-        return self._arith(lambda v: float(other) - v)
-
-    def __mul__(self, other: float) -> "ZappyVector":
-        return self._arith(lambda v: v * float(other))
-
-    __rmul__ = __mul__
-
-    def __truediv__(self, other: float) -> "ZappyVector":
-        return self._arith(lambda v: v / float(other))
-
-    def __rtruediv__(self, other: float) -> "ZappyVector":
-        return self._arith(lambda v: float(other) / v)
-
-    def __gt__(self, other):
-        return self._cmp(">", other)
-
-    def __ge__(self, other):
-        return self._cmp(">=", other)
-
-    def __lt__(self, other):
-        return self._cmp("<", other)
-
-    def __le__(self, other):
-        return self._cmp("<=", other)
-
-    def __eq__(self, other):  # noqa: D105 — mask semantics, like numpy
-        return self._cmp("==", other)
-
-    def __ne__(self, other):
-        return self._cmp("!=", other)
+    __add__ = __radd__ = _vector_op(operator.add)
+    __sub__ = _vector_op(operator.sub)
+    __rsub__ = _vector_op(lambda v, o: o - v)
+    __mul__ = __rmul__ = _vector_op(operator.mul)
+    __truediv__ = _vector_op(operator.truediv)
+    __rtruediv__ = _vector_op(lambda v, o: o / v)
+    # comparisons build masks, like numpy (== / != included)
+    __gt__ = _vector_op(operator.gt)
+    __ge__ = _vector_op(operator.ge)
+    __lt__ = _vector_op(operator.lt)
+    __le__ = _vector_op(operator.le)
+    __eq__ = _vector_op(operator.eq)  # type: ignore[assignment]
+    __ne__ = _vector_op(operator.ne)  # type: ignore[assignment]
 
     # __eq__ overridden for mask semantics; keep identity hashing
     __hash__ = object.__hash__
@@ -117,6 +113,7 @@ class ZappyFrame:
     def __init__(self, df: DataFrame, ncols: int):
         self.df = df  # columns: row_id BIGINT, vec ARRAY<DOUBLE>
         self.ncols = ncols
+        self._col_stats: dict[str, np.ndarray] | None = None
 
     # -- constructors ------------------------------------------------------
 
@@ -249,7 +246,17 @@ class ZappyFrame:
         )
 
     def _zip_vector(self, vec: ZappyVector, fn) -> "ZappyFrame":
-        """Column-vector broadcast (nrows×1 operand)."""
+        """Column-vector broadcast (nrows×1 operand). A vector reduced
+        from this frame's own DataFrame is one projection, its row
+        scalar let-bound once per row; any other vector joins on
+        row_id."""
+        if vec._base is self.df:
+            out = _let(
+                vec._expr, lambda s: F.transform("vec", lambda x: fn(x, s))
+            )
+            return ZappyFrame(
+                self.df.select("row_id", out.alias("vec")), self.ncols
+            )
         o = vec.df.select(
             F.col("row_id").alias("row_id_r"), F.col("value").alias("value_r")
         )
@@ -550,14 +557,14 @@ class ZappyFrame:
                 ex.select("pos", s.alias("s"))
                 .groupBy("pos")
                 .agg(rid.alias("v"))
-                .orderBy("pos")
                 .collect()
             )
+            rows.sort(key=lambda r: r["pos"])  # ncols rows: driver-side
             return np.array([r["v"] for r in rows], dtype=np.int64)
         extreme_fn = F.array_max if kind == "max" else F.array_min
         v = F.transform("vec", lambda x: x.cast(_D))
         idx = (F.array_position(v, extreme_fn(v)) - 1).cast("double")
-        return ZappyVector(self.df.select("row_id", idx.alias("value")))
+        return ZappyVector(self.df, idx)
 
     def median(self, axis: int = 1) -> "ZappyVector":
         """Per-row median (np.median(axis=1) — scanpy's
@@ -579,9 +586,7 @@ class ZappyFrame:
             med = (
                 F.element_at(srt, n // 2) + F.element_at(srt, n // 2 + 1)
             ) / 2.0
-        return ZappyVector(
-            self.df.select("row_id", med.alias("value"))
-        )
+        return ZappyVector(self.df, med)
 
     def cumsum(self, axis: int = 1) -> "ZappyFrame":
         """numpy ``cumsum`` along rows (axis=1): per-row prefix sums
@@ -614,20 +619,33 @@ class ZappyFrame:
     # -- aggregations ------------------------------------------------------
 
     def _row_reduce(self, col_fn) -> ZappyVector:
-        return ZappyVector(
-            self.df.select("row_id", col_fn(F.col("vec")).alias("value"))
-        )
+        return ZappyVector(self.df, col_fn(F.col("vec")))
 
-    def _col_agg(self, agg_fn) -> np.ndarray:
-        """axis=0: per-column aggregate → local ndarray (zappy returns
-        a driver-side array here too). posexplode + groupBy(pos) is a
-        shuffle over ncols keys — partial aggregation makes the
-        shuffled data ncols×npartitions rows, independent of nrows."""
-        ex = self.df.select(F.posexplode("vec").alias("pos", "x"))
-        rows = (
-            ex.groupBy("pos").agg(agg_fn(F.col("x")).alias("v")).orderBy("pos")
-        ).collect()
-        return np.array([r["v"] for r in rows], dtype=np.float64)
+    _COL_STATS = {
+        "sum": F.sum, "mean": F.avg, "var0": F.var_pop, "var1": F.var_samp,
+        "min": F.min, "max": F.max,
+    }
+
+    def _col_agg(self, stat: str) -> np.ndarray:
+        """axis=0: a per-column statistic → local ndarray (zappy
+        returns a driver-side array here too). One posexplode +
+        groupBy(pos) pass computes every ``_COL_STATS`` entry with
+        Spark's own (numerically stable) aggregates and memoizes them
+        on the frame, so mean then var reads the source once. Partial
+        aggregation makes the shuffle ncols×npartitions rows,
+        independent of nrows; the ncols result rows are sorted on the
+        driver (an orderBy would add a range-sampling job)."""
+        if self._col_stats is None:
+            ex = self.df.select(F.posexplode("vec").alias("pos", "x"))
+            rows = ex.groupBy("pos").agg(
+                *[fn("x").alias(k) for k, fn in self._COL_STATS.items()]
+            ).collect()
+            rows.sort(key=lambda r: r["pos"])
+            self._col_stats = {
+                k: np.array([r[k] for r in rows], dtype=np.float64)
+                for k in self._COL_STATS
+            }
+        return self._col_stats[stat].copy()
 
     def dot(self, w):
         """zappy ``X @ w``: matrix–vector (1-D ``w`` → ZappyVector)
@@ -687,7 +705,7 @@ class ZappyFrame:
                 lambda v: F.aggregate(v, F.lit(0.0), lambda a, x: a + x)
             )
         if axis == 0:
-            return self._col_agg(F.sum)
+            return self._col_agg("sum")
         return float(
             self.df.select(
                 F.sum(F.aggregate("vec", F.lit(0.0), lambda a, x: a + x))
@@ -701,7 +719,7 @@ class ZappyFrame:
                 / F.size(v)
             )
         if axis == 0:
-            return self._col_agg(F.avg)
+            return self._col_agg("mean")
         return self.sum() / (self.count_rows() * self.ncols)
 
     def _row_var(self, ddof: int):
@@ -731,39 +749,38 @@ class ZappyFrame:
                 # numpy returns nan for n <= ddof; 0/0 reproduces that
                 return ssd / (n - F.lit(float(ddof)))
 
-            return F.element_at(F.transform(F.array(m_expr), _ssd), 1)
+            return _let(m_expr, _ssd)
 
         return expr
 
     def var(self, axis: int | None = 0, ddof: int = 0):
         if axis == 1:
             return self._row_reduce(self._row_var(ddof))
-        fn = F.var_samp if ddof == 1 else F.var_pop
         if axis != 0:
             raise NotImplementedError("var: axis in (0, 1) only")
-        return self._col_agg(fn)
+        return self._col_agg("var1" if ddof == 1 else "var0")
 
     def std(self, axis: int | None = 0, ddof: int = 0):
         if axis == 1:
             inner = self._row_var(ddof)
             return self._row_reduce(lambda v: F.sqrt(inner(v)))
-        fn = F.stddev_samp if ddof == 1 else F.stddev_pop
         if axis != 0:
             raise NotImplementedError("std: axis in (0, 1) only")
-        return self._col_agg(fn)
+        # Spark's stddev_* is sqrt(var_*): the same value
+        return np.sqrt(self._col_agg("var1" if ddof == 1 else "var0"))
 
     def min(self, axis: int | None = None):
         if axis == 1:
             return self._row_reduce(F.array_min)
         if axis == 0:
-            return self._col_agg(F.min)
+            return self._col_agg("min")
         return float(self.df.select(F.min(F.array_min("vec"))).first()[0])
 
     def max(self, axis: int | None = None):
         if axis == 1:
             return self._row_reduce(F.array_max)
         if axis == 0:
-            return self._col_agg(F.max)
+            return self._col_agg("max")
         return float(self.df.select(F.max(F.array_max("vec"))).first()[0])
 
     def count_nonzero(self) -> int:
@@ -802,8 +819,25 @@ class ZappyFrame:
         rows, cols = key if isinstance(key, tuple) else (key, slice(None))
         zf = self
         # row selector
-        if isinstance(rows, ZappyVector):
-            # boolean mask (itself distributed, zappy EP3): semi-join
+        if isinstance(rows, ZappyVector) and rows._base is zf.df:
+            # boolean mask reduced from this DataFrame: a row filter
+            # in the same scan. The vec is nulled on dropped rows and
+            # the nulls filtered, never a plain filter on the mask:
+            # Catalyst merges a plain filter with filters pushed down
+            # from later steps (posexplode's not-null / non-empty),
+            # and subexpression elimination then evaluates the later
+            # steps' lambdas (x / rowsum) on rows the mask drops —
+            # DIVIDE_BY_ZERO under ANSI. A higher-order function over
+            # a NULL array returns NULL without running its lambda.
+            keep = F.when(rows._expr.cast("boolean"), F.col("vec"))
+            zf = ZappyFrame(
+                zf.df.select("row_id", keep.alias("vec")).where(
+                    F.col("vec").isNotNull()
+                ),
+                zf.ncols,
+            )
+        elif isinstance(rows, ZappyVector):
+            # boolean mask from another frame (zappy EP3): semi-join
             mask = rows.df.filter(F.col("value").cast("boolean")).select(
                 F.col("row_id").alias("row_id_m")
             )

@@ -1017,12 +1017,17 @@ def _read_chunk(partition: "_ChunkPartition"):
         arr = arr.astype(np.float64, copy=False)
     else:
         arr = np.load(partition.path).astype(np.float64, copy=False)
-    n = arr.shape[0]
+    n, m = arr.shape
     row_ids = pa.array(
         np.arange(partition.start_row, partition.start_row + n),
         type=pa.int64(),
     )
-    vecs = pa.array(list(arr), type=pa.list_(pa.float64()))
+    # zero-copy list column: the chunk's C-order values plus one
+    # offset per row, with no per-row Python objects
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * m)
+    vecs = pa.ListArray.from_arrays(
+        offsets, pa.array(np.ascontiguousarray(arr).ravel())
+    )
     yield pa.RecordBatch.from_arrays([row_ids, vecs], ["row_id", "vec"])
 
 
