@@ -3649,9 +3649,11 @@ def test_bpe_train_merges_hand_schedule(spark):
         # tie-break is count first, so (aa,a) wins
         (3, "aa", "a", "aaa", 4),
     ]
-    # plan hygiene: argmax is a per-branch TakeOrderedAndProject —
+    # plan hygiene: each step's argmax is a TakeOrderedAndProject —
     # no global Sort feeds the limit
-    plan = bpe_train_merges(df, "text", n_merges=2)._jdf.queryExecution(
+    from zappy_spark.operators.text import _bpe_base_vocab, _bpe_pair_top1
+
+    plan = _bpe_pair_top1(_bpe_base_vocab(df, "text"))._jdf.queryExecution(
     ).executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
@@ -3917,16 +3919,20 @@ def test_logreg_train_planted_separation(spark):
 
 
 def test_logreg_plan_one_agg_per_step(spark):
-    """v28 plan hygiene: the training plan is unions of per-step
-    single aggregates over the scan — no join, no window, no Python
-    UDF anywhere (the gradient is a hash agg, not a collect loop)."""
-    from zappy_spark.operators.training import logreg_train_fixed
+    """v28 plan hygiene: each GD step is ONE aggregate over the
+    feature scan — no join, no window, no Python UDF anywhere (the
+    gradient is a hash agg, not a collect loop)."""
+    from zappy_spark.operators.training import (
+        _logreg_step_agg,
+        logreg_features,
+    )
 
     df = spark.createDataFrame(
         [(i, "the the data") for i in range(8)], ["doc_id", "text"]
     )
+    feat = logreg_features(df, "text")
     plan = (
-        logreg_train_fixed(df, "text", n_iter=2)
+        _logreg_step_agg(feat, [1, -2, 3, 0])
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -4464,6 +4470,71 @@ def test_unigram_lm_planted_vocab_recovery(spark):
         for s in (1, 2, 3)
         for p, n in (("ab", 190), ("cd", 160))
     }
+
+
+def test_unigram_train_costs_is_last_step_of_lm_train(spark):
+    """unigram_train_costs and unigram_lm_train share ONE EM loop:
+    on the planted ab/cd corpus the deployable cost table is the
+    last step's cost_next column plus the single chars that earned
+    no usage, each at the add-one floor count of 1."""
+    import math
+
+    from zappy_spark.operators.text import (
+        UNIGRAM_SCALE,
+        unigram_lm_train,
+        unigram_train_costs,
+    )
+
+    rows = [("abcd abab cdcd abcdab",)] * 30 + [("cdab ab cd",)] * 20
+    df = spark.createDataFrame(rows, ["text"])
+    kw = dict(n_iter=3, max_piece_len=2, n_pieces=10)
+    costs = unigram_train_costs(df, "text", **kw)
+    last = [r for r in unigram_lm_train(df, "text", **kw).collect()
+            if r["step"] == 3]
+    assert {r["piece"] for r in last} == {"ab", "cd"}
+    # floor: 1 count each for a, b, c, d on top of the used total
+    total = sum(r["n_used"] for r in last) + 4
+    floor = math.floor(-math.log(1 / total) * UNIGRAM_SCALE + 0.5)
+    want = {r["piece"]: r["cost_next"] for r in last}
+    want.update({ch: floor for ch in "abcd"})
+    assert costs == want
+
+
+_TRAINER_CORPUS = [
+    (i, "the cat sat on the mat data" if i % 2 else "abab cdcd ab data")
+    for i in range(12)
+]
+
+
+@pytest.mark.parametrize(
+    "train",
+    [
+        "bpe_train_merges",
+        "wordpiece_train_merges",
+        "unigram_lm_train",
+        "logreg_train_fixed",
+    ],
+)
+def test_trainer_result_collects_in_one_job(spark, train):
+    """The fixed-iteration trainers return the rows their driver
+    loop already collected: collecting the returned frame must not
+    re-run the per-step aggregates (at most ONE job, the local-rows
+    scan), however many steps the loop ran."""
+    from zappy_spark.operators import text, training
+
+    fn = getattr(text, train, None) or getattr(training, train)
+    df = spark.createDataFrame(_TRAINER_CORPUS, ["doc_id", "text"])
+    out = fn(df, "text")
+    sc = spark.sparkContext
+    group = f"collect-{train}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = out.collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) >= 2
+    assert jobs <= 1, (train, jobs)
 
 
 @pytest.mark.slow

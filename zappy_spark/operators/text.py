@@ -9,7 +9,7 @@ the hot path — so a 100 TB corpus pays one pass per operator.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword profiles for the n-gram/stopword
@@ -2126,31 +2126,39 @@ def bpe_apply_merges(
     return out
 
 
-def bpe_discover_merges(
-    df: DataFrame, text_col: str, n_merges: int, _state: DataFrame | None = None
-) -> list[tuple[str, str]]:
-    """Run the BPE training loop and return the merge schedule as
-    driver literals — ``n_merges`` jobs, each a vocab-sized pair agg
-    collecting exactly ONE row (the v09 Lloyd's centroids-as-
-    literals precedent). ``_state``: a pre-materialized base vocab
-    (r12 — callers that also replay the loop share ONE checkpoint
-    instead of re-scanning the corpus per iteration)."""
-    merges: list[tuple[str, str]] = []
-    state = (
-        _state
-        if _state is not None
-        else _bpe_base_vocab(df, text_col).localCheckpoint()
-    )
+def _merge_steps(
+    state: DataFrame, pair_top1, apply_merges, n_merges: int
+) -> list[Row]:
+    """The driver loop shared by the BPE and WordPiece trainers:
+    ``n_merges`` jobs over the checkpointed ``state`` vocab (``_f``
+    freq, ``_s`` symbol string), each collecting exactly ONE row —
+    the step's winning pair from ``pair_top1`` — whose merge then
+    re-enters the plan as a literal through ``apply_merges`` (the
+    v09 Lloyd's centroids-as-literals precedent, lineage linear in
+    n_merges). Stops early when no pair is left."""
+    steps: list[Row] = []
     for _ in range(n_merges):
-        top = _bpe_pair_top1(state).collect()
+        top = pair_top1(state).collect()
         if not top:
             break
-        lhs, rhs = top[0]["lhs"], top[0]["rhs"]
-        merges.append((lhs, rhs))
-        state = state.withColumn(
-            "_s", bpe_apply_merges(F.col("_s"), [(lhs, rhs)])
-        )
-    return merges
+        steps.append(top[0])
+        merge = (top[0]["lhs"], top[0]["rhs"])
+        state = state.withColumn("_s", apply_merges(F.col("_s"), [merge]))
+    return steps
+
+
+def _bpe_steps(df: DataFrame, text_col: str, n_merges: int) -> list[Row]:
+    """The BPE loop's per-step (lhs, rhs, pair_n) winners."""
+    state = _bpe_base_vocab(df, text_col).localCheckpoint()
+    return _merge_steps(state, _bpe_pair_top1, bpe_apply_merges, n_merges)
+
+
+def bpe_discover_merges(
+    df: DataFrame, text_col: str, n_merges: int
+) -> list[tuple[str, str]]:
+    """Run the BPE training loop and return the merge schedule as
+    driver literals (see _merge_steps)."""
+    return [(r["lhs"], r["rhs"]) for r in _bpe_steps(df, text_col, n_merges)]
 
 
 def bpe_segment_stats(
@@ -2265,41 +2273,17 @@ def bpe_train_merges(
     hash agg + a 1-ROW driver collect (the v09 Lloyd's
     centroids-as-literals precedent); merges re-enter the plan as
     literals, keeping lineage LINEAR in n_merges (a fully-lazy
-    nesting would re-expand the upstream 2^k times). The returned
-    plan re-derives each step's winner distributed — step k's branch
-    applies merges 1..k−1 as literal replaces, so collecting it is
-    n_merges one-agg jobs, each TakeOrderedAndProject (no global
-    sort anywhere)."""
-    # r12 (guide §5): ONE corpus scan into the checkpointed vocab,
-    # shared by the discovery loop and the replay branches (was
-    # 2·n_merges scans). Integer-exact aggs -> identical schedule.
-    base = _bpe_base_vocab(df, text_col).localCheckpoint()
-
-    def _apply(state: DataFrame, lhs: str, rhs: str) -> DataFrame:
-        return state.withColumn(
-            "_s", bpe_apply_merges(F.col("_s"), [(lhs, rhs)])
-        )
-
-    merges = bpe_discover_merges(df, text_col, n_merges, _state=base)
-
-    # returned plan: the schedule recomputed distributed, one branch
-    # per step with prior merges as literals (linear lineage)
-    out = None
-    state = base
-    for step, (lhs, rhs) in enumerate(merges, start=1):
-        branch = _bpe_pair_top1(state).select(
-            F.lit(step).cast("int").alias("step"),
-            "lhs",
-            "rhs",
-            F.concat("lhs", "rhs").alias("merged"),
-            F.col("pair_n").cast("bigint").alias("pair_n"),
-        )
-        out = branch if out is None else out.unionAll(branch)
-        state = _apply(state, lhs, rhs)
-    if out is None:  # degenerate corpus: no pair ever existed
-        schema = "step int, lhs string, rhs string, merged string, pair_n bigint"
-        return df.sparkSession.createDataFrame([], schema)
-    return out.orderBy("step")
+    nesting would re-expand the upstream 2^k times). Each step's
+    argmax is a TakeOrderedAndProject (no global sort anywhere), and
+    the collected winners ARE the result: the returned frame holds
+    those rows, so collecting it runs no aggregation again."""
+    rows = [
+        (step, r["lhs"], r["rhs"], r["lhs"] + r["rhs"], r["pair_n"])
+        for step, r in enumerate(_bpe_steps(df, text_col, n_merges), start=1)
+    ]
+    return df.sparkSession.createDataFrame(
+        rows, "step int, lhs string, rhs string, merged string, pair_n bigint"
+    )
 
 
 # Token-ID encoding (round 10, VERDICT r9 item 5 — the artifact a
@@ -2594,10 +2578,9 @@ def unigram_lm_train(
     piece (counted once per occurrence), cost_next = the
     re-estimated cost the NEXT iteration runs at. Unused single
     chars stay in the cost table (add-one floor) without emitting
-    a row; pruned multi-char candidates leave both. The returned plan re-derives each step
-    distributed with that step's incoming costs as literals (the
-    v28/t37 linear-lineage shape: K one-agg jobs, never a 2^k lazy
-    re-expansion).
+    a row; pruned multi-char candidates leave both. These are the
+    rows the EM loop already collected, sorted on the driver by
+    (step, piece): the returned frame re-runs no E-step.
 
     Scale (100 TB): ONE corpus scan builds the Heaps-bounded
     (word, count) vocabulary; seeding and every E-step run over
@@ -2607,48 +2590,10 @@ def unigram_lm_train(
     driver state is the bounded piece table (the
     bounded-instrument doctrine). Nothing joins on doc ids,
     nothing collects unbounded rows."""
-    spark = df.sparkSession
-    # r12 (guide §5): materialize the Heaps-bounded vocab ONCE —
-    # seeding + every E-step + every replay branch otherwise re-ran
-    # the corpus scan through this agg (n_iter+2 scans). Integer
-    # counts, so results are identical on any partitioning.
-    vocab = _unigram_vocab(df, text_col).localCheckpoint()
-    picked = _unigram_seed_counts(vocab, max_piece_len, n_pieces)
-    if not picked:
-        return spark.createDataFrame(
-            [], "step int, piece string, n_used bigint, cost_next bigint"
-        )
-    costs = _unigram_costs(picked)
-
-    out = None
-    for step in range(1, n_iter + 1):
-        agg = _unigram_step_agg(vocab, costs, max_piece_len)
-        rows = {r["piece"]: r["n_used"] for r in agg.collect()}
-        new_costs = _unigram_costs(_unigram_next_counts(costs, rows))
-        # Distributed branch for this step (incoming costs as
-        # literals; n_used re-derived by the engine, cost_next
-        # attached as the literal the next step runs at).
-        nc = new_costs
-        branch = agg.select(
-            F.lit(step).cast("int").alias("step"),
-            "piece",
-            F.col("n_used").cast("bigint").alias("n_used"),
-        ).withColumn(
-            "cost_next",
-            F.coalesce(
-                F.element_at(
-                    F.create_map(
-                        *[F.lit(x) for kv in nc.items() for x in kv]
-                    ),
-                    F.col("piece"),
-                ),
-                F.lit(None).cast("bigint"),
-            ),
-        )
-        out = branch if out is None else out.unionAll(branch)
-        costs = new_costs
-    assert out is not None
-    return out.orderBy("step", "piece")
+    rows, _ = _unigram_em(df, text_col, n_iter, max_piece_len, n_pieces)
+    return df.sparkSession.createDataFrame(
+        rows, "step int, piece string, n_used bigint, cost_next bigint"
+    )
 
 
 def _unigram_vocab(df: DataFrame, text_col: str) -> DataFrame:
@@ -2740,6 +2685,35 @@ def _unigram_next_counts(
     }
 
 
+def _unigram_em(
+    df: DataFrame,
+    text_col: str,
+    n_iter: int,
+    max_piece_len: int,
+    n_pieces: int,
+) -> tuple[list[tuple[int, str, int, int]], dict[str, int]]:
+    """The unigram-LM hard-EM loop, run once on the driver: seed
+    from the vocab (materialized ONCE — seeding and every E-step
+    read it), then ``n_iter`` one-agg E-steps each followed by the
+    driver-side M-step. Returns the per-step (step, piece, n_used,
+    cost_next) rows, sorted by (step, piece), and the final cost
+    table; ([], {}) when the corpus has no in-scope word."""
+    vocab = _unigram_vocab(df, text_col).localCheckpoint()
+    picked = _unigram_seed_counts(vocab, max_piece_len, n_pieces)
+    if not picked:
+        return [], {}
+    costs = _unigram_costs(picked)
+    rows = []
+    for step in range(1, n_iter + 1):
+        used = {
+            r["piece"]: r["n_used"]
+            for r in _unigram_step_agg(vocab, costs, max_piece_len).collect()
+        }
+        costs = _unigram_costs(_unigram_next_counts(costs, used))
+        rows += [(step, p, n, costs.get(p)) for p, n in sorted(used.items())]
+    return rows, costs
+
+
 def unigram_train_costs(
     df: DataFrame,
     text_col: str,
@@ -2751,18 +2725,7 @@ def unigram_train_costs(
     piece -> cost table after ``n_iter`` EM iterations (the
     logreg_fit_weights analog — train offline, hand the bounded
     table to the apply side / the streaming drift monitor)."""
-    vocab = _unigram_vocab(df, text_col)
-    picked = _unigram_seed_counts(vocab, max_piece_len, n_pieces)
-    if not picked:
-        return {}
-    costs = _unigram_costs(picked)
-    for _ in range(n_iter):
-        rows = {
-            r["piece"]: r["n_used"]
-            for r in _unigram_step_agg(vocab, costs, max_piece_len).collect()
-        }
-        costs = _unigram_costs(_unigram_next_counts(costs, rows))
-    return costs
+    return _unigram_em(df, text_col, n_iter, max_piece_len, n_pieces)[1]
 
 
 def unigram_usage_ledger(
@@ -3049,29 +3012,21 @@ def _wp_pair_top1(state: DataFrame) -> DataFrame:
     )
 
 
+def _wp_steps(df: DataFrame, text_col: str, n_merges: int) -> list[Row]:
+    """The WordPiece loop's per-step (lhs, rhs, pair_n, score_fp)
+    winners (see _merge_steps)."""
+    state = _wp_base_vocab(df, text_col).localCheckpoint()
+    return _merge_steps(
+        state, _wp_pair_top1, wordpiece_apply_merges, n_merges
+    )
+
+
 def wordpiece_discover_merges(
-    df: DataFrame, text_col: str, n_merges: int, _state: DataFrame | None = None
+    df: DataFrame, text_col: str, n_merges: int
 ) -> list[tuple[str, str]]:
     """Run the WordPiece training loop and return the merge
-    schedule as driver literals — n_merges jobs, each a vocab-sized
-    agg collecting exactly ONE row (the t37/v09 precedent).
-    ``_state``: pre-materialized base vocab (see bpe_discover_merges)."""
-    merges: list[tuple[str, str]] = []
-    state = (
-        _state
-        if _state is not None
-        else _wp_base_vocab(df, text_col).localCheckpoint()
-    )
-    for _ in range(n_merges):
-        top = _wp_pair_top1(state).collect()
-        if not top:
-            break
-        lhs, rhs = top[0]["lhs"], top[0]["rhs"]
-        merges.append((lhs, rhs))
-        state = state.withColumn(
-            "_s", wordpiece_apply_merges(F.col("_s"), [(lhs, rhs)])
-        )
-    return merges
+    schedule as driver literals (see _merge_steps)."""
+    return [(r["lhs"], r["rhs"]) for r in _wp_steps(df, text_col, n_merges)]
 
 
 def wordpiece_train_merges(
@@ -3106,34 +3061,24 @@ def wordpiece_train_merges(
     the (word, freq) vocab; each iteration is one pair agg + one
     symbol agg over the vocab (map-side combinable), two broadcast
     joins of the tiny symbol-count table, and a 1-ROW collect; the
-    returned plan re-derives each step's winner distributed with
-    merges 1..k−1 as literal replaces."""
-    # r12: one corpus scan, checkpointed vocab shared by discovery
-    # and replay (see bpe_train_merges).
-    base = _wp_base_vocab(df, text_col).localCheckpoint()
-    merges = wordpiece_discover_merges(df, text_col, n_merges, _state=base)
-    out = None
-    state = base
-    for step, (lhs, rhs) in enumerate(merges, start=1):
-        branch = _wp_pair_top1(state).select(
-            F.lit(step).cast("int").alias("step"),
-            "lhs",
-            "rhs",
-            F.concat(F.col("lhs"), F.lit(_wp_strip(rhs))).alias("merged"),
-            F.col("pair_n").cast("bigint").alias("pair_n"),
-            "score_fp",
+    collected winners ARE the returned rows, so collecting the
+    result runs no aggregation again."""
+    rows = [
+        (
+            step,
+            r["lhs"],
+            r["rhs"],
+            r["lhs"] + _wp_strip(r["rhs"]),
+            r["pair_n"],
+            r["score_fp"],
         )
-        out = branch if out is None else out.unionAll(branch)
-        state = state.withColumn(
-            "_s", wordpiece_apply_merges(F.col("_s"), [(lhs, rhs)])
-        )
-    if out is None:
-        schema = (
-            "step int, lhs string, rhs string, merged string, "
-            "pair_n bigint, score_fp bigint"
-        )
-        return df.sparkSession.createDataFrame([], schema)
-    return out.orderBy("step")
+        for step, r in enumerate(_wp_steps(df, text_col, n_merges), start=1)
+    ]
+    return df.sparkSession.createDataFrame(
+        rows,
+        "step int, lhs string, rhs string, merged string, "
+        "pair_n bigint, score_fp bigint",
+    )
 
 
 def _wp_jump(word: Column, pieces: list[tuple[str, bool, int]]) -> "callable":

@@ -41,7 +41,9 @@ DECIMAL(38,0) — the spelling, not the algorithm, changes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from collections.abc import Iterator
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 # Fixed-point scale: weights are BIGINT multiples of 1/S.
@@ -176,6 +178,22 @@ def _logreg_step_agg(feat: DataFrame, w: list[int]) -> DataFrame:
     )
 
 
+def _logreg_gd(
+    feat: DataFrame, n_iter: int, lr_den: int
+) -> Iterator[tuple[Row, list[int]]]:
+    """The fixed-point GD loop: per iteration ONE driver collect of
+    the one-row ``_logreg_step_agg`` at the incoming weights, then
+    the driver-side update (_tdiv, so it matches the engines'
+    truncating division exactly). Yields (agg row, post-update
+    weights) per iteration, starting from w^(0) = zeros."""
+    w = [0, 0, 0, 0]
+    for _ in range(n_iter):
+        row = _logreg_step_agg(feat, w).collect()[0]
+        n = max(row["n"], 1)  # same empty-corpus guard as the agg
+        w = [w[j] - _tdiv(row[f"_g{j}"], lr_den * n) for j in range(4)]
+        yield row, w
+
+
 def logreg_fit_weights(
     feat: DataFrame,
     n_iter: int = 8,
@@ -185,8 +203,7 @@ def logreg_fit_weights(
     """Run the fixed-point GD loop over a feature frame and return
     the weight TRAJECTORY [w^(0) .. w^(n_iter)] (w^(0) = zeros) as
     plain Python ints — n_iter driver collects of ONE row each (the
-    bounded-instrument doctrine). The driver-side update uses _tdiv
-    so it matches the engines' truncating division exactly.
+    bounded-instrument doctrine; see _logreg_gd).
 
     r12: the feature frame is localCheckpoint'ed ONCE before the
     loop (guide §5: cut lineage for reused intermediates) — the GD
@@ -203,17 +220,7 @@ def logreg_fit_weights(
     second featurization of the corpus)."""
     if checkpoint:
         feat = feat.localCheckpoint()
-    w = [0, 0, 0, 0]
-    traj = [list(w)]
-    for _ in range(n_iter):
-        row = _logreg_step_agg(feat, w).collect()[0]
-        n = max(row["n"], 1)  # same empty-corpus guard as the plan
-        w = [
-            w[j] - _tdiv(row[f"_g{j}"], lr_den * n)
-            for j in range(4)
-        ]
-        traj.append(list(w))
-    return traj
+    return [[0, 0, 0, 0]] + [w for _, w in _logreg_gd(feat, n_iter, lr_den)]
 
 
 def logreg_train_fixed(
@@ -233,44 +240,21 @@ def logreg_train_fixed(
     (step, n, n_correct, w_bias, w_the, w_data, w_len) — n_correct
     is the training accuracy numerator AT the incoming weights
     (step 1 shows chance level; the trajectory shows learning), the
-    w_* are the POST-update weights. The returned plan re-derives
-    each step distributed: branch k aggregates with w^(k-1) as
-    literals and computes w^(k) from the agg row's own integer
-    expressions, so collecting it is n_iter one-agg jobs — the
-    driver collects during construction are K rows of ONE row each
-    (the kmeans centroids-as-literals precedent), keeping lineage
-    LINEAR in n_iter."""
-    # r13: ONE lazily checkpointed feature frame feeds the GD loop
-    # AND every step's replay branch (the returned plan otherwise
-    # re-featurized the corpus once per step at collect time)
+    w_* are the POST-update weights. The rows are the ones the GD
+    loop already collected — K one-agg jobs of ONE row each over one
+    checkpointed feature frame (the kmeans centroids-as-literals
+    precedent, lineage LINEAR in n_iter) — so collecting the result
+    runs no aggregation again."""
     feat = logreg_features(df, text_col).localCheckpoint(eager=False)
-    traj = logreg_fit_weights(feat, n_iter, lr_den, checkpoint=False)
-
-    out = None
-    for step in range(1, n_iter + 1):
-        w = traj[step - 1]
-        agg = _logreg_step_agg(feat, w)
-        branch = agg.select(
-            F.lit(step).cast("int").alias("step"),
-            F.col("n").cast("bigint").alias("n"),
-            F.col("n_correct").cast("bigint").alias("n_correct"),
-            *[
-                (
-                    F.lit(w[j])
-                    - F.expr(
-                        f"_g{j} div ({lr_den}L * greatest(n, 1L))"
-                    )
-                )
-                .cast("bigint")
-                .alias(name)
-                for j, name in enumerate(
-                    ["w_bias", "w_the", "w_data", "w_len"]
-                )
-            ],
-        )
-        out = branch if out is None else out.unionAll(branch)
-    assert out is not None
-    return out.orderBy("step")
+    rows = [
+        (step, r["n"], r["n_correct"], *w)
+        for step, (r, w) in enumerate(_logreg_gd(feat, n_iter, lr_den), 1)
+    ]
+    return df.sparkSession.createDataFrame(
+        rows,
+        "step int, n bigint, n_correct bigint, "
+        "w_bias bigint, w_the bigint, w_data bigint, w_len bigint",
+    )
 
 
 def logreg_predict(

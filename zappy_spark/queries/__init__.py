@@ -5,250 +5,10 @@ oracle string is the DuckDB spelling verified hash-matching in the
 survey session. Keys are shared across both dicts; queries without an
 oracle (non-SQL-expressible ops) appear only in QUERIES.
 
-Ordering contract (VERDICT r1 §wrong-2): the external correctness
-gate consumes entries in insertion order with a bounded window (50 in
-round 1 and round 2), so the dict is ordered to maximize verified
-breadth. Rotation state after round 2: rounds 1+2 cumulatively
-verified 94 distinct entries green (CORRECTNESS_r01 44/50 +
-CORRECTNESS_r02 50/50 counting the two by-design no-oracle rows).
-
-Round-4 ordering (this file): never-checked beats stale-checked
-(the round-2 lesson). Tier 0 is the 51 entries with NO driver row
-in their current form: 24 added in the round-4b session (z26,
-r64–r72, t15, t18–t20, d18–d22, v13–v15, s13, l09; the 5 dtype-fix
-re-spellings are covered by their original keys), 20 added in
-round 4a (r52–r63, d16, d17, t16, t17, v11, v12, s12, z25), 4
-added after the round-3 driver ran (d14, d15, r51, s11), and 3
-whose oracles were declared after it (t04, v02, v06). Tier 0
-exceeds the window by one: v06 — the only tier-0 entry with prior
-(rows-only) driver rows — is deliberately last and yields its slot;
-it leads the round-5 window. The r1/r2-stale tail queues directly
-behind and is canary-guarded per family meanwhile.
-
-Round-5 ordering (this file, executing the plan round 4 wrote):
-CORRECTNESS_r04 confirmed the window is exactly the first 50 dict
-entries — 49 green, r56 hash-fail. Head of the round-5 window: the
-twenty-four entries ADDED this round (v21 BFS, d32 DSIR, t23
-bigram-LM, r83 interval sweep, d33 fuzzy linkage, v22 MMR, m03
-frame kernel, d34 token budget — 5c session; d29 temperature
-mixture, d30 domain cap, t22 winsorize, r80 rolling median, r81
-quantile envelope, v19 kNN communities, v20 HITS authority, r82
-attribution, d31 rendezvous shards — 5b; z29 zarr-v2 round-trip,
-d26 leakage-free split, d27 shelf packing, m02 mapInPandas value
-check, v18 matryoshka retrieval, s18 dynamic-gap sessions, d28
-triangle count — 5a), then the five whose SPELLING changed and
-which must regain a driver row in their new form (r56 decimal
-re-spell of the r4 failure; v07/v09 gaining their first oracles;
-z01/z02 decimal re-spells), then the tier-0 entries the r4 window
-cut off (d23 … t21 plus the t04/v02/v06 trio). The 5c additions
-displaced the promoted _R1_STALE tail entirely: the head list is
-57 candidates for 50 slots. The three carrying prior rows-only
-driver rows — t04, v02, v06, per the r4 yielding convention — plus
-the tier-0 queue tail (v17, s17, t21, in queue order) wait at
-positions 51–57 and lead the round-6 window; every entry inside
-the window has zero driver rows in its current form.
-
-ROUND-6 ORDERING (this file, EXECUTING the plan round 5 wrote and
-VERDICT r5 item 2): the 15 driver-debt entries go FIRST and are
-sacred — r75 r76 d25 r77 s15 s16 r78 r79 v16 v17 s17 t21, then the
-yielding trio t04/v02/v06 — followed by the 6 entries re-spelled
-this round (r89 NTILE/boundary fix, the five ADVICE items:
-v22/d33/t25/d37/d35), then any brand-new round-6 entries (capped
-at ≤35 so the debt can never be displaced again), then _R1_STALE
-(z03 … r26; z01/z02 left the tier with green r5 rows), then
-_R2_STALE, then the r5/r4 green tiers cycling behind. Every entry
-passes tests/test_oracle.py locally at sf0.001/sf0.01/sf0.1 AND
-the 10x synth fixture regardless of window position; the whole
-50-entry round-6 window was additionally pre-verified green with
-scripts/check_queries.py at sf0.01 before the driver run.
-
-ROUND-7 ORDERING (this file, EXECUTING the plan round 6 wrote and
-VERDICT r6 items 1–4): head = the 7 entries whose spelling/values
-changed this round (_CHANGED_R7: the r78/r79 driver-fail fix, the
-three boundary-probe decimal re-spells r47/t27/z26, d38's
-case-fold, s17's second-granularity gap oracle), then 8 brand-new
-entries (_NEW_R7: d40 substring spans, d41 alignment, d42
-containment direction, d43 chunk overlap, t30 spectrum, r93
-sessionized funnel, d44 sketch attestation, t31 lang-ID confusion
-audit), then the 27-entry
-_R1_STALE_TAIL, then _R2_STALE — the window's last ~8 slots take
-z09 … r32. NOTE the decimal campaign also re-spelled
-r01/r02/r38/r48/r49/r54/r55/r57/r58/r59/r60 this round; r01/r02
-sit in the bench path and get driver rows via entry()/bench, and
-all eleven were value-verified at 3 SFs + the 100× fixture this
-session (SCALE.md r7 rows) — they queue behind the stale tiers
-rather than displacing them, because a verified-green re-spell is
-lower risk than a four-round-stale row.
-
-ROUND-8 ROTATION PLAN (written in round 7): once CORRECTNESS_r07
-lands, promote (in order) any round-8 re-spells/new (cap ~10), then
-the eleven decimal-campaign re-spells above (r01 … r60 — they need
-driver rows in their new spelling), then the ~31 remaining
-_R2_STALE (r35_grouping_sets … t06 in list order).
-
-ROUND-8 ORDERING (this file, EXECUTING that plan + VERDICT r7
-item 1): head = 2 re-spells (_CHANGED_R8: d42/t30 whose builders
-now filter empty tokens, matching their oracles — round-8 ADVICE)
-+ 7 new entries (_NEW_R8: m04 GIF attestation, d45 perceptual-hash
-image dedup, t32 charset audit, d46 C4 block ledger, t33
-calibration bins, t34 PMI collocations, v26 hard-negative mining)
-+ the 11-entry _DECIMAL_CAMPAIGN_R7 + the full 31-entry r2-stale
-tail (r35 … t06; r38 overlaps the campaign, so the unique total is
-exactly 50 and NOTHING spills to round 9 — the r7 plan's spill-2
-estimate assumed 10 new entries, we shipped 7 and cleared the whole
-debt instead). After this window lands, NO corpus
-entry's newest driver row is pre-round-3 or pre-current-spelling —
-the staleness debt VERDICT r7 item 1 defines as done is fully
-cleared, pending CORRECTNESS_r08 confirmation.
-
-ROUND-9 ROTATION PLAN (written in round 8, from the measured
-per-entry latest-driver-row table over CORRECTNESS_r01–r08): head =
-any round-9 re-spells (none known), then the 5-entry _NEW_R9 below
-(m05 WAV attestation, t35 kappa agreement, z33 sharded zarr, d48
-epoch shuffle, t36 quantile-sketch contract — all locally green at
-3 SFs + both fixtures this round, zero driver rows), then the
-EXACTLY-40-entry r3-green tier (oldest remaining rows once r8
-lands; in list order: b04_global_topk, d07–d12, l02, r28b, r30,
-r33, r41–r46, r50, s1, s6, s8–s10, t02, t07–t14, v01, v03–v05,
-v08, v10, z06, z24), then 5 slots from the r4-green tier head
-(d15_weighted_sample … d19_cc_closure) = 50 exactly.
-No spelling debt exists — this is purely freshness rotation; any
-round-9 new entries displace the r4-tier tail, not the r3 tier.
-
-ROUND-9 ORDERING (this file, EXECUTING that plan): one re-spell
-became known this round — _CHANGED_R9 = t34, whose Spark-side N is
-re-spelled as the scan-side Σ max(tokens−1,0) (value-identical,
-leak-free; round-9 ADVICE), so it must regain a driver row in the
-new form — and two new entries landed (_NEW_R9B: t37 BPE merge-loop
-training, t38 markup stripping — VERDICT r8 items 4 and 5). Per the
-plan's displacement rule both lists displace the r4-tier tail:
-window = 1 (t34) + 5 (_NEW_R9) + 2 (_NEW_R9B) + 40 (r3 tier,
-verbatim) + 2 (r4 head: d15, d16) = 50 exactly; d17/d18/d19 defer
-to round 10. Tier order is ALPHABETICAL within a tier (the same
-order the r8 plan's b04…z24 and d15…d19 listings used).
-
-ROUND-10 ROTATION PLAN (written in round 9, from the latest-row
-table over CORRECTNESS_r01–r09): head = any round-10 re-spells,
-then the 11-entry _NEW_R10 below (t39 BPE apply/fertility audit,
-m06 ViT patch attestation, v27 distributed batch MMR selection,
-z34 zarr consolidated-metadata round-trip, t40 C4 sentence audit,
-t41 stopword coverage, d49 registrable-domain audit, t42 NFKC-lite
-unicode normalization, m07 Netpbm codec attestation, d50 end-to-end
-dedup-cluster ledger, z35 zarr append + consolidated-refresh — built
-after the round-9 window filled,
-locally green at 3 SFs + both fixtures, zero driver rows), then any
-further round-10 new entries, then the remaining 39-entry r4-green
-tier (alphabetical: d17_span_dedup, d18_fingerprint_dedup,
-d19_cc_closure, d20–d22, l09, l11, r51–r53, r61–r72, s11–s13,
-t15–t20, v11–v15, z25, z27), then fill to 50 from the 43-entry
-r5-green tier head (alphabetical: d23_train_val_test,
-d24_decontaminate_frac, d26, d27, d28, d29, d30, d31, d32, d34,
-d36, …). With no re-spells and only _NEW_R10 that is 11 + 39 + 0 =
-50 exactly (the r5 tier starts in round 11); new entries displace the r5-tier fill, never the r4 tier.
-
-ROUND-10 ORDERING (this file, EXECUTING that plan verbatim): no
-round-10 re-spells exist, so the window is exactly the 11-entry
-_NEW_R10 (slots 1–11, the only corpus entries with zero driver
-rows) followed by the 39-entry r4-green tier _R4_TIER_R10 (slots
-12–50, alphabetical d17…z27 — re-verified this round against the
-recomputed latest-row table over CORRECTNESS_r01–r09). The four
-entries built THIS round (_NEW_R11: v28 distributed logistic-
-regression training and t43 token-ID encode round-trip — VERDICT
-r9 items 4 and 5 — plus v29 train-then-filter keep/drop ledger and
-t44 Heaps/Zipf vocabulary-growth audit) were constructed after the
-window composition froze (v30 held-out confusion evaluation and
-t45 vocabulary coverage joined them late in the round); per the
-plan's displacement rule ("never the r4 tier") they queue at
-positions 51–56 and lead the round-11 window.
-
-ROUND-11 ROTATION PLAN (written in round 10): head = any round-11
-re-spells, then _NEW_R11 (v28, t43, v29, t44, v30, t45 — locally
-green at 3 SFs + both synth fixtures, zero driver rows), then any
-further round-11 new entries, then the 43-entry r5-green tier _R5_TIER_R11
-(alphabetical d23…z29), then fill to 50 from the 45-entry r6-green
-tier head (alphabetical: d25_bloom_join, d33_fuzzy_linkage,
-d35_url_canon, …). With no re-spells and no further new entries
-that is 6 + 43 + 1 = 50 exactly; new entries displace the r6-tier
-fill, never the r5 tier.
-
-ROUND-11 ORDERING (this file, EXECUTING that plan): t43's round-11
-re-spell (the ADVICE vocab-dedup segmentation — identical values,
-new spelling) is already inside _NEW_R11, so no separate re-spell
-head exists. The window is _NEW_R11 (slots 1–6, the only corpus
-entries with zero driver rows) + the 43-entry _R5_TIER_R11 (slots
-7–49) + the r6-tier fill (slot 50). One correction to the written
-plan's shorthand: its r6-tier head names ("d25_bloom_join,
-d33_fuzzy_linkage, d35_url_canon") were garbled — the actual
-recomputed 45-entry r6-green tier is alphabetically
-d06_lsh_neardup_pipeline … z32, and the plan's EXPLICITLY NAMED
-first pick is the d25 entry, which is d25_psi_drift; we honor the
-named pick (d25_psi_drift fills slot 50). New round-11 entries
-(t46 cross-corpus perplexity, …) queue at 51+ per the displacement
-rule ("never the r5 tier" — the single r6 fill slot stays d25
-because t46 landed after this window froze) and lead round 12.
-
-ROUND-12 ROTATION PLAN (written in round 11): head = any round-12
-re-spells, then the 4-entry _NEW_R12 (t46 cross-corpus perplexity
-filter, t47 unigram-LM tokenizer training, t48 absolute-discount
-perplexity, v31 filter-agreement audit — all locally green at 3
-SFs + both synth fixtures + the full-corpus 10× sweep, zero driver
-rows), then any further round-12 new entries, then the remaining
-44-entry r6-green tier (alphabetical: d06_lsh_neardup_pipeline,
-d13_containment_pairs, d14_containment_anchored, d33_fuzzy_blocked,
-d35_bloom_gate, … — d25_psi_drift got its r11 row), then fill to
-50 from the r7-green tier head: 4 + 44 + 2 = 50 with no re-spells
-and no further new entries. New entries displace the r7-tier fill,
-never the r6 tier.
-
-ROUND-12 ORDERING (this file, EXECUTING that plan): no round-12
-re-spells exist, so the window is exactly _NEW_R12 (slots 1–4, the
-only corpus entries with zero driver rows at window freeze), then
-the two entries built early this round — t49 interpolated
-Kneser–Ney perplexity (VERDICT r11 item 3) and m08 mel-filterbank
-audio features (item 5), both verified at 3 SFs + both regenerated
-synth fixtures before entering — in slots 5–6, displacing the
-plan's two r7-tier fill slots exactly as written ("new entries
-displace the r7-tier fill, never the r6 tier"), then the 44-entry
-r6-green tier _R6_TIER_R12 (slots 7–50, alphabetical
-d06_lsh_neardup_pipeline … z32_zarr_lz4_roundtrip, recomputed from
-the latest-row table over CORRECTNESS_r01–r11): 4 + 2 + 44 = 50.
-Entries built later in round 12 (the v32 three-filter agreement
-cube etc.) join _NEW_R13 at positions 51+ per the displacement
-rule and lead round 13.
-
-ROUND-13 ROTATION PLAN (written in round 12; composition
-RE-RESOLVED at the second late session, when |_NEW_R13| reached 19
-— v32 + the eight post-gate builds d51/t50/d52/m09/t51/v33/r94/d53
-+ the ten second-session builds v34/m10/v35/t52/v36/m11/v37/r95/
-v38/t53): head = any round-13 re-spells, then the 19 _NEW_R13
-entries (zero driver
-rows — the only such entries in the corpus), then any further
-round-13 new entries, then the r7-green tier (alphabetical:
-d38_url_canonical, d40_substring_dedup, d41_crosslingual_align,
-d43_rag_chunk_overlap, d44_minhash_containment_est,
-r03_topk_per_group, …) CUT at slot 50 — with no re-spells that is
-19 + the first 31 of the 48-entry r7 tier; the remaining 17 r7
-entries lead the round-14 window (the overflow pattern — never
-displaced, only deferred). The r8-tier fill of the original plan
-is fully displaced this round.
-
-SESSION-CLOSE GATE (VERDICT r5 item 3, now standing doctrine):
-after ANY corpus edit run `python -m pytest tests/test_audit.py
-tests/test_dtypes.py tests/test_plans.py -q` (~3 min); at session
-close run the FULL suite and record the result in the commit
-message. The round-5d slip (two red gates shipped) must not
-recur.
-
-Round-5d (a later session inside round 5): eight more brand-new
-entries (r86 Benford, r87 Welch t, r88 ACF, r89 RFM, r90 basket
-lift, d37 AllPairs prefix filter, t26 WOE/IV, v24 retrieval-eval)
-lead the window; they displace eight more candidates to positions
-51+, so the round-6 promotion queue now starts (in order): r75,
-r76, d25, r77, s15, s16, r78, r79, v16 (round-4c entries pushed
-past 50 — still never driver-checked, they go FIRST in round 6),
-then v17, s17, t21, the yielding trio t04/v02/v06, and the stale
-tiers as planned above. All 8 new entries verified at
-sf0.001/0.01/0.1 + the 10x fixture this session."""
+``QUERIES`` is the module-merge order of the five family modules;
+every consumer looks entries up by name, so the order carries no
+meaning.
+"""
 
 from __future__ import annotations
 
@@ -260,828 +20,13 @@ from zappy_spark.queries import (
     zappy_ops,
 )
 
-_ALL_QUERIES = {
+QUERIES = {
     **zappy_ops.QUERIES,
     **relational.QUERIES,
     **events_ops.QUERIES,
     **llm_ops.QUERIES,
     **pipeline_ops.QUERIES,
 }
-
-# ROUND-6 HEAD (executing VERDICT r5 item 2, verbatim order): the
-# 15 entries with no current-form green driver row go FIRST — 12
-# round-4c entries never driver-checked plus the t04/v02/v06 trio
-# whose only driver rows predate their oracles. Three rounds of
-# window-head churn displaced these; this round they are sacred:
-# nothing (not even new round-6 entries) goes ahead of them.
-_DEBT_R6 = [
-    "r75_filtered_aggs",
-    "r76_try_arithmetic",
-    "d25_psi_drift",
-    "r77_cohort_retention",
-    "s15_transition_matrix",
-    "s16_user_ewma",
-    "r78_scd2_history",
-    "r79_point_in_time",
-    "v16_pagerank",
-    "v17_bitmap_distinct",
-    "s17_gaps_islands",
-    "t21_mad_outliers",
-    "t04_lang_id",
-    "v02_rp_lsh_ann",
-    "v06_pca_scores",
-]
-
-# Entries whose spelling changed in round 6 (VERDICT wrong-1 + the
-# five ADVICE items) and so need a driver row in their new form:
-# r89 re-spelled (NTILE→BIGINT, boundary-free exact sum), v22's
-# penalty weight now the literal 0.3 on both sides, d33's oracle
-# gained the max_block QUALIFY guard, t25's oracle now drops ''
-# tokens, d37 passes max_token_df explicitly (operator default is
-# now None), d35 rides bloom_build's empty-input coalesce.
-_CHANGED_R6 = [
-    "r89_rfm_segments",
-    "v22_mmr_rerank",
-    "d33_fuzzy_blocked",
-    "t25_cms_heavy_hitters",
-    "d37_prefix_jaccard",
-    "d35_bloom_gate",
-    # r26 re-spelled mid-round: the 100× sweep watchdog caught the
-    # full-table global RANGE frame timing out (the only corpus
-    # spelling that measurably failed the fixture); now a
-    # deterministic 1% key sample — needs a row in the new form.
-    "r26_range_frame",
-    # v24 re-spelled mid-round for the same reason: its %50 query
-    # panel grew with the corpus (panel×corpus ≈ quadratic, 900 s
-    # at 100×); now bounded to vec_id < 2000 — a fixed instrument.
-    "v24_retrieval_eval",
-    # d06/d13/d14 re-spelled late in round 6 by the full-corpus
-    # 100× sweep's findings: the verify stage now runs over narrow
-    # exploded (doc, gram) rows instead of array-carrying joins
-    # (identical values), and the three pair-LISTING instruments
-    # are bounded to doc_id < 5000 (a no-op at every testdata SF —
-    # the replica-dense fixture has ~1e8 true pairs, not a
-    # collectable gate). Values at driver SFs are byte-identical,
-    # but the spelling changed, so they re-enter the window here,
-    # displacing the last three r1-stale slots (stale-but-green
-    # beats changed-without-a-current-row for what can wait).
-    "d06_lsh_neardup_pipeline",
-    "d13_containment_pairs",
-    "d14_containment_anchored",
-]
-
-# Brand-new round-6 entries (zero driver rows) — appended as the
-# round progresses, capped so debt + changed + new ≤ the 50-slot
-# window never displaces the debt head (VERDICT: ≤35 new).
-_NEW_R6 = [
-    "z30_argminmax_axis0",  # NEW r6: window-free axis=0 arg-extremes
-    "r91_mom_growth",  # NEW r6: MoM/YoY growth on exact month spine
-    "r92_pareto_abc",  # NEW r6: cross-multiplied integer ABC classes
-    "t27_readability",  # NEW r6: Flesch via regexp length deltas
-    "t28_keywords",  # NEW r6: per-doc top-2 TF-IDF keywords
-    "d38_url_canonical",  # NEW r6: canonical-URL crawl dedup
-    "d39_oov_rate",  # NEW r6: vocab-coverage OOV audit
-    "v25_centroid_drift",  # NEW r6: per-label embedding drift
-    "z31_zarr_v3_roundtrip",  # NEW r6: zarr v3 disk round-trip
-    "t29_ngram_novelty",  # NEW r6: per-source crawl-redundancy audit
-    "s20_cusum_drift",  # NEW r6: prefix-sum CUSUM change-point monitor
-    "z32_zarr_lz4_roundtrip",  # NEW r6: numcodecs-LZ4 codec attestation
-]
-
-# Round-5 window head (now historical; every entry below carries a
-# green r5 driver row in current form — r89 moved to _CHANGED_R6).
-_CHANGED_R5 = [
-    # round-5d additions (this session): brand new, zero driver rows.
-    "r86_benford_digits",  # NEW round 5d: first-digit DQ audit
-    "r87_welch_ttest",  # NEW round 5d: exact-moment A/B test
-    "r88_acf_daily",  # NEW round 5d: lag-1..7 autocorrelation
-    "r89_rfm_segments",  # NEW round 5d: RFM quintile grid
-    "r90_basket_lift",  # NEW round 5d: a-priori association rules
-    "d37_prefix_jaccard",  # NEW round 5d: AllPairs prefix filter
-    "t26_woe_iv",  # NEW round 5d: WOE/IV feature audit
-    "v24_retrieval_eval",  # NEW round 5d: recall/MRR/NDCG harness
-    # round-5c additions (this session): brand new, zero driver rows.
-    "d36_source_overlap",  # NEW round 5c: source contamination matrix
-    "r85_bitemporal_asof",  # NEW round 5c: two-axis time travel
-    "t25_cms_heavy_hitters",  # NEW round 5c: CMS contract attestation
-    "d35_bloom_gate",  # NEW round 5c: portable mergeable Bloom gate
-    "r84_cumulative_users",  # NEW round 5c: first-seen DAU growth
-    "v23_sign_hamming",  # NEW round 5c: binary-quantized retrieval
-    "s19_path_trigrams",  # NEW round 5c: 3-step journey mining
-    "v21_bfs_hops",  # NEW round 5c: bounded multi-source BFS
-    "d32_dsir_importance",  # NEW round 5c: hashed-bigram DSIR weights
-    "t23_bigram_nll",  # NEW round 5c: bigram-LM quality scoring
-    "r83_interval_overlap",  # NEW round 5c: ±1 marker concurrency sweep
-    "d33_fuzzy_blocked",  # NEW round 5c: blocked levenshtein linkage
-    "v22_mmr_rerank",  # NEW round 5c: greedy MMR diversification
-    "m03_frame_features",  # NEW round 5c: frame-sampled Arrow kernel
-    "d34_token_budget",  # NEW round 5c: prefix-greedy token quota
-    "d29_temperature_mixture",  # NEW round 5b: c^alpha domain resample
-    "d30_domain_cap",  # NEW round 5b: per-host quality quota
-    "t22_winsorize",  # NEW round 5b: discrete-percentile clamp
-    "r80_rolling_median",  # NEW round 5b: robust rolling baseline
-    "r81_quantile_envelope",  # NEW round 5b: GK-sketch attestation
-    "v19_knn_communities",  # NEW round 5b: kNN-graph label prop
-    "v20_hits_authority",  # NEW round 5b: integer-exact HITS
-    "r82_attribution",  # NEW round 5b: first/last-touch window
-    "d31_rendezvous_shards",  # NEW round 5b: HRW placement stability
-    "z29_zarr_v2_roundtrip",  # NEW round 5: zarr v2 disk round-trip
-    "d26_leakage_free_split",  # NEW round 5: fingerprint-keyed split
-    "d27_shelf_packing",  # NEW round 5: SQL-replayable packing ledger
-    "m02_fake_decode_features",  # NEW round 5: mapInPandas value check
-    "v18_matryoshka_topk",  # NEW round 5: prefix-dim retrieve + rerank
-    "s18_dynamic_session",  # NEW round 5: per-event-gap session window
-    "d28_triangle_count",  # NEW round 5: degree-oriented triangles
-    "r56_q9_profit",  # r4 driver FAIL → decimal re-spell
-    "v07_hll_rollup",  # first oracle: exact-twin + envelope boolean
-    "v09_ivf_kmeans",  # first oracle: fixed-iteration Lloyd CTE twin
-    "z01_sum_axis0",  # decimal re-spell (boundary audit)
-    "z02_mean_axis0",  # decimal re-spell (boundary audit)
-    "d23_train_val_test",
-    "d24_decontaminate_frac",
-    "s14_variant_window",
-    "m01_binary_chunk_plan",
-    "r74_salted_join",
-    "z28_row_median",
-    "r75_filtered_aggs",
-    "r76_try_arithmetic",
-    "d25_psi_drift",
-    "r77_cohort_retention",
-    "s15_transition_matrix",
-    "s16_user_ewma",
-    "r78_scd2_history",
-    "r79_point_in_time",
-    "v16_pagerank",
-    "v17_bitmap_distinct",
-    "s17_gaps_islands",
-    "t21_mad_outliers",
-    "t04_lang_id",
-    "v02_rp_lsh_ann",
-    "v06_pca_scores",
-]
-
-# Round-4 tier 0 (all 50 driver-checked green in r4 except r56,
-# which moved to _CHANGED_R5): drops behind the stale tiers.
-_CHANGED_R4 = [
-    "z26_clip_where",
-    "r67_mode",
-    "r68_q16_supplier_cnt",
-    "r69_asof_tolerance",
-    "r70_percentile_disc",
-    "r71_dq_audit",
-    "r72_histogram",
-    "d21_degree_dist",
-    "d22_e2e_corpus_prep",
-    "l09_mips_topk",
-    "t15_corpus_vocab",
-    "v15_rank_normalize",
-    "d20_incremental_dedup",
-    "t20_unigram_ppl",
-    "v14_adc_scoring",
-    "r64_gap_fill",
-    "r65_time_weighted_avg",
-    "r66_funnel",
-    "t18_bm25",
-    "t19_gopher_rules",
-    "d18_fingerprint_dedup",
-    "d19_cc_closure",
-    "v13_pq_codes",
-    "s13_window_distinct",
-    "r52_q6_scan_only",
-    "r53_q4_priority_exists",
-    "r54_q7_volume_shipping",
-    "r55_q8_market_share",
-    "r56_q9_profit",
-    "r57_q10_returned_items",
-    "r58_q14_promo_effect",
-    "r59_q17_small_quantity",
-    "r60_q19_disjunctive",
-    "r61_q2_min_cost_supplier",
-    "r62_q12_priority_split",
-    "r63_binned_range_join",
-    "d16_semantic_dedup",
-    "d17_span_dedup",
-    "t16_token_entropy",
-    "t17_lexical_diversity",
-    "v11_centroid_cohesion",
-    "v12_knn_classify",
-    "s12_rolling_anomaly",
-    "z25_matvec",
-    "d14_containment_anchored",
-    "d15_weighted_sample",
-    "r51_q20_dominant_supplier",
-    "s11_session_spans",
-    # round-4c additions (this session): brand new, zero driver rows.
-    # Placed ahead of the t04/v02/v06 trio, which carry prior
-    # rows-only driver rows and so yield window slots first.
-    "l11_variant_pipeline",
-    "z27_scrna_recipe",
-    "d23_train_val_test",
-    "d24_decontaminate_frac",
-    "s14_variant_window",
-    "m01_binary_chunk_plan",
-    "r74_salted_join",
-    "z28_row_median",
-    "r75_filtered_aggs",
-    "r76_try_arithmetic",
-    "d25_psi_drift",
-    "r77_cohort_retention",
-    "s15_transition_matrix",
-    "s16_user_ewma",
-    "r78_scd2_history",
-    "r79_point_in_time",
-    "v16_pagerank",
-    "v17_bitmap_distinct",
-    "s17_gaps_islands",
-    "t21_mad_outliers",
-    "t04_lang_id",
-    "v02_rp_lsh_ann",
-    "v06_pca_scores",
-]
-
-# Tier 1: last driver-green row is round 1 (stalest; 40 entries —
-# z01/z02 left this tier when their decimal re-spells went green in
-# r5; they queue with _CHANGED_R5 now).
-_R1_STALE = [
-    "z03_log1p",
-    "z04_exp_expm1",
-    "z05_row_sum_axis1",
-    "z07_scalar_broadcast",
-    "z10_bool_mask",
-    "z11_column_select",
-    "z12_var_std",
-    "z13_minmax_axis0",
-    "z14_minmax_axis1",
-    "z17_row_normalize",
-    "z18_any_all",
-    "z19_mean_axis1",
-    "z20_median_percentile",
-    "z21_corr_covar",
-    "z22_skew_kurt",
-    "z23_regr",
-    "r03_topk_per_group",
-    "r04_group_by_date",
-    "r05_semi_join",
-    "r06_anti_join",
-    "r07_left_join",
-    "r08_full_outer_join",
-    "r09_cross_join",
-    "r10_range_join",
-    "r11_rollup",
-    "r12_cube",
-    "r15_having",
-    "r17_union",
-    "r17b_union_all",
-    "r18_except",
-    "r19_scalar_subquery",
-    "r20_in_subquery",
-    "r21_case_coalesce",
-    "r22_string_funcs",
-    "r22b_regex",
-    "r23_date_funcs",
-    "r24_math_funcs",
-    "r25_analytic_window",
-    "r27_ranking_suite",
-    "r26_range_frame",
-]
-
-# Tier 2: last driver-green row is round 2 (40 entries, t04 moved to
-# tier 0). The first 6 complete the 50-entry window; the rest queue
-# directly behind for window slack / round 5.
-_R2_STALE = [
-    "z09_comparisons",
-    "z15_astype_cast",
-    "z16_count_nonzero",
-    "r28_pivot_conditional",
-    "r29_explode_reagg",
-    "r31_group_percentile",
-    "r32_sorted_listagg",
-    "r34_window_extras",
-    "r35_grouping_sets",
-    "r36_unpivot",
-    "r37_bit_aggs",
-    "r38_q3_shape",
-    "r39_q18_shape",
-    "r40_bucketed_ranking",
-    "b05_distinct_counts",
-    "b07_string_filter_agg",
-    "b09_intersect",
-    "s2_sliding_window",
-    "s3_session_window",
-    "s4_dedup_keep_first",
-    "s5_stream_static_join",
-    "s7_prev_event_gap",
-    "l01_json_extract",
-    "l03_word_counts",
-    "l04_exact_dedup_hash",
-    "l05_doc_stats",
-    "l06_similarity_self_join",
-    "l07_quality_filter",
-    "l08_euclidean_topk",
-    "l10_term_frequency",
-    "d01_exact_dedup_groups",
-    "d02_minhash_signature",
-    "d03_simhash",
-    "d04_ngram_jaccard",
-    "d05_embedding_neardup",
-    "t01_token_counts",
-    "t03_fingerprint",
-    "t05_levenshtein",
-    "t06_content_split",
-]
-
-# ROUND-7 HEAD (executing the round-6 rotation plan + VERDICT r6
-# items 1–3): entries whose SPELLING or VALUES changed this round
-# go first and must regain a driver row in their new form.
-_CHANGED_R7 = [
-    # the round-6 driver fail: ×1.1 change price re-spelled as
-    # decimal(18,2)×decimal(3,2) on both engines (half-cent ROUND
-    # boundary, keys 546/14770 at sf0.01)
-    "r78_scd2_history",
-    "r79_point_in_time",  # shares the r78 fabrication
-    # flushed by the NEW per-row ROUND(double) boundary probe
-    # (scripts/audit_rounding.py stage 2) — same decimal re-spell:
-    "r47_upsert_snapshot",  # ×1.1 fabrication 5e-9 from a half-cent
-    "t27_readability",  # Flesch 4dp round 3e-10 from a boundary
-    "z26_clip_where",  # 0.9-discount half-cent 4e-11 from a boundary
-    # VALUES changed: scheme/host match is now case-insensitive on
-    # both engines, so the planted uppercase variants finally
-    # collapse (the bug was oracle-masked)
-    "d38_url_canonical",
-    # NOTE: z29/z31/z32 gained a fresh-store rmtree (stale-/tmp
-    # hygiene) — values and spelling are identical, so they do NOT
-    # re-enter the window.
-    # s17's oracle re-spelled mid-round: the r93 work exposed that
-    # `ts - LAG(ts) > INTERVAL` compares at nanosecond precision in
-    # DuckDB while Spark's gap uses floor-second longs — one session
-    # flipped at sf0.1 under the 6h threshold. Both gap oracles now
-    # count whole-second boundaries (date_diff('second', ...)),
-    # matching Spark exactly; s17 re-enters for a row in new form.
-    "s17_gaps_islands",
-]
-
-# Brand-new round-7 entries (zero driver rows) — appended as the
-# round progresses; capped ~10 per VERDICT r6 item 4 so the stale
-# tail is not displaced.
-_NEW_R7: list[str] = [
-    # appended as each is implemented this round
-    "d40_substring_dedup",  # NEW r7: maximal duplicated-substring spans
-    "d41_crosslingual_align",  # NEW r7: rare-token-anchor doc alignment
-    "d42_contamination_direction",  # NEW r7: integer containment verdicts
-    "d43_rag_chunk_overlap",  # NEW r7: chunk-level redundancy audit
-    "t30_freq_spectrum",  # NEW r7: Good-Turing 3-gram spectrum
-    "r93_sessionized_funnel",  # NEW r7: in-session strict-order funnel
-    "d44_minhash_containment_est",  # NEW r7: sketch-vs-exact attestation
-    "t31_langid_confusion",  # NEW r7: lang-ID eval vs ground truth
-]
-
-# The r1-stale tail: the 27 _R1_STALE entries without a round-6 row
-# (z03…z19 got theirs in the r6 window; r26 via _CHANGED_R6). The
-# 50-slot arithmetic: 6 re-spells + ~8 new + 27 stale = ~41, so
-# ~9 _R2_STALE entries also enter; the remaining r2-stale tail
-# (~27) leads the round-8 window — one round later than VERDICT r5
-# item 4 hoped, flagged here rather than silently dropped (the r6
-# plan's "22 remaining r1-stale" undercounted; it is 27).
-_R1_STALE_TAIL = [
-    "z20_median_percentile",
-    "z21_corr_covar",
-    "z22_skew_kurt",
-    "z23_regr",
-    "r03_topk_per_group",
-    "r04_group_by_date",
-    "r05_semi_join",
-    "r06_anti_join",
-    "r07_left_join",
-    "r08_full_outer_join",
-    "r09_cross_join",
-    "r10_range_join",
-    "r11_rollup",
-    "r12_cube",
-    "r15_having",
-    "r17_union",
-    "r17b_union_all",
-    "r18_except",
-    "r19_scalar_subquery",
-    "r20_in_subquery",
-    "r21_case_coalesce",
-    "r22_string_funcs",
-    "r22b_regex",
-    "r23_date_funcs",
-    "r24_math_funcs",
-    "r25_analytic_window",
-    "r27_ranking_suite",
-]
-
-# ROUND-8 HEAD (executing the round-7 rotation plan + VERDICT r7
-# item 1, written above as "ROUND-8 ROTATION PLAN"): entries whose
-# SPELLING changed this round go first and must regain a driver row
-# in their new form.
-_CHANGED_R8 = [
-    # round-8 ADVICE: both now tokenize with filter_empty=True,
-    # matching the list_filter spelling their oracles always had
-    # (latent only because no fixture text has repeated spaces —
-    # now pinned by a repeated-space unit corpus)
-    "d42_contamination_direction",
-    "t30_freq_spectrum",
-]
-
-# Brand-new round-8 entries (zero driver rows) — capped so the debt
-# tiers below always fit the 50-slot window: 2 changed + 7 new +
-# 11 campaign + 31 r2-stale − 1 overlap (r38 is in both) = 50
-# exactly — the cap binds here; further additions queue for r9.
-_NEW_R8 = [
-    "m04_gif_attest",  # NEW r8: real GIF LZW attestation (z32/m02 form)
-    "d45_phash_neardup",  # NEW r8: perceptual-hash image dedup
-    "t32_charset_audit",  # NEW r8: charset/script class counts
-    "d46_block_dedup",  # NEW r8: C4 keep-first block ledger
-    "t33_calibration_bins",  # NEW r8: classifier reliability audit
-    "t34_pmi_collocations",  # NEW r8: Church-Hanks PMI phrase mining
-    "v26_hard_negatives",  # NEW r8: contrastive hard-negative panel
-]
-
-# Entries built late in round 8, AFTER the 50-slot window filled —
-# declared, locally verified (3 SFs + 10×/100× + plan pins), and
-# QUEUED at the round-9 window head: they sort immediately after
-# the 50 window tiers below, so CORRECTNESS_r09 picks them up
-# first. This is the standing pattern for overflow (the r8 plan's
-# "further additions queue for r9").
-_NEW_R9 = [
-    "m05_wav_attest",  # NEW r8→r9: real WAV framing/DSP attestation
-    "t35_kappa_agreement",  # NEW r8→r9: Cohen's kappa label QA
-    "z33_zarr_sharded_roundtrip",  # NEW r8→r9: sharding_indexed I/O
-    "d48_epoch_shuffle",  # NEW r8→r9: reproducible training order
-    "t36_quantile_sketch_attest",  # NEW r8→r9: GK-sketch contract
-]
-
-# ROUND-9 HEAD (executing the round-8 rotation plan, "ROUND-9
-# ORDERING" above): the one spelling change of round 9 must regain
-# a driver row in its new form.
-_CHANGED_R9 = [
-    # round-9 ADVICE: pmi_collocations' N re-spelled scan-side
-    # (Σ max(tokens−1,0)) — value-identical, drops the persist leak
-    # and the second bigram shuffle; oracle unchanged and green
-    "t34_pmi_collocations",
-]
-
-# Brand-new round-9 entries (zero driver rows): VERDICT r8 items 4
-# and 5. Both displace the r4-tier tail per the written plan.
-_NEW_R9B = [
-    "t37_bpe_merges",  # NEW r9: iterative BPE merge-loop training
-    "t38_strip_markup",  # NEW r9: HTML/markup text extraction
-]
-
-# The exactly-40-entry r3-green tier (alphabetical), verbatim from
-# the round-8 plan.
-_R3_TIER_R9 = [
-    "b04_global_topk",
-    "d07_hash_sample",
-    "d08_stratified_sample",
-    "d09_dedup_keep_best",
-    "d10_decontaminate",
-    "d11_mixture_sample",
-    "d12_quantile_buckets",
-    "l02_cosine_topk",
-    "r28b_pivot_native",
-    "r30_asof_join",
-    "r33_interval_arith",
-    "r41_recursive_cte",
-    "r42_zorder_key",
-    "r43_correlated_subquery",
-    "r44_q21_sole_late",
-    "r45_q22_no_urgent",
-    "r46_q13_custdist",
-    "r50_dataset_diff",
-    "s10_outer_interval_join",
-    "s1_tumbling_window",
-    "s6_interval_join",
-    "s8_windowed_topk",
-    "s9_bucket_dedup",
-    "t02_quality_features",
-    "t07_tfidf",
-    "t08_pii_redaction",
-    "t09_chunking",
-    "t10_normalize_text",
-    "t11_repetition",
-    "t12_domain_distribution",
-    "t13_boilerplate",
-    "t14_length_histogram",
-    "v01_ivf_label_topk",
-    "v03_l2_normalize",
-    "v04_quantize_int8",
-    "v05_covariance",
-    "v08_knn_join",
-    "v10_standardize",
-    "z06_unary_suite",
-    "z24_var_axis1",
-]
-
-# r4-green tier head: 2 slots survive the 3-entry displacement
-# (d17/d18/d19 defer to round 10 — see ROUND-10 ROTATION PLAN).
-_R4_HEAD_R9 = [
-    "d15_weighted_sample",
-    "d16_semantic_dedup",
-]
-
-# Entries built AFTER the round-9 window filled — declared, locally
-# verified (3 SFs + 10×/100× fixtures + unit pins), QUEUED at the
-# round-10 window head (the standing overflow pattern _NEW_R9
-# established).
-_NEW_R10 = [
-    "t39_bpe_segment",  # NEW r9→r10: BPE apply/fertility audit
-    "m06_patch_attest",  # NEW r9→r10: ViT patch grid over real PNG
-    "v27_mmr_rerank",  # NEW r9→r10: distributed batch MMR selection
-    "z34_zarr_consolidated_roundtrip",  # NEW r9→r10: .zmetadata open
-    "t40_sentence_stats",  # NEW r9→r10: C4 sentence/terminal audit
-    "t41_stopword_coverage",  # NEW r9→r10: CCNet stopword signal
-    "d49_domain_suffix_audit",  # NEW r9→r10: PSL-lite eTLD+1 audit
-    "t42_unicode_normalize",  # NEW r9→r10: NFKC-lite fold/drop pass
-    "m07_pnm_attest",  # NEW r9→r10: Netpbm P6/P4 codec driver gate
-    "d50_dedup_cluster_ledger",  # NEW r9→r10: e2e dedup cluster flow
-    "z35_zarr_append_roundtrip",  # NEW r9→r10: append + .zmetadata refresh
-]
-
-# The 11 round-7 decimal-campaign re-spells (exact BIGINT/DECIMAL
-# money sums): all values verified at 3 SFs + the 100× fixture in
-# round 7, but their driver rows predate the new spelling — they
-# must land rows in current form (r01/r02 are bench-hot, where a
-# silent cross-engine mismatch would be the most expensive kind).
-_DECIMAL_CAMPAIGN_R7 = [
-    "r01_pricing_summary",
-    "r02_join5_agg",
-    "r38_q3_shape",
-    "r48_q11_shape",
-    "r49_q15_shape",
-    "r54_q7_volume_shipping",
-    "r55_q8_market_share",
-    "r57_q10_returned_items",
-    "r58_q14_promo_effect",
-    "r59_q17_small_quantity",
-    "r60_q19_disjunctive",
-]
-
-# First occurrence wins (dict.fromkeys dedup): round-8 order is
-# re-spells → new r8 → the decimal campaign → ALL remaining
-# r2-stale (the r7 window consumed z09…r34; the 31-entry tail
-# r35…t06 fits entirely — head arithmetic above — so the staleness
-# debt clears THIS round, one round earlier than the r7 plan's
-# spill-2 estimate) → the green tiers cycling behind.
-# The 39-entry r4-green tier (alphabetical), verified against the
-# recomputed latest-row table over CORRECTNESS_r01–r09 this round:
-# exactly the entries whose newest driver row is round 4.
-_R4_TIER_R10 = [
-    "d17_span_dedup",
-            "d18_fingerprint_dedup",
-            "d19_cc_closure",
-            "d20_incremental_dedup",
-            "d21_degree_dist",
-            "d22_e2e_corpus_prep",
-            "l09_mips_topk",
-            "l11_variant_pipeline",
-            "r51_q20_dominant_supplier",
-            "r52_q6_scan_only",
-            "r53_q4_priority_exists",
-            "r61_q2_min_cost_supplier",
-            "r62_q12_priority_split",
-            "r63_binned_range_join",
-            "r64_gap_fill",
-            "r65_time_weighted_avg",
-            "r66_funnel",
-            "r67_mode",
-            "r68_q16_supplier_cnt",
-            "r69_asof_tolerance",
-            "r70_percentile_disc",
-            "r71_dq_audit",
-            "r72_histogram",
-            "s11_session_spans",
-            "s12_rolling_anomaly",
-            "s13_window_distinct",
-            "t15_corpus_vocab",
-            "t16_token_entropy",
-            "t17_lexical_diversity",
-            "t18_bm25",
-            "t19_gopher_rules",
-            "t20_unigram_ppl",
-            "v11_centroid_cohesion",
-            "v12_knn_classify",
-            "v13_pq_codes",
-            "v14_adc_scoring",
-            "v15_rank_normalize",
-    "z25_matvec",
-    "z27_scrna_recipe",
-]
-
-# Entries built in round 10 AFTER the window composition froze
-# (VERDICT r9 items 4 and 5). Per the written plan's displacement
-# rule they must NOT displace the r4 tier, and with 11 + 39 = 50
-# there is no r5-tier fill to displace — so they queue at positions
-# 51+ and lead the round-11 window (the standing _NEW_R9/_NEW_R10
-# overflow pattern). All verified at 3 SFs + 10×/100× fixtures.
-_NEW_R11 = [
-    "v28_logreg_train",  # NEW r10: distributed logistic-regression training
-    "t43_token_ids",  # NEW r10: token-ID encode + detokenize round-trip
-    "v29_logreg_filter_ledger",  # NEW r10: train-then-filter keep/drop ledger
-    "t44_vocab_growth",  # NEW r10: Heaps/Zipf vocabulary-growth audit
-    "v30_logreg_holdout_eval",  # NEW r10: md5-holdout confusion eval
-    "t45_vocab_coverage",  # NEW r10: top-k vocabulary coverage curve
-]
-
-# The 43-entry r5-green tier (alphabetical), from the same
-# recomputed latest-row table: next in line after _NEW_R11.
-_R5_TIER_R11 = [
-    "d23_train_val_test",
-    "d24_decontaminate_frac",
-    "d26_leakage_free_split",
-    "d27_shelf_packing",
-    "d28_triangle_count",
-    "d29_temperature_mixture",
-    "d30_domain_cap",
-    "d31_rendezvous_shards",
-    "d32_dsir_importance",
-    "d34_token_budget",
-    "d36_source_overlap",
-    "m01_binary_chunk_plan",
-    "m02_fake_decode_features",
-    "m03_frame_features",
-    "r56_q9_profit",
-    "r74_salted_join",
-    "r80_rolling_median",
-    "r81_quantile_envelope",
-    "r82_attribution",
-    "r83_interval_overlap",
-    "r84_cumulative_users",
-    "r85_bitemporal_asof",
-    "r86_benford_digits",
-    "r87_welch_ttest",
-    "r88_acf_daily",
-    "r90_basket_lift",
-    "s14_variant_window",
-    "s18_dynamic_session",
-    "s19_path_trigrams",
-    "t22_winsorize",
-    "t23_bigram_nll",
-    "t26_woe_iv",
-    "v07_hll_rollup",
-    "v09_ivf_kmeans",
-    "v18_matryoshka_topk",
-    "v19_knn_communities",
-    "v20_hits_authority",
-    "v21_bfs_hops",
-    "v23_sign_hamming",
-    "z01_sum_axis0",
-    "z02_mean_axis0",
-    "z28_row_median",
-    "z29_zarr_v2_roundtrip",
-]
-
-# The round-11 window's slot-50 fill: the written plan's named
-# r6-tier pick (see ROUND-11 ORDERING in the module docstring for
-# the garbled-shorthand correction — the plan named "d25", whose
-# actual id is d25_psi_drift).
-_R6_FILL_R11 = ["d25_psi_drift"]
-
-# Entries built in round 11 AFTER the window composition froze.
-# Per the displacement rule they queue at positions 51+ and lead
-# the round-12 window (the standing _NEW_R9/_NEW_R10/_NEW_R11
-# overflow pattern).
-_NEW_R12: list[str] = [
-    "t46_xcorpus_perplexity",  # NEW r11: reference-LM perplexity filter
-    "t47_unigram_lm_tokenizer",  # NEW r11: SentencePiece-style EM trainer
-    "t48_absdisc_perplexity",  # NEW r11: absolute-discount/backoff variant
-    "v31_filter_agreement",  # NEW r11: LM-vs-classifier 2x2 agreement audit
-]
-
-# Brand-new round-12 entries (zero driver rows, built before this
-# round's window froze): per the written r12 plan they follow
-# _NEW_R12 and DISPLACE the two r7-tier fill slots, never the r6
-# tier — 4 + 2 + 44 = 50 exactly.
-_NEW_R12B: list[str] = [
-    "t49_kneser_ney_perplexity",  # NEW r12: interpolated-KN filter
-    "m08_mel_attest",  # NEW r12: mel-filterbank audio features
-]
-
-# The 44-entry r6-green tier (alphabetical), recomputed from the
-# latest-row table over CORRECTNESS_r01..r11 (every entry's latest
-# driver row is r6, all green): the round-12 window body.
-_R6_TIER_R12 = [
-    "d06_lsh_neardup_pipeline",
-    "d13_containment_pairs",
-    "d14_containment_anchored",
-    "d33_fuzzy_blocked",
-    "d35_bloom_gate",
-    "d37_prefix_jaccard",
-    "d39_oov_rate",
-    "r26_range_frame",
-    "r75_filtered_aggs",
-    "r76_try_arithmetic",
-    "r77_cohort_retention",
-    "r89_rfm_segments",
-    "r91_mom_growth",
-    "r92_pareto_abc",
-    "s15_transition_matrix",
-    "s16_user_ewma",
-    "s20_cusum_drift",
-    "t04_lang_id",
-    "t21_mad_outliers",
-    "t25_cms_heavy_hitters",
-    "t28_keywords",
-    "t29_ngram_novelty",
-    "v02_rp_lsh_ann",
-    "v06_pca_scores",
-    "v16_pagerank",
-    "v17_bitmap_distinct",
-    "v22_mmr_rerank",
-    "v24_retrieval_eval",
-    "v25_centroid_drift",
-    "z03_log1p",
-    "z04_exp_expm1",
-    "z05_row_sum_axis1",
-    "z07_scalar_broadcast",
-    "z10_bool_mask",
-    "z11_column_select",
-    "z12_var_std",
-    "z13_minmax_axis0",
-    "z14_minmax_axis1",
-    "z17_row_normalize",
-    "z18_any_all",
-    "z19_mean_axis1",
-    "z30_argminmax_axis0",
-    "z31_zarr_v3_roundtrip",
-    "z32_zarr_lz4_roundtrip",
-]
-
-# Entries built in round 12 AFTER the window composition froze:
-# they queue at positions 51+ and lead the round-13 window (the
-# standing overflow pattern).
-_NEW_R13: list[str] = [
-    "v32_filter_agreement_cube",  # NEW r12: clf x t46 x t49 cube
-    "d51_winnow_neardup",  # NEW r12: MOSS winnowing fingerprint pairs
-    "t50_wordpiece_merges",  # NEW r12: WordPiece trainer (tokenizer triad)
-    "d52_cdc_dedup",  # NEW r12: content-defined chunking dedup ledger
-    "m09_mfcc_attest",  # NEW r12: DCT-II cepstral stage on the mel stack
-    "t51_wordpiece_segment",  # NEW r12: WordPiece greedy apply audit
-    "v33_tokenizer_bakeoff",  # NEW r12: BPE vs WordPiece fertility ledger
-    "r94_hilbert_key",  # NEW r12: Hilbert-curve clustering key
-    "d53_homoglyph_dedup",  # NEW r12: confusable-skeleton spoof audit
-    "v34_auc_rank_eval",  # NEW r12: exact Mann-Whitney ROC-AUC holdout
-    "m10_delta_cepstra",  # NEW r12: HTK delta/delta-delta frontend stage
-    "v35_nb_holdout_eval",  # NEW r12: multinomial naive-Bayes bake-off
-    "t52_textrank_keywords",  # NEW r12: fixed-point TextRank centrality
-    "v36_nb_crossval",  # NEW r12: K-fold CV by complement subtraction
-    "m11_shot_boundaries",  # NEW r12: frame-delta scene segmentation
-    "v37_mcnemar_models",  # NEW r12: paired-discordance model test
-    "r95_string_agg",  # NEW r12: ordered LISTAGG surface
-    "v38_nb_top_features",  # NEW r12: model interpretability chart
-    "t53_kn3_perplexity",  # NEW r12: order-3 KN perplexity rung
-]
-
-# First occurrence wins (dict.fromkeys dedup): ROUND-12 order
-# EXECUTES the plan round 11 wrote — the 4 never-driver-checked
-# _NEW_R12 lead (slots 1–4, the only corpus entries with zero
-# driver rows at window freeze), then the two round-12 builds
-# (slots 5–6, displacing the plan's two r7-tier fill slots — "new
-# entries displace the r7-tier fill, never the r6 tier"), then the
-# 44-entry r6-green tier (slots 7–50) = 50 exactly, no re-spells.
-# The round-13 window is already written: _NEW_R13 (round-12
-# builds after the freeze, currently empty) + the 48-entry
-# r7-green tier (alphabetical head: d38_url_canonical,
-# d40_substring_dedup, …) + fill to 50 from the r8-tier head; new
-# round-13 entries displace the r8 fill, never the r7 tier.
-# Everything below cycles behind.
-_PRIORITY = list(
-    dict.fromkeys(
-        _NEW_R12  # r12 window head — zero driver rows, slots 1–4
-        + _NEW_R12B  # slots 5–6: round-12 builds (displace r7 fill)
-        + _R6_TIER_R12  # slots 7–50: the 44-entry r6-green tier
-        + _NEW_R13  # queued past slot 50 — r13's window head
-        + _NEW_R11  # r11 window (all green r11) cycles behind
-        + _R5_TIER_R11
-        + _R6_FILL_R11
-        + _NEW_R10
-        + _R4_TIER_R10
-        + _CHANGED_R9
-        + _NEW_R9
-        + _NEW_R9B
-        + _R3_TIER_R9
-        + _R4_HEAD_R9
-        + _CHANGED_R8
-        + _NEW_R8
-        + _DECIMAL_CAMPAIGN_R7
-        + _R2_STALE[8:]  # r35_grouping_sets … t06 (z09…r34 got r7 rows)
-        + _CHANGED_R7
-        + _NEW_R7
-        + _R1_STALE_TAIL
-        + _R2_STALE
-        + _DEBT_R6
-        + _CHANGED_R6
-        + _NEW_R6
-        + _R1_STALE
-        + _CHANGED_R5
-        + _CHANGED_R4
-    )
-)
-
-QUERIES = {k: _ALL_QUERIES[k] for k in _PRIORITY if k in _ALL_QUERIES}
-QUERIES.update({k: v for k, v in _ALL_QUERIES.items() if k not in QUERIES})
 
 ORACLE = {
     **zappy_ops.ORACLE,

@@ -2890,7 +2890,8 @@ def t37(spark: SparkSession, d: str) -> DataFrame:
     vocab in ONE hash agg; each iteration is a narrow pair explode +
     map-side-combinable agg + TakeOrderedAndProject(1) — the 1-row
     driver collects are the kmeans centroids-as-literals precedent,
-    keeping lineage linear in the merge count."""
+    keeping lineage linear in the merge count, and they ARE the
+    returned rows (collecting the result re-runs no step)."""
     from zappy_spark.operators.text import bpe_train_merges
 
     return bpe_train_merges(t(spark, d, "documents"), "text", n_merges=6)
@@ -3557,7 +3558,9 @@ def v28(spark: SparkSession, d: str) -> DataFrame:
     Scale: per iteration ONE map-side-combinable hash agg over a
     narrow integer scan; only 6 integers cross the shuffle; weights
     re-enter as literals (the v09-Lloyd's / t37-BPE precedent),
-    lineage linear in the iteration count."""
+    lineage linear in the iteration count. The returned rows are the
+    loop's own 1-row collects (collecting the result re-runs no
+    step)."""
     from zappy_spark.operators.training import logreg_train_fixed
 
     return logreg_train_fixed(
@@ -3731,7 +3734,9 @@ def t47(spark: SparkSession, d: str) -> DataFrame:
     Scale: E-steps run over the Heaps-bounded DEDUPED vocabulary
     weighted by count (the t43 trick); each iteration is one
     map-side-combinable hash agg of <= n_pieces rows; driver state
-    is the bounded piece table (v09/v28 doctrine)."""
+    is the bounded piece table (v09/v28 doctrine), and the collected
+    per-step usage rows ARE the result (collecting it re-runs no
+    E-step)."""
     from zappy_spark.operators.text import unigram_lm_train
 
     return unigram_lm_train(
@@ -4002,7 +4007,8 @@ def t50(spark: SparkSession, d: str) -> DataFrame:
     of the same rational, bit-identical (the t47 fixed-point
     doctrine); ties break (pair_n DESC, lhs, rhs). The oracle
     replays the ENTIRE 6-step loop with the t37 unrolled-CTE
-    pattern (materialized states, linear lineage)."""
+    pattern (materialized states, linear lineage). As in t37, the
+    returned rows are the driver loop's 1-row collects."""
     from zappy_spark.operators.text import wordpiece_train_merges
 
     return wordpiece_train_merges(t(spark, d, "documents"), "text", 6)

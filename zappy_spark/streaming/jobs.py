@@ -700,28 +700,10 @@ def rolling_median_stateful(stream: DataFrame) -> DataFrame:
     )
 
 
-# NOTE: transformWithStateInPandas (the Spark 4 successor stateful
-# API) was evaluated and crashes in this environment even on a
-# minimal example ("TransformWithStateInPySpark driver worker exited
-# unexpectedly") — applyInPandasWithState above is the supported
-# custom-state surface here. Re-verified rounds 5, 8 and 9:
-# identical crash on a minimal ValueState counter (RocksDB provider,
-# memory sink, rate source; "TransformWithStateInPySpark driver
-# worker exited unexpectedly" before the first micro-batch commits).
-# The round-9 probe also re-confirmed no codec/compression libs
-# (PIL/cv2/imageio/soundfile/librosa/blosc/blosc2/zarr/numcodecs/
-# zstandard/brotli all absent), so the JPEG-class and blosc
-# activation paths (multimodal.py:16, zarrlite docstring) stay
-# dormant. Round-10 re-probe: same on all fronts — the minimal
-# ValueState counter (rate source, RocksDB provider, memory sink)
-# again dies before the first commit ("TransformWithStateInPySpark
-# driver worker exited unexpectedly", q.isActive False, 0 rows),
-# and PIL/cv2/blosc/zarr/numcodecs/soundfile/imageio all raise
-# ModuleNotFoundError. Round-11 re-probe: unchanged — the same
-# minimal ValueState counter (rate source, RocksDB provider,
-# memory sink, pyspark 4.1.2) dies with "TransformWithStateInPySpark
-# driver worker exited unexpectedly" before the first commit, and
-# PIL/cv2/zarr/numcodecs/blosc/lz4/soundfile/librosa/av all absent.
+# applyInPandasWithState is the custom-state surface here because its
+# successor, transformWithStateInPandas, crashes on pyspark 4.1.2
+# ("TransformWithStateInPySpark driver worker exited unexpectedly")
+# even on a minimal ValueState counter, before the first commit.
 
 
 def interval_stream_join(
