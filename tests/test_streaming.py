@@ -1865,3 +1865,166 @@ def test_incremental_kn3_ledger_equals_batch(spark, tmp_path):
         docs.limit(10), rev, state, model_path
     )
     assert _rows(jobs.kn3_from_state(spark, state), *cols) == got
+
+
+class _StubStream:
+    """Stands in for a streaming DataFrame: records the function and
+    options a twin registers on ``writeStream`` without starting a
+    query, so a test can call the foreachBatch function directly."""
+
+    def __init__(self):
+        self.fn = None
+        self.options = {}
+
+    @property
+    def writeStream(self):
+        return self
+
+    def foreachBatch(self, fn):
+        self.fn = fn
+        return self
+
+    def outputMode(self, _mode):
+        return self
+
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def start(self):
+        return self
+
+
+def test_weighted_sample_replay_keeps_reservoir(spark, tmp_path):
+    """A redelivered batch 0 must leave the committed reservoir as it
+    was. Without the replay guard the overwrite of rev=0 deletes the
+    files its own merge is lazily reading: the replay fails and
+    leaves ``_LATEST`` pointing at an empty rev=0."""
+    import os
+
+    docs = (
+        load_table(spark, SF_SMOKE_DIR, "documents")
+        .withColumn("wt", F.length("text").cast("double"))
+        .orderBy("doc_id")
+        .limit(40)
+    )
+    state = str(tmp_path / "res_replay")
+    stub = _StubStream()
+    jobs.streaming_weighted_sample(stub, state, "doc_id", "wt", 5)
+    stub.fn(docs, 0)
+    first = sorted(
+        r.doc_id for r in jobs.latest_snapshot(spark, state).collect()
+    )
+    stub.fn(docs, 0)
+    again = sorted(
+        r.doc_id for r in jobs.latest_snapshot(spark, state).collect()
+    )
+    assert again == first and len(set(first)) == 5
+    assert jobs.applied_revision(state) == 0
+    assert spark.read.parquet(os.path.join(state, "rev=0")).count() == 5
+
+
+def test_incremental_upsert_replay_is_skipped(spark, tmp_path):
+    """The same replay check for the CDC-apply twin. Its max-version
+    merge would absorb a replay, so the check is that the replay is
+    skipped: rev=0 keeps the files the first apply wrote."""
+    import os
+
+    ev = (
+        load_table(spark, SF_SMOKE_DIR, "events")
+        .select("user_id", "event_type", "value", "event_id")
+        .orderBy("event_id")
+        .limit(200)
+    )
+    snap = str(tmp_path / "upsert_replay")
+    stub = _StubStream()
+    jobs.incremental_upsert(stub, snap, ["user_id", "event_type"], "event_id")
+    cols = ("user_id", "event_type", "value", "event_id")
+    stub.fn(ev, 0)
+    first = _rows(jobs.latest_snapshot(spark, snap), *cols)
+    files = sorted(os.listdir(os.path.join(snap, "rev=0")))
+    stub.fn(ev, 0)
+    assert sorted(os.listdir(os.path.join(snap, "rev=0"))) == files
+    assert _rows(jobs.latest_snapshot(spark, snap), *cols) == first
+    assert len(first) > 0
+    assert jobs.list_revisions(snap) == [0]
+    assert jobs.applied_revision(snap) == 0
+
+
+def test_incremental_hll_replay_is_skipped(spark, tmp_path):
+    """The same replay check for the HLL twin, which keeps its sketch
+    state in the same rev-dir layout as every other twin."""
+    ev = load_table(spark, SF_SMOKE_DIR, "events").orderBy("event_id")
+    state = str(tmp_path / "hll_replay")
+    stub = _StubStream()
+    jobs.incremental_hll(stub, state, lgk=12)
+    stub.fn(ev.limit(300), 0)
+    first = _rows(jobs.hll_state_estimates(spark, state), "day", "approx_distinct")
+    stub.fn(ev.limit(300), 0)
+    again = _rows(jobs.hll_state_estimates(spark, state), "day", "approx_distinct")
+    assert again == first and len(first) > 0
+    assert jobs.applied_revision(state) == 0
+
+
+def test_incremental_hll_unreadable_state_raises(spark, tmp_path):
+    """A committed HLL state that cannot be read must fail the batch
+    and keep ``_LATEST`` on the last good revision; it must never be
+    mistaken for 'no state yet' and replaced by the new batch alone."""
+    import glob
+
+    ev = load_table(spark, SF_SMOKE_DIR, "events")
+    state = str(tmp_path / "hll_corrupt")
+    stub = _StubStream()
+    jobs.incremental_hll(stub, state, lgk=12)
+    stub.fn(ev.filter(F.col("event_id") % 2 == 0), 0)
+    files = glob.glob(f"{state}/**/*.parquet", recursive=True)
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        stub.fn(ev.filter(F.col("event_id") % 2 == 1), 1)
+    assert jobs.applied_revision(state) == 0
+
+
+def test_snapshot_twins_start_with_state_checkpoint(tmp_path):
+    """Every snapshot twin (and the HLL twin) checkpoints its query at
+    ``<state_path>_ckpt``."""
+    # The replay guard skips batch ids at or below _LATEST. Without a
+    # durable checkpoint a restarted query renumbers its batches from
+    # 0, and the guard would then skip new data as already applied.
+    starters = {
+        "hll": lambda s, p: jobs.incremental_hll(s, p),
+        "upsert": lambda s, p: jobs.incremental_upsert(s, p, ["k"], "v"),
+        "scd2": lambda s, p: jobs.streaming_scd2(s, p, ["k"], "ts"),
+        "rfm": jobs.incremental_rfm_state,
+        "weighted": lambda s, p: jobs.streaming_weighted_sample(
+            s, p, "id", "w", 5
+        ),
+        "novelty": jobs.incremental_novelty_state,
+        "centroid": jobs.incremental_centroid_state,
+        "alignment": jobs.incremental_alignment_state,
+        "kappa": jobs.incremental_kappa_state,
+        "stopword": jobs.incremental_stopword_state,
+        "filter": lambda s, p: jobs.incremental_filter_state(s, p, [1, 1]),
+        "piece_usage": lambda s, p: jobs.incremental_piece_usage_state(
+            s, p, {"a": 1}
+        ),
+        "ppl": lambda s, p: jobs.incremental_ppl_state(s, p, "m"),
+        "absdisc": lambda s, p: jobs.incremental_absdisc_state(s, p, "m"),
+        "kn": lambda s, p: jobs.incremental_kn_state(s, p, "m"),
+        "cdc": jobs.incremental_cdc_state,
+        "nb": lambda s, p: jobs.incremental_nb_state(s, p, "m"),
+        "auc": lambda s, p: jobs.incremental_auc_state(s, p, "w"),
+        "kn3": lambda s, p: jobs.incremental_kn3_state(s, p, "m"),
+    }
+    wrong = {}
+    for name, start in starters.items():
+        stub = _StubStream()
+        path = str(tmp_path / name)
+        start(stub, path)
+        assert stub.fn is not None, name
+        got = stub.options.get("checkpointLocation")
+        if got != path + "_ckpt":
+            wrong[name] = got
+    assert wrong == {}

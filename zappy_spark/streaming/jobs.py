@@ -14,10 +14,23 @@ watermarks bound state size — without one, an unbounded-key agg
 grows state forever (that is the 100 TB failure mode, and why
 ``tumbling_with_watermark`` is the production form of
 ``tumbling_counts``).
+
+Snapshot state (every ``*_apply_batch`` twin, ``incremental_upsert``,
+``incremental_hll`` and ``streaming_weighted_sample``) follows one
+protocol, ``_commit``: each non-empty micro-batch reads the committed
+revision, merges its partial into it, writes a NEW ``rev=<batch_id>``
+directory (``rev=<id>/<table>`` for multi-table state) and then swaps
+the ``_LATEST`` pointer atomically (a temp file renamed over it with
+``os.replace``), so readers only ever see a complete revision.
+At-least-once redelivery is absorbed by a guard that skips any batch
+id at or below ``_LATEST``. That guard is only sound with the durable
+``<state_path>_ckpt`` checkpoint that ``_start`` always sets (see
+there).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -36,6 +49,34 @@ from pyspark.sql.types import (
 from zappy_spark.session import load_table
 
 
+def _replay_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    out_dir: str,
+    n_files: int,
+    table: str,
+    *order: str,
+) -> None:
+    """Write ``table`` as ``n_files`` parquet files of consecutive
+    rows in ``order``, one file after the other, so a file-source
+    stream (which triggers by modification time) replays them in
+    that order."""
+    from pyspark.sql import Window
+
+    ranked = load_table(spark, sf_dir, table).withColumn(
+        "_rn", F.row_number().over(Window.orderBy(*order))
+    )
+    per = (ranked.count() + n_files - 1) // n_files
+    for i in range(n_files):
+        (
+            ranked.filter(F.col("_rn").between(i * per + 1, (i + 1) * per))
+            .drop("_rn")
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(out_dir)
+        )
+
+
 def replay_events_dir(
     spark: SparkSession, sf_dir: str, out_dir: str, n_files: int = 4
 ) -> None:
@@ -44,22 +85,7 @@ def replay_events_dir(
     (file source triggers by modification time; we write
     sequentially). The nanos→micros repair happens here, so the
     replay dir holds clean timestamps."""
-    ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("_rn", F.row_number().over(w))
-    total = ranked.count()
-    per = (total + n_files - 1) // n_files
-    for i in range(n_files):
-        lo, hi = i * per + 1, (i + 1) * per
-        (
-            ranked.filter(F.col("_rn").between(lo, hi))
-            .drop("_rn")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+    _replay_dir(spark, sf_dir, out_dir, n_files, "events", "ts", "event_id")
 
 
 def stream_events(
@@ -766,46 +792,30 @@ def incremental_hll(
 ) -> "Any":
     """Incremental distinct-user sketches via ``foreachBatch``: each
     micro-batch builds per-day partial HLL sketches (distributed JVM
-    aggregate over just the batch) and unions them into a persisted
+    aggregate over just the batch) and unions them into the committed
     state table of (day, sketch binary).
 
     This is the streaming twin of ``operators.sketches.hll_build`` —
     and the reason sketches matter in a pipeline: merge cost is
     proportional to the state table (days × ~KB), independent of
     history size, so the nightly "distinct users ever" query never
-    rescans the stream. The state swap materializes the (tiny) merged
-    table before overwriting, so the read-then-overwrite is safe; at
-    scale the same pattern targets a keyed state store or a
-    transactional table format instead of a parquet swap.
+    rescans the stream. The state is a rev-dir snapshot (``_commit``);
+    at scale the same pattern targets a keyed state store or a
+    transactional table format.
 
     Returns the started StreamingQuery; the caller drains/stops it.
     """
 
-    def update(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
         part = (
             batch_df.withColumn("day", F.to_date("ts"))
             .groupBy("day")
             .agg(F.hll_sketch_agg("user_id", lgk).alias("hll"))
         )
-        try:
-            prev = spark.read.parquet(state_path)
-            merged = (
-                prev.unionByName(part)
-                .groupBy("day")
-                .agg(F.hll_union_agg("hll").alias("hll"))
-            )
-        except Exception:  # first batch: no state yet
-            merged = part
-        rows = merged.collect()  # days × KB — driver-safe by design
-        spark.createDataFrame(rows, merged.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(state_path)
+        return _merge(cur, part, ["day"], F.hll_union_agg("hll").alias("hll"))
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .outputMode("update")
-        .start()
+    return _start(
+        stream, state_path, lambda df, i: _commit(df, i, state_path, step)
     )
 
 
@@ -818,36 +828,22 @@ def incremental_upsert(
     """CDC-apply: maintain a mutable snapshot from an append-only
     changelog stream. Each micro-batch merges into the current
     snapshot via ``operators.pipeline.upsert_snapshot`` (highest
-    version per key wins) and writes a NEW revision directory
-    ``rev=<batch_id>``, then atomically swaps a pointer file — the
-    snapshot is never overwritten in place, so concurrent readers
-    always see a complete revision (MVCC-lite; a transactional table
-    format plays this role on object stores).
-
-    Idempotent on batch replay: re-merging the same changelog rows
-    picks the same winners, and the rewritten revision replaces
-    itself. Old revisions are retained (cheap time travel; clean up
-    out-of-band). Returns the started StreamingQuery."""
-    import os
-
+    version per key wins) and commits a new ``rev=<batch_id>``
+    revision (``_commit``) — the snapshot is never overwritten in
+    place, so concurrent readers always see a complete revision
+    (MVCC-lite; a transactional table format plays this role on
+    object stores). Old revisions are retained (cheap time travel;
+    clean up out-of-band). Returns the started StreamingQuery."""
     from zappy_spark.operators.pipeline import upsert_snapshot
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cur = latest_snapshot(spark, snapshot_path)
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
         base = cur if cur is not None else batch_df.limit(0)
-        merged = upsert_snapshot(base, batch_df, keys, version_col)
-        rev_dir = os.path.join(snapshot_path, f"rev={batch_id}")
-        merged.write.mode("overwrite").parquet(rev_dir)
-        tmp = os.path.join(snapshot_path, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, os.path.join(snapshot_path, "_LATEST"))
+        return upsert_snapshot(base, batch_df, keys, version_col)
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .start()
+    return _start(
+        stream,
+        snapshot_path,
+        lambda df, i: _commit(df, i, snapshot_path, step),
     )
 
 
@@ -861,20 +857,12 @@ def streaming_scd2(
     change stream. Each micro-batch is pre-collapsed to its latest
     change per key (``upsert_snapshot`` semantics — scd2_apply
     assumes one change per key per batch), applied with
-    ``scd2_apply``, and written as a new ``rev=<batch_id>``
-    directory with an atomic ``_LATEST`` pointer swap — identical
-    MVCC discipline to ``incremental_upsert`` (readers always see a
-    complete revision; replayed batches rewrite their own revision;
-    old revisions are time travel). The audit-trail streaming twin
-    of that SCD-1 job."""
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        scd2_apply_batch(batch_df, batch_id, history_path, keys, ts_col)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", history_path + "_ckpt")
-        .start()
+    ``scd2_apply``, and committed as a new revision — the
+    audit-trail streaming twin of the SCD-1 ``incremental_upsert``."""
+    return _start(
+        stream,
+        history_path,
+        lambda df, i: scd2_apply_batch(df, i, history_path, keys, ts_col),
     )
 
 
@@ -886,43 +874,25 @@ def scd2_apply_batch(
     ts_col: str,
 ) -> None:
     """One ``streaming_scd2`` micro-batch, module-level so the
-    at-least-once replay guard is directly testable. Idempotent:
-    if ``_LATEST`` already points at ``batch_id`` or later, the
-    batch was committed and is skipped — without this, a redelivery
-    landing AFTER the pointer swap would read rev=batch_id as
-    'current history' and re-close/re-append the same versions
-    (scd2_apply is close-and-append, not max-version-wins, so
-    replays are NOT naturally absorbed — round-7 ADVICE class)."""
-    import os
-
+    at-least-once replay guard is directly testable. scd2_apply is
+    close-and-append, not max-version-wins, so a replay is NOT
+    naturally absorbed: it would re-close and re-append the same
+    versions if the guard let it through."""
     from zappy_spark.operators.pipeline import scd2_apply, upsert_snapshot
 
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(history_path)
-    if last is not None and last >= batch_id:
-        return
-    spark = batch_df.sparkSession
-    latest = upsert_snapshot(batch_df.limit(0), batch_df, keys, ts_col)
-    cur = latest_snapshot(spark, history_path)
-    if cur is None:
-        attr = [c for c in batch_df.columns if c not in keys]
-        base = batch_df.limit(0).select(
-            *keys,
-            *[c for c in attr if c != ts_col],
-            F.col(ts_col).alias("valid_from"),
-            F.col(ts_col).alias("valid_to"),
-        )
-        hist = base
-    else:
-        hist = cur
-    merged = scd2_apply(hist, latest, keys, ts_col)
-    rev_dir = os.path.join(history_path, f"rev={batch_id}")
-    merged.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(history_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(history_path, "_LATEST"))
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        latest = upsert_snapshot(batch_df.limit(0), batch_df, keys, ts_col)
+        if cur is None:
+            attr = [c for c in batch_df.columns if c not in keys]
+            cur = batch_df.limit(0).select(
+                *keys,
+                *[c for c in attr if c != ts_col],
+                F.col(ts_col).alias("valid_from"),
+                F.col(ts_col).alias("valid_to"),
+            )
+        return scd2_apply(cur, latest, keys, ts_col)
+
+    _commit(batch_df, batch_id, history_path, step)
 
 
 def replay_orders_dir(
@@ -931,22 +901,9 @@ def replay_orders_dir(
     """Materialize ``orders`` as ``n_files`` date-ordered parquet
     files — the changelog replay for the RFM streaming twin (same
     mechanism as ``replay_events_dir``)."""
-    o = load_table(spark, sf_dir, "orders")
-    from pyspark.sql import Window
-
-    w = Window.orderBy("o_orderdate", "o_orderkey")
-    ranked = o.withColumn("_rn", F.row_number().over(w))
-    total = ranked.count()
-    per = (total + n_files - 1) // n_files
-    for i in range(n_files):
-        lo, hi = i * per + 1, (i + 1) * per
-        (
-            ranked.filter(F.col("_rn").between(lo, hi))
-            .drop("_rn")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+    _replay_dir(
+        spark, sf_dir, out_dir, n_files, "orders", "o_orderdate", "o_orderkey"
+    )
 
 
 def incremental_rfm_state(stream: DataFrame, state_path: str) -> "Any":
@@ -962,22 +919,9 @@ def incremental_rfm_state(stream: DataFrame, state_path: str) -> "Any":
     order can shift every boundary), so the stream maintains the
     sufficient statistics and ``rfm_segments_from_state`` ranks the
     bounded customer state at read time through the exact batch
-    code path (queries/relational.py::rfm_grid). State revisions
-    use the incremental_upsert MVCC discipline (rev dirs + atomic
-    ``_LATEST`` pointer swap) PLUS an applied-revision replay guard:
-    unlike upsert's max-version-wins merge, this merge is ADDITIVE
-    (sum/count), so an at-least-once redelivery landing after the
-    pointer swap would double-count — ``rfm_apply_batch`` skips any
-    batch_id <= the committed revision (round-7 ADVICE fix)."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rfm_apply_batch(batch_df, batch_id, state_path)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    code path (queries/relational.py::rfm_grid)."""
+    return _start(
+        stream, state_path, lambda df, i: rfm_apply_batch(df, i, state_path)
     )
 
 
@@ -985,42 +929,25 @@ def rfm_apply_batch(
     batch_df: DataFrame, batch_id: int, state_path: str
 ) -> None:
     """One ``incremental_rfm_state`` micro-batch, module-level so
-    the replay guard is directly testable. Idempotent: a batch_id
-    at or below the committed ``_LATEST`` revision is skipped —
-    re-adding it would double-count freq/mon AND overwrite the very
-    rev dir the merge is lazily reading."""
-    import os
+    the replay guard is directly testable: the merge is ADDITIVE
+    (sum/count), so a replayed batch would double-count freq/mon."""
 
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
-    spark = batch_df.sparkSession
-    part = batch_df.groupBy("o_custkey").agg(
-        F.max(F.col("o_orderdate").cast("date")).alias("lastd"),
-        F.count("*").alias("freq"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("mon"),
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is None:
-        merged = part
-    else:
-        merged = (
-            cur.unionByName(part, allowMissingColumns=False)
-            .groupBy("o_custkey")
-            .agg(
-                F.max("lastd").alias("lastd"),
-                F.sum("freq").alias("freq"),
-                F.sum("mon").cast("decimal(18,2)").alias("mon"),
-            )
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        part = batch_df.groupBy("o_custkey").agg(
+            F.max(F.col("o_orderdate").cast("date")).alias("lastd"),
+            F.count("*").alias("freq"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("mon"),
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    merged.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _merge(
+            cur,
+            part,
+            ["o_custkey"],
+            F.max("lastd").alias("lastd"),
+            F.sum("freq").alias("freq"),
+            F.sum("mon").cast("decimal(18,2)").alias("mon"),
+        )
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def rfm_segments_from_state(
@@ -1031,9 +958,7 @@ def rfm_segments_from_state(
     state ⇒ identical grid."""
     from zappy_spark.queries.relational import rfm_grid
 
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no RFM state at {state_path}")
+    per = _committed(spark, state_path, "RFM")
     return rfm_grid(
         per.select(
             "o_custkey",
@@ -1055,38 +980,21 @@ def streaming_weighted_sample(
     smallest race keys of a union are the k smallest of the whole —
     A-ES keys are per-row and deterministic (md5(id)-seeded), so the
     reservoir MERGES: each micro-batch races its own rows, unions
-    the prior reservoir, keeps the global k smallest, and writes a
-    new ``rev=<batch_id>`` with the atomic pointer swap. Per batch
+    the prior reservoir and keeps the global k smallest. Per batch
     the state is k rows, the work is batch + k rows — a weighted
     sample over an endless stream that equals the batch sample of
     everything seen (pinned in test_streaming), which random
     reservoirs cannot promise."""
-    import os
-
     from zappy_spark.operators.sampling import weighted_sample_exact
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
         raced = weighted_sample_exact(batch_df, id_col, weight_col, k)
-        prior = latest_snapshot(spark, state_path)
-        if prior is not None:
-            raced = raced.unionByName(prior).orderBy(
-                "aes_key", id_col
-            ).limit(k)
-        rev_dir = os.path.join(state_path, f"rev={batch_id}")
-        raced.write.mode("overwrite").parquet(rev_dir)
-        tmp = os.path.join(state_path, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        if cur is None:
+            return raced
+        return raced.unionByName(cur).orderBy("aes_key", id_col).limit(k)
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    return _start(
+        stream, state_path, lambda df, i: _commit(df, i, state_path, step)
     )
 
 
@@ -1105,8 +1013,7 @@ def streaming_corpus_prep(
 
     Exactly-once: each batch writes (mode=overwrite) its own
     ``batch=<id>`` partition directory, so a replayed batch replaces
-    itself instead of double-appending — same MVCC-lite idempotence
-    trick as ``incremental_upsert``. Cross-batch dedup anti-joins
+    itself instead of double-appending. Cross-batch dedup anti-joins
     the new batch's fingerprints against the landed dataset's
     fingerprint column (a 16-byte key scan of prior batches; on a
     real deployment that column is the dataset's primary index).
@@ -1114,7 +1021,6 @@ def streaming_corpus_prep(
     keep-min, which it equals whenever ingest order follows id
     order (pinned in test_streaming single-batch equivalence)."""
     import glob
-    import os
 
     from zappy_spark.operators import dedup as _dedup
     from zappy_spark.operators import text as _text
@@ -1154,11 +1060,7 @@ def streaming_corpus_prep(
             os.path.join(dataset_path, f"batch={batch_id}")
         )
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", dataset_path + "_ckpt")
-        .start()
-    )
+    return _start(stream, dataset_path, apply_batch)
 
 
 def incremental_moments(
@@ -1174,8 +1076,6 @@ def incremental_moments(
     to keep second-order statistics fresh. Idempotent on replay: a
     re-run batch overwrites its own directory with identical
     partials."""
-    import os
-
     from zappy_spark.operators.linalg import moment_partials
 
     spark = stream.sparkSession
@@ -1191,11 +1091,7 @@ def incremental_moments(
             os.path.join(state_path, f"batch={batch_id}")
         )
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
-    )
+    return _start(stream, state_path, apply_batch)
 
 
 def streaming_index_append(
@@ -1213,8 +1109,6 @@ def streaming_index_append(
     partition-prune exactly as on a batch-built index. Write the
     centroids once with ``write_centroids`` so probe helpers find
     them."""
-    import os
-
     from zappy_spark.operators.similarity import kmeans_assign
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1225,11 +1119,7 @@ def streaming_index_append(
             os.path.join(index_path, f"batch={batch_id}")
         )
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", index_path + "_ckpt")
-        .start()
-    )
+    return _start(stream, index_path, apply_batch)
 
 
 def write_centroids(spark: SparkSession, centroids: "Any", index_path: str) -> None:
@@ -1261,27 +1151,129 @@ def merged_moments(
     return moments_from_partials(n, s, g)
 
 
+# -- the one incremental-state protocol (MVCC-lite rev dirs) ----------
+
+
+def _start(stream: DataFrame, state_path: str, apply: "Any") -> "Any":
+    """Start ``apply(batch_df, batch_id)`` as the stream's
+    ``foreachBatch`` sink, checkpointed at ``<state_path>_ckpt``.
+    Returns the started StreamingQuery; the caller drains/stops it."""
+    # The replay guard in _commit needs this durable checkpoint:
+    # without one, a restarted query renumbers its batches from 0,
+    # and the guard would then skip new data as already applied.
+    return (
+        stream.writeStream.foreachBatch(apply)
+        .outputMode("update")
+        .option("checkpointLocation", state_path + "_ckpt")
+        .start()
+    )
+
+
+def _commit(
+    batch_df: DataFrame,
+    batch_id: int,
+    state_path: str,
+    step: "Any",
+    tables: "tuple[str, ...] | None" = None,
+) -> None:
+    """Apply one micro-batch to the MVCC-lite state at ``state_path``.
+
+    ``step(batch_df, cur)`` returns the new state from the batch and
+    the committed revision ``cur``: a DataFrame (None before the
+    first commit) or, when ``tables`` names sub-tables, a
+    ``{table: DataFrame | None}`` dict. Empty batches are skipped, and
+    so is any batch id at or below ``_LATEST``: a redelivery after
+    the swap would otherwise double-apply an additive merge and
+    overwrite the very revision its merge is lazily reading. The new
+    state is written to ``rev=<batch_id>[/<table>]`` before the
+    atomic pointer swap, so a failed batch leaves ``_LATEST`` on the
+    last complete revision."""
+    if batch_df.isEmpty():
+        return
+    last = applied_revision(state_path)
+    if last is not None and last >= batch_id:
+        return
+    if last is not None:
+        cur = _read_revision(batch_df.sparkSession, state_path, last, tables)
+    else:
+        cur = None if tables is None else dict.fromkeys(tables)
+    new = step(batch_df, cur)
+    rev_dir = os.path.join(state_path, f"rev={batch_id}")
+    if tables is None:
+        new.write.mode("overwrite").parquet(rev_dir)
+    else:
+        for t in tables:
+            new[t].write.mode("overwrite").parquet(os.path.join(rev_dir, t))
+    tmp = os.path.join(state_path, "_LATEST.tmp")
+    with open(tmp, "w") as f:
+        f.write(str(batch_id))
+    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+
+
+def _merge(
+    cur: "DataFrame | None", part: DataFrame, keys: list[str], *aggs: "Any"
+) -> DataFrame:
+    """The batch partial merged into the committed state: ``part``
+    alone on the first batch, else both re-aggregated per ``keys``."""
+    if cur is None:
+        return part
+    return cur.unionByName(part).groupBy(*keys).agg(*aggs)
+
+
+def _sum_counts(
+    cur: "DataFrame | None",
+    part: DataFrame,
+    keys: list[str],
+    cols: "tuple[str, ...] | list[str]",
+) -> DataFrame:
+    """``_merge`` for exact counters: each of ``cols`` is a BIGINT
+    sum per ``keys``."""
+    return _merge(
+        cur, part, keys, *[F.sum(c).cast("bigint").alias(c) for c in cols]
+    )
+
+
+def _read_revision(
+    spark: SparkSession,
+    state_path: str,
+    rev: int,
+    tables: "tuple[str, ...] | None" = None,
+) -> "Any":
+    """Revision ``rev`` of a snapshot: one DataFrame, or a
+    ``{table: DataFrame}`` dict of its named sub-tables."""
+    rev_dir = os.path.join(state_path, f"rev={rev}")
+    if tables is None:
+        return spark.read.parquet(rev_dir)
+    return {t: spark.read.parquet(os.path.join(rev_dir, t)) for t in tables}
+
+
+def _committed(
+    spark: SparkSession,
+    state_path: str,
+    what: str,
+    tables: "tuple[str, ...] | None" = None,
+) -> "Any":
+    """The committed revision, as ``_read_revision`` returns it;
+    raises ValueError naming ``what`` before the first commit."""
+    rev = applied_revision(state_path)
+    if rev is None:
+        raise ValueError(f"no {what} state at {state_path}")
+    return _read_revision(spark, state_path, rev, tables)
+
+
 def latest_snapshot(
     spark: SparkSession, snapshot_path: str
 ) -> "DataFrame | None":
-    """Read the current revision of an ``incremental_upsert``
-    snapshot (None before the first batch commits)."""
-    import os
-
-    ptr = os.path.join(snapshot_path, "_LATEST")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        rev = f.read().strip()
-    return spark.read.parquet(os.path.join(snapshot_path, f"rev={rev}"))
+    """Read the current revision of a ``_commit`` snapshot (None
+    before the first batch commits)."""
+    rev = applied_revision(snapshot_path)
+    return None if rev is None else _read_revision(spark, snapshot_path, rev)
 
 
 def applied_revision(snapshot_path: str) -> "int | None":
     """The committed ``_LATEST`` revision id of an MVCC snapshot
     (None before the first commit) — the at-least-once replay guard:
-    foreachBatch appliers skip any batch_id <= this."""
-    import os
-
+    ``_commit`` skips any batch_id <= this."""
     ptr = os.path.join(snapshot_path, "_LATEST")
     if not os.path.exists(ptr):
         return None
@@ -1290,11 +1282,9 @@ def applied_revision(snapshot_path: str) -> "int | None":
 
 
 def list_revisions(snapshot_path: str) -> list[int]:
-    """All committed revision ids of an ``incremental_upsert``
-    snapshot, oldest first (each ``rev=<n>`` directory is immutable
-    once the pointer moves past it — cheap time travel)."""
-    import os
-
+    """All committed revision ids of a ``_commit`` snapshot, oldest
+    first (each ``rev=<n>`` directory is immutable once the pointer
+    moves past it — cheap time travel)."""
     if not os.path.isdir(snapshot_path):
         return []
     revs = [
@@ -1312,11 +1302,9 @@ def read_snapshot(
     (default: the current pointer). Readers never see partial
     writes — a revision directory is complete before the pointer
     swap, and old revisions are retained until vacuumed."""
-    import os
-
     if rev is None:
         return latest_snapshot(spark, snapshot_path)
-    return spark.read.parquet(os.path.join(snapshot_path, f"rev={rev}"))
+    return _read_revision(spark, snapshot_path, rev)
 
 
 def windowed_topk(stream: DataFrame, out_path: str, k: int = 2) -> "Any":
@@ -1356,14 +1344,11 @@ def windowed_topk(stream: DataFrame, out_path: str, k: int = 2) -> "Any":
 
 
 def hll_state_estimates(spark: SparkSession, state_path: str) -> DataFrame:
-    """Read the persisted sketch state and estimate per-day + return
-    frame (day, approx_distinct) — the query side never touches the
+    """Read the committed sketch state and estimate per day —
+    frame (day, approx_distinct); the query side never touches the
     original stream."""
-    return (
-        spark.read.parquet(state_path)
-        .select(
-            "day", F.hll_sketch_estimate("hll").alias("approx_distinct")
-        )
+    return _committed(spark, state_path, "HLL").select(
+        "day", F.hll_sketch_estimate("hll").alias("approx_distinct")
     )
 
 
@@ -1488,22 +1473,7 @@ def replay_documents_dir(
     parquet files — the crawl-order changelog replay for the t29
     novelty streaming twin (same mechanism as replay_orders_dir;
     doc_id IS the crawl order in the batch t29 semantics)."""
-    docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    w = Window.orderBy("doc_id")
-    ranked = docs.withColumn("_rn", F.row_number().over(w))
-    total = ranked.count()
-    per = (total + n_files - 1) // n_files
-    for i in range(n_files):
-        lo, hi = i * per + 1, (i + 1) * per
-        (
-            ranked.filter(F.col("_rn").between(lo, hi))
-            .drop("_rn")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+    _replay_dir(spark, sf_dir, out_dir, n_files, "documents", "doc_id")
 
 
 def novelty_apply_batch(
@@ -1511,61 +1481,37 @@ def novelty_apply_batch(
 ) -> None:
     """One ``incremental_novelty_state`` micro-batch: maintain
     (a) gram → min(struct(doc_id, source)) — the corpus-wide
-    first-appearance ledger, a MIN merge (idempotent by algebra,
-    but still guarded: the totals half is additive) — and
-    (b) source → n_grams, the distinct-(doc, gram) counter.
-    Both live in one MVCC revision (rev=<id>/grams + /totals,
-    atomic ``_LATEST`` swap) so readers never see them torn."""
-    import os
-
+    first-appearance ledger, a MIN merge — and (b) source →
+    n_grams, the distinct-(doc, gram) counter (additive). Both live
+    in one revision (rev=<id>/grams + /totals) so readers never see
+    them torn."""
     from zappy_spark.operators.dedup import word_shingles
 
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
-    spark = batch_df.sparkSession
-    dg = batch_df.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array_distinct(word_shingles(F.col("text"), 3))
-        ).alias("gram"),
-    )
-    part_min = dg.groupBy("gram").agg(
-        F.min(F.struct("doc_id", "source")).alias("_m")
-    )
-    part_tot = dg.groupBy("source").agg(F.count("*").alias("n_grams"))
-    ptr = os.path.join(state_path, "_LATEST")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            rev = f.read().strip()
-        cur_g = spark.read.parquet(
-            os.path.join(state_path, f"rev={rev}", "grams")
+    def step(batch_df: DataFrame, cur: "dict[str, Any]") -> "dict[str, Any]":
+        dg = batch_df.select(
+            "doc_id",
+            "source",
+            F.explode(
+                F.array_distinct(word_shingles(F.col("text"), 3))
+            ).alias("gram"),
         )
-        cur_t = spark.read.parquet(
-            os.path.join(state_path, f"rev={rev}", "totals")
+        part_min = dg.groupBy("gram").agg(
+            F.min(F.struct("doc_id", "source")).alias("_m")
         )
-        merged_g = (
-            cur_g.unionByName(part_min)
-            .groupBy("gram")
-            .agg(F.min("_m").alias("_m"))
-        )
-        merged_t = (
-            cur_t.unionByName(part_tot)
-            .groupBy("source")
-            .agg(F.sum("n_grams").alias("n_grams"))
-        )
-    else:
-        merged_g, merged_t = part_min, part_tot
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    merged_g.write.mode("overwrite").parquet(os.path.join(rev_dir, "grams"))
-    merged_t.write.mode("overwrite").parquet(os.path.join(rev_dir, "totals"))
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, ptr)
+        part_tot = dg.groupBy("source").agg(F.count("*").alias("n_grams"))
+        return {
+            "grams": _merge(
+                cur["grams"], part_min, ["gram"], F.min("_m").alias("_m")
+            ),
+            "totals": _merge(
+                cur["totals"],
+                part_tot,
+                ["source"],
+                F.sum("n_grams").alias("n_grams"),
+            ),
+        }
+
+    _commit(batch_df, batch_id, state_path, step, ("grams", "totals"))
 
 
 def incremental_novelty_state(stream: DataFrame, state_path: str) -> "Any":
@@ -1573,17 +1519,11 @@ def incremental_novelty_state(stream: DataFrame, state_path: str) -> "Any":
     first-appearance ledger is maintained as a mergeable MIN state
     per gram — a crawl feed drained in doc_id order converges to
     the exact batch answer because min(struct(doc_id, source)) is
-    order-free, and the per-source totals are the same additive
-    counters the RFM twin guards against redelivery."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        novelty_apply_batch(batch_df, batch_id, state_path)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    order-free, and the per-source totals are additive counters."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: novelty_apply_batch(df, i, state_path),
     )
 
 
@@ -1591,26 +1531,16 @@ def novelty_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The t29 report over the streaming-maintained state — same
     output columns and exact-integer division, so drained state ⇒
     identical rows."""
-    import os
-
-    ptr = os.path.join(state_path, "_LATEST")
-    if not os.path.exists(ptr):
-        raise ValueError(f"no novelty state at {state_path}")
-    with open(ptr) as f:
-        rev = f.read().strip()
-    grams = spark.read.parquet(
-        os.path.join(state_path, f"rev={rev}", "grams")
-    )
-    totals = spark.read.parquet(
-        os.path.join(state_path, f"rev={rev}", "totals")
-    )
+    cur = _committed(spark, state_path, "novelty", ("grams", "totals"))
     novel = (
-        grams.select(F.col("_m.source").alias("source"))
+        cur["grams"]
+        .select(F.col("_m.source").alias("source"))
         .groupBy("source")
         .agg(F.count("*").alias("n_novel"))
     )
     return (
-        totals.join(novel, "source", "left")
+        cur["totals"]
+        .join(novel, "source", "left")
         .select(
             "source",
             "n_grams",
@@ -1634,22 +1564,7 @@ def replay_embeddings_dir(
     """Materialize ``embeddings`` as ``n_files`` vec_id-ordered
     parquet files — the snapshot changelog for the v25 centroid
     drift streaming twin."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    from pyspark.sql import Window
-
-    w = Window.orderBy("vec_id")
-    ranked = emb.withColumn("_rn", F.row_number().over(w))
-    total = ranked.count()
-    per = (total + n_files - 1) // n_files
-    for i in range(n_files):
-        lo, hi = i * per + 1, (i + 1) * per
-        (
-            ranked.filter(F.col("_rn").between(lo, hi))
-            .drop("_rn")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+    _replay_dir(spark, sf_dir, out_dir, n_files, "embeddings", "vec_id")
 
 
 def centroid_apply_batch(
@@ -1658,42 +1573,29 @@ def centroid_apply_batch(
     """One ``incremental_centroid_state`` micro-batch: per
     (label, half, pos) the sufficient statistics (sum_x, n) — the
     same build-partials-merge-forever algebra as incremental
-    moments; additive, so redeliveries are guarded like the RFM
-    twin."""
-    import os
+    moments."""
 
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
-    spark = batch_df.sparkSession
-    part = (
-        batch_df.select(
-            F.col("label").alias("g"),
-            (F.col("vec_id") % 2).alias("half"),
-            F.posexplode(
-                F.transform("embedding", lambda v: v.cast("double"))
-            ).alias("p", "x"),
-        )
-        .groupBy("g", "half", "p")
-        .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is None:
-        merged = part
-    else:
-        merged = (
-            cur.unionByName(part)
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        part = (
+            batch_df.select(
+                F.col("label").alias("g"),
+                (F.col("vec_id") % 2).alias("half"),
+                F.posexplode(
+                    F.transform("embedding", lambda v: v.cast("double"))
+                ).alias("p", "x"),
+            )
             .groupBy("g", "half", "p")
-            .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
+            .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    merged.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _merge(
+            cur,
+            part,
+            ["g", "half", "p"],
+            F.sum("sx").alias("sx"),
+            F.sum("n").alias("n"),
+        )
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_centroid_state(stream: DataFrame, state_path: str) -> "Any":
@@ -1701,15 +1603,10 @@ def incremental_centroid_state(stream: DataFrame, state_path: str) -> "Any":
     (label, half, pos) → (sum, count) from an embeddings changelog;
     the cosine report derives centroids at read time, so the drained
     state converges to the batch v25 up to summation-order ulps."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        centroid_apply_batch(batch_df, batch_id, state_path)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: centroid_apply_batch(df, i, state_path),
     )
 
 
@@ -1717,10 +1614,7 @@ def centroid_drift_from_state(
     spark: SparkSession, state_path: str
 ) -> DataFrame:
     """The v25 report over the streaming-maintained moments."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no centroid state at {state_path}")
-    c = per.select(
+    c = _committed(spark, state_path, "centroid").select(
         "g", "half", "p", (F.col("sx") / F.col("n")).alias("m")
     )
     a = c.filter(F.col("half") == 0).select("g", "p", F.col("m").alias("ma"))
@@ -1749,43 +1643,24 @@ def alignment_apply_batch(
     DISTINCT (doc_id, lang, tok) bigram-membership table d41's
     alignment derives everything else from (global df ranks, rarest
     anchors, capped buckets, exploded Jaccard). Set-union-distinct
-    is idempotent — a redelivered doc merges to the same rows — and
-    the revision guard skips replayed batch ids outright, so drain
-    order can never change the state. One MVCC revision per batch
-    (rev=<id>/toks, atomic ``_LATEST`` swap)."""
-    import os
-
+    is idempotent — a redelivered doc merges to the same rows — so
+    drain order can never change the state. The table lives under
+    rev=<id>/toks."""
     from zappy_spark.operators.dedup import word_shingles
 
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
-    spark = batch_df.sparkSession
-    part = batch_df.select(
-        F.col("doc_id").alias("_id"),
-        F.col("lang").alias("_lang"),
-        F.explode(
-            F.array_distinct(word_shingles(F.col("text"), 2))
-        ).alias("_tok"),
-    ).distinct()
-    ptr = os.path.join(state_path, "_LATEST")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            rev = f.read().strip()
-        cur = spark.read.parquet(
-            os.path.join(state_path, f"rev={rev}", "toks")
-        )
-        merged = cur.unionByName(part).distinct()
-    else:
-        merged = part
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    merged.write.mode("overwrite").parquet(os.path.join(rev_dir, "toks"))
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, ptr)
+    def step(batch_df: DataFrame, cur: "dict[str, Any]") -> "dict[str, Any]":
+        part = batch_df.select(
+            F.col("doc_id").alias("_id"),
+            F.col("lang").alias("_lang"),
+            F.explode(
+                F.array_distinct(word_shingles(F.col("text"), 2))
+            ).alias("_tok"),
+        ).distinct()
+        if cur["toks"] is None:
+            return {"toks": part}
+        return {"toks": cur["toks"].unionByName(part).distinct()}
+
+    _commit(batch_df, batch_id, state_path, step, ("toks",))
 
 
 def incremental_alignment_state(stream: DataFrame, state_path: str) -> "Any":
@@ -1799,15 +1674,10 @@ def incremental_alignment_state(stream: DataFrame, state_path: str) -> "Any":
     until the stream drains, so the minimal sufficient state is the
     membership table, and deriving anchors at read time is what
     makes drained-equals-batch exact rather than approximate."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        alignment_apply_batch(batch_df, batch_id, state_path)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: alignment_apply_batch(df, i, state_path),
     )
 
 
@@ -1817,18 +1687,9 @@ def alignment_from_state(
     """The d41 report over the streaming-maintained membership state
     — same operator code (crosslingual_align_from_tokens with the
     d41 entry's parameters), same output columns."""
-    import os
-
     from zappy_spark.operators.dedup import crosslingual_align_from_tokens
 
-    ptr = os.path.join(state_path, "_LATEST")
-    if not os.path.exists(ptr):
-        raise ValueError(f"no alignment state at {state_path}")
-    with open(ptr) as f:
-        rev = f.read().strip()
-    toks = spark.read.parquet(
-        os.path.join(state_path, f"rev={rev}", "toks")
-    )
+    toks = _committed(spark, state_path, "alignment", ("toks",))["toks"]
     return (
         crosslingual_align_from_tokens(
             toks, id_col="doc_id", lang_col="lang", n_anchor=1
@@ -1847,65 +1708,43 @@ def kappa_apply_batch(
     """One ``incremental_kappa_state`` micro-batch: per lang, the
     additive sufficient statistics of the t35 agreement audit — n,
     n_agree, and both raters' class marginals (a0..a2 / b0..b2).
-    All-integer addition, so merges are exact and drain-order-free;
-    redelivered batch ids are guarded like the RFM/centroid twins.
+    All-integer addition, so merges are exact and drain-order-free.
     The rater expressions mirror the t35 builder spelling
     (queries/pipeline_ops.py) — the drained-equals-batch test pins
     the two against each other, so a drift fails loudly."""
-    import os
 
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
-    spark = batch_df.sparkSession
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    ca = (
-        F.when(F.col("n_chars") < 216, 0)
-        .when(F.col("n_chars") < 374, 1)
-        .otherwise(2)
-    )
-    cb = (
-        F.when(F.col("_nt") < 39, 0)
-        .when(F.col("_nt") < 69, 1)
-        .otherwise(2)
-    )
-    g = batch_df.select(
-        "lang", "n_chars", F.size(toks).alias("_nt")
-    ).select("lang", ca.alias("_a"), cb.alias("_b"))
-    aggs = [
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(
-            (F.col("_a") == F.col("_b")).cast("bigint")
-        ).alias("n_agree"),
-    ]
-    for k in range(3):
-        aggs.append(
-            F.sum((F.col("_a") == k).cast("bigint")).alias(f"a{k}")
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        ca = (
+            F.when(F.col("n_chars") < 216, 0)
+            .when(F.col("n_chars") < 374, 1)
+            .otherwise(2)
         )
-        aggs.append(
-            F.sum((F.col("_b") == k).cast("bigint")).alias(f"b{k}")
+        cb = (
+            F.when(F.col("_nt") < 39, 0)
+            .when(F.col("_nt") < 69, 1)
+            .otherwise(2)
         )
-    part = g.groupBy("lang").agg(*aggs)
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("lang")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _KAPPA_COUNT_COLS
-                ]
+        g = batch_df.select(
+            "lang", "n_chars", F.size(toks).alias("_nt")
+        ).select("lang", ca.alias("_a"), cb.alias("_b"))
+        aggs = [
+            F.count("*").cast("bigint").alias("n"),
+            F.sum(
+                (F.col("_a") == F.col("_b")).cast("bigint")
+            ).alias("n_agree"),
+        ]
+        for k in range(3):
+            aggs.append(
+                F.sum((F.col("_a") == k).cast("bigint")).alias(f"a{k}")
             )
-        )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+            aggs.append(
+                F.sum((F.col("_b") == k).cast("bigint")).alias(f"b{k}")
+            )
+        part = g.groupBy("lang").agg(*aggs)
+        return _sum_counts(cur, part, ["lang"], _KAPPA_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_kappa_state(stream: DataFrame, state_path: str) -> "Any":
@@ -1913,15 +1752,8 @@ def incremental_kappa_state(stream: DataFrame, state_path: str) -> "Any":
     agreement monitor a labeling pipeline runs CONTINUOUSLY as
     annotations arrive, instead of re-scanning the corpus — state is
     eight integer counters per lang, mergeable forever."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kappa_apply_batch(batch_df, batch_id, state_path)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    return _start(
+        stream, state_path, lambda df, i: kappa_apply_batch(df, i, state_path)
     )
 
 
@@ -1942,37 +1774,14 @@ def stopword_apply_batch(
     flag is the same integer cross-multiplication, decided inside
     the batch, so partials are exactly additive). Reuses the t41
     operator itself (operators/text.py::stopword_coverage) for the
-    partial, so batch and stream cannot drift in spelling;
-    redelivered batch ids are guarded like the kappa twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    partial, so batch and stream cannot drift in spelling."""
     from zappy_spark.operators.text import stopword_coverage
 
-    spark = batch_df.sparkSession
-    part = stopword_coverage(batch_df, "text", "lang")
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("lang")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _STOPWORD_COUNT_COLS
-                ]
-            )
-        )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        part = stopword_coverage(batch_df, "text", "lang")
+        return _sum_counts(cur, part, ["lang"], _STOPWORD_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_stopword_state(
@@ -1981,34 +1790,28 @@ def incremental_stopword_state(
     """Streaming twin of t41's stopword-coverage audit: the
     language-quality monitor a crawl pipeline runs continuously as
     pages arrive — four integer counters per lang, mergeable
-    forever, same MVCC rev-dir snapshot as the kappa twin."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stopword_apply_batch(batch_df, batch_id, state_path)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    forever."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: stopword_apply_batch(df, i, state_path),
     )
 
 
 def stopword_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The t41 report over the streaming-maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no stopword state at {state_path}")
-    return per.select("lang", *_STOPWORD_COUNT_COLS).orderBy("lang")
+    return (
+        _committed(spark, state_path, "stopword")
+        .select("lang", *_STOPWORD_COUNT_COLS)
+        .orderBy("lang")
+    )
 
 
 def kappa_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The t35 report over the streaming-maintained counters: kappa
     as the same exact integer fraction (num = n*agree - sum rc,
     den = n^2 - sum rc)."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no kappa state at {state_path}")
+    per = _committed(spark, state_path, "kappa")
     src = sum(F.col(f"a{k}") * F.col(f"b{k}") for k in range(3))
     return per.select(
         "lang",
@@ -2043,39 +1846,16 @@ def filter_ledger_apply_batch(
     it depends only on the document and the partials are exactly
     additive. The partial IS the v29 scoring operator
     (operators/training.py::logreg_score_ledger with weights), so
-    batch and stream cannot drift in spelling; redelivered batch
-    ids are guarded like the stopword/kappa twins."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    batch and stream cannot drift in spelling."""
     from zappy_spark.operators.training import logreg_score_ledger
 
-    spark = batch_df.sparkSession
-    part = logreg_score_ledger(
-        batch_df, "text", "source", "n_chars", weights=weights
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _FILTER_COUNT_COLS
-                ]
-            )
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        part = logreg_score_ledger(
+            batch_df, "text", "source", "n_chars", weights=weights
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source"], _FILTER_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_filter_state(
@@ -2085,29 +1865,24 @@ def incremental_filter_state(
     quality-filter DRIFT monitor a crawl pipeline runs continuously
     — if a source's keep fraction or kept-bytes share moves, the
     upstream distribution changed under the deployed classifier.
-    Four integer counters per source, mergeable forever, same MVCC
-    rev-dir snapshot as the stopword/kappa twins; the trained
+    Four integer counters per source, mergeable forever; the trained
     weights are fixed literals for the life of the deployment (a
     retrain is a NEW state path, never an in-place mutation — the
     counters are only additive under a fixed model)."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        filter_ledger_apply_batch(batch_df, batch_id, state_path, weights)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: filter_ledger_apply_batch(df, i, state_path, weights),
     )
 
 
 def filter_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The v29 ledger over the streaming-maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no filter-ledger state at {state_path}")
-    return per.select("source", *_FILTER_COUNT_COLS).orderBy("source")
+    return (
+        _committed(spark, state_path, "filter-ledger")
+        .select("source", *_FILTER_COUNT_COLS)
+        .orderBy("source")
+    )
 
 
 # ---- streaming twin of t47's unigram piece-usage ledger ----
@@ -2124,35 +1899,16 @@ def piece_usage_apply_batch(
     (source, piece), the additive usage counts of the trained
     unigram tokenizer — the partial IS
     operators/text.py::unigram_usage_ledger at the FIXED piece
-    table, so batch and stream cannot drift in spelling (the
-    filter-ledger/stopword/kappa doctrine); redelivered batch ids
-    are guarded identically."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    table, so batch and stream cannot drift in spelling."""
     from zappy_spark.operators.text import unigram_usage_ledger
 
-    spark = batch_df.sparkSession
-    part = unigram_usage_ledger(
-        batch_df, "text", "source", costs, max_piece_len
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source", "piece")
-            .agg(F.sum("n_used").cast("bigint").alias("n_used"))
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        part = unigram_usage_ledger(
+            batch_df, "text", "source", costs, max_piece_len
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source", "piece"], ["n_used"])
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_piece_usage_state(
@@ -2167,21 +1923,15 @@ def incremental_piece_usage_state(
     (new dominant pieces, rising off-table chars), the upstream
     text shifted under the deployed tokenizer and a retrain is
     due. One exact BIGINT counter per (source, piece), mergeable
-    forever, same MVCC rev-dir snapshot + replay guard as the
-    quality-filter twin; the trained piece table is FIXED for the
-    life of the deployment (a retrain is a NEW state path — the
-    counters are only additive under a fixed tokenizer)."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        piece_usage_apply_batch(
-            batch_df, batch_id, state_path, costs, max_piece_len
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    forever; the trained piece table is FIXED for the life of the
+    deployment (a retrain is a NEW state path — the counters are
+    only additive under a fixed tokenizer)."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: piece_usage_apply_batch(
+            df, i, state_path, costs, max_piece_len
+        ),
     )
 
 
@@ -2189,11 +1939,10 @@ def piece_usage_from_state(
     spark: SparkSession, state_path: str
 ) -> DataFrame:
     """The t47 usage ledger over the streaming-maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no piece-usage state at {state_path}")
-    return per.select("source", "piece", "n_used").orderBy(
-        "source", "piece"
+    return (
+        _committed(spark, state_path, "piece-usage")
+        .select("source", "piece", "n_used")
+        .orderBy("source", "piece")
     )
 
 
@@ -2218,40 +1967,17 @@ def ppl_ledger_apply_batch(
     path), so the per-document verdict depends only on the document
     and the counters are exactly additive. The partial IS
     operators/text.py::xcorpus_ledger_with_model, so batch/stream
-    spelling drift is structurally impossible; redelivered batch
-    ids are guarded like every twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    spelling drift is structurally impossible."""
     from zappy_spark.operators.text import xcorpus_ledger_with_model
 
-    spark = batch_df.sparkSession
-    model = spark.read.parquet(model_path)
-    part = xcorpus_ledger_with_model(
-        batch_df, "text", "doc_id", "source", model, ppl_cutoff
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _PPL_COUNT_COLS
-                ]
-            )
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        model = batch_df.sparkSession.read.parquet(model_path)
+        part = xcorpus_ledger_with_model(
+            batch_df, "text", "doc_id", "source", model, ppl_cutoff
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source"], _PPL_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_ppl_state(
@@ -2265,29 +1991,24 @@ def incremental_ppl_state(
     reference LM — if a source's keep fraction moves under the
     fixed model, the upstream text distribution changed and the
     reference slice is due a refresh. Four integer counters per
-    source, mergeable forever, same MVCC rev-dir snapshot + replay
-    guard as the filter/stopword/kappa/piece-usage twins."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ppl_ledger_apply_batch(
-            batch_df, batch_id, state_path, model_path, ppl_cutoff
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    source, mergeable forever."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: ppl_ledger_apply_batch(
+            df, i, state_path, model_path, ppl_cutoff
+        ),
     )
 
 
 def ppl_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The fixed-model perplexity ledger over the streaming-
     maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no ppl-ledger state at {state_path}")
-    return per.select("source", *_PPL_COUNT_COLS).orderBy("source")
+    return (
+        _committed(spark, state_path, "ppl-ledger")
+        .select("source", *_PPL_COUNT_COLS)
+        .orderBy("source")
+    )
 
 
 # ---- streaming twin of t48's fixed-model discounted ledger ----
@@ -2311,40 +2032,17 @@ def absdisc_ledger_apply_batch(
     verdict depends only on the document and the counters are
     exactly additive. The partial IS
     operators/text.py::absdisc_ledger_with_model, so batch/stream
-    spelling drift is structurally impossible; redelivered batch
-    ids are guarded like every twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    spelling drift is structurally impossible."""
     from zappy_spark.operators.text import absdisc_ledger_with_model
 
-    spark = batch_df.sparkSession
-    model = spark.read.parquet(model_path)
-    part = absdisc_ledger_with_model(
-        batch_df, "text", "doc_id", "source", model, ppl_cutoff
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _PPL_COUNT_COLS
-                ]
-            )
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        model = batch_df.sparkSession.read.parquet(model_path)
+        part = absdisc_ledger_with_model(
+            batch_df, "text", "doc_id", "source", model, ppl_cutoff
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source"], _PPL_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_absdisc_state(
@@ -2357,29 +2055,24 @@ def incremental_absdisc_state(
     perplexity drift monitor at a FIXED stored two-table model —
     the estimator family production actually ships (t46's add-one
     twin is the baseline sibling). Four integer counters per
-    source, mergeable forever, same MVCC rev-dir snapshot + replay
-    guard as the filter/stopword/kappa/piece-usage/ppl twins."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        absdisc_ledger_apply_batch(
-            batch_df, batch_id, state_path, model_path, ppl_cutoff
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    source, mergeable forever."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: absdisc_ledger_apply_batch(
+            df, i, state_path, model_path, ppl_cutoff
+        ),
     )
 
 
 def absdisc_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The fixed-model discounted-perplexity ledger over the
     streaming-maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no absdisc-ledger state at {state_path}")
-    return per.select("source", *_PPL_COUNT_COLS).orderBy("source")
+    return (
+        _committed(spark, state_path, "absdisc-ledger")
+        .select("source", *_PPL_COUNT_COLS)
+        .orderBy("source")
+    )
 
 
 # ---- streaming twin of t49's fixed-model Kneser–Ney ledger ----
@@ -2401,40 +2094,17 @@ def kn_ledger_apply_batch(
     ``absdisc_fit_model`` writes — one artifact, two estimator
     families. The partial IS
     operators/text.py::kn_ledger_with_model, so batch/stream
-    spelling drift is structurally impossible; redelivered batch
-    ids are guarded like every twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    spelling drift is structurally impossible."""
     from zappy_spark.operators.text import kn_ledger_with_model
 
-    spark = batch_df.sparkSession
-    model = spark.read.parquet(model_path)
-    part = kn_ledger_with_model(
-        batch_df, "text", "doc_id", "source", model, ppl_cutoff
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _PPL_COUNT_COLS
-                ]
-            )
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        model = batch_df.sparkSession.read.parquet(model_path)
+        part = kn_ledger_with_model(
+            batch_df, "text", "doc_id", "source", model, ppl_cutoff
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source"], _PPL_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_kn_state(
@@ -2448,29 +2118,24 @@ def incremental_kn_state(
     the last rung of the ladder, sharing its artifact with the
     absdisc twin so 'which smoothing family' is a monitor config,
     not a retrain. Four integer counters per source, mergeable
-    forever, same MVCC rev-dir snapshot + replay guard as every
-    twin."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kn_ledger_apply_batch(
-            batch_df, batch_id, state_path, model_path, ppl_cutoff
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    forever."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: kn_ledger_apply_batch(
+            df, i, state_path, model_path, ppl_cutoff
+        ),
     )
 
 
 def kn_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The fixed-model interpolated-KN ledger over the streaming-
     maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no kn-ledger state at {state_path}")
-    return per.select("source", *_PPL_COUNT_COLS).orderBy("source")
+    return (
+        _committed(spark, state_path, "kn-ledger")
+        .select("source", *_PPL_COUNT_COLS)
+        .orderBy("source")
+    )
 
 
 # ---- streaming twin of d52's content-defined chunk dedup ----
@@ -2489,48 +2154,33 @@ def cdc_apply_batch(
     production CDC dedup system maintains. Chunking is per-document
     (no cross-doc dependency), so the counters are additive by
     construction; the partial IS operators/dedup.py::cdc_chunks, so
-    batch/stream spelling drift is structurally impossible.
-    Redelivered batch ids are guarded like every twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    batch/stream spelling drift is structurally impossible."""
     from zappy_spark.operators.dedup import cdc_chunks
 
-    spark = batch_df.sparkSession
-    part = (
-        cdc_chunks(batch_df, "text", "doc_id", k=k, mask=mask)
-        .join(
-            batch_df.select(
-                F.col("doc_id").alias("_jid"), F.col("source")
-            ),
-            F.col("doc_id") == F.col("_jid"),
-        )
-        .groupBy("source", "chunk_hash")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.min("chunk_len").cast("bigint").alias("chunk_len"),
-        )
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
         part = (
-            cur.unionByName(part)
+            cdc_chunks(batch_df, "text", "doc_id", k=k, mask=mask)
+            .join(
+                batch_df.select(
+                    F.col("doc_id").alias("_jid"), F.col("source")
+                ),
+                F.col("doc_id") == F.col("_jid"),
+            )
             .groupBy("source", "chunk_hash")
             .agg(
-                F.sum("n").cast("bigint").alias("n"),
+                F.count("*").cast("bigint").alias("n"),
                 F.min("chunk_len").cast("bigint").alias("chunk_len"),
             )
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _merge(
+            cur,
+            part,
+            ["source", "chunk_hash"],
+            F.sum("n").cast("bigint").alias("n"),
+            F.min("chunk_len").cast("bigint").alias("chunk_len"),
+        )
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_cdc_state(
@@ -2545,17 +2195,11 @@ def incremental_cdc_state(
     joined the feed) and the dedup stage ahead of training must
     tighten. State = the (source, chunk_hash) occurrence index with
     exact BIGINT counters, mergeable forever under the FIXED (k,
-    mask) chunking config (a re-chunk is a NEW state path); same
-    MVCC rev-dir snapshot + replay guard as every twin."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cdc_apply_batch(batch_df, batch_id, state_path, k=k, mask=mask)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    mask) chunking config (a re-chunk is a NEW state path)."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: cdc_apply_batch(df, i, state_path, k, mask),
     )
 
 
@@ -2567,9 +2211,7 @@ def cdc_ledger_from_state(
     chunk_hash, an instance duplicated when that sum > 1 — the same
     definition the batch operator applies, so a drained changelog
     equals the batch ledger exactly."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no cdc state at {state_path}")
+    per = _committed(spark, state_path, "cdc")
     occ = per.groupBy("chunk_hash").agg(F.sum("n").alias("_occ"))
     j = per.join(occ, "chunk_hash")
     dup = (F.col("_occ") > 1).cast("bigint")
@@ -2611,40 +2253,17 @@ def nb_ledger_apply_batch(
     the per-document verdict depends only on the document and the
     counters are exactly additive. The partial IS
     operators/training.py::nb_eval_with_model, so batch/stream
-    spelling drift is structurally impossible; redelivered batch
-    ids are guarded like every twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    spelling drift is structurally impossible."""
     from zappy_spark.operators.training import nb_eval_with_model
 
-    spark = batch_df.sparkSession
-    model = spark.read.parquet(model_path)
-    part = nb_eval_with_model(
-        batch_df, "text", "doc_id", "source", model, holdout_frac
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _NB_COUNT_COLS
-                ]
-            )
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        model = batch_df.sparkSession.read.parquet(model_path)
+        part = nb_eval_with_model(
+            batch_df, "text", "doc_id", "source", model, holdout_frac
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source"], _NB_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_nb_state(
@@ -2657,30 +2276,24 @@ def incremental_nb_state(
     drift monitor at a FIXED stored naive-Bayes model — if a
     source's holdout confusion moves under the fixed model, the
     upstream text distribution changed and the model is due a
-    retrain. Five integer counters per source, mergeable forever,
-    same MVCC rev-dir snapshot + replay guard as the
-    filter/stopword/kappa/piece-usage/ppl twins."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        nb_ledger_apply_batch(
-            batch_df, batch_id, state_path, model_path, holdout_frac
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    retrain. Five integer counters per source, mergeable forever."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: nb_ledger_apply_batch(
+            df, i, state_path, model_path, holdout_frac
+        ),
     )
 
 
 def nb_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The fixed-model naive-Bayes confusion ledger over the
     streaming-maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no nb state at {state_path}")
-    return per.select("source", *_NB_COUNT_COLS).orderBy("source")
+    return (
+        _committed(spark, state_path, "nb")
+        .select("source", *_NB_COUNT_COLS)
+        .orderBy("source")
+    )
 
 
 # ---- streaming twin of v34's fixed-weight AUC evaluation ----
@@ -2701,43 +2314,22 @@ def auc_hist_apply_batch(
     NOT additive and are therefore derived from state at read time
     (auc_from_hist — the same helper the batch evaluator uses).
     The partial IS operators/training.py::auc_score_hist, so
-    batch/stream spelling drift is structurally impossible;
-    redelivered batch ids are guarded like every twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    batch/stream spelling drift is structurally impossible."""
     from zappy_spark.operators.training import auc_score_hist
 
-    spark = batch_df.sparkSession
-    wrow = spark.read.parquet(weights_path).collect()
-    if len(wrow) != 1:
-        raise ValueError(
-            f"weights table must have exactly 1 row, got {len(wrow)}"
-        )
-    w = [wrow[0]["w0"], wrow[0]["w1"], wrow[0]["w2"], wrow[0]["w3"]]
-    part = auc_score_hist(
-        batch_df, "text", "doc_id", "source", w, holdout_frac
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source", "_z")
-            .agg(
-                F.sum("_n1").cast("bigint").alias("_n1"),
-                F.sum("_n0").cast("bigint").alias("_n0"),
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        wrow = batch_df.sparkSession.read.parquet(weights_path).collect()
+        if len(wrow) != 1:
+            raise ValueError(
+                f"weights table must have exactly 1 row, got {len(wrow)}"
             )
+        w = [wrow[0]["w0"], wrow[0]["w1"], wrow[0]["w2"], wrow[0]["w3"]]
+        part = auc_score_hist(
+            batch_df, "text", "doc_id", "source", w, holdout_frac
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source", "_z"], ["_n1", "_n0"])
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_auc_state(
@@ -2751,20 +2343,13 @@ def incremental_auc_state(
     AUC moves under the fixed model, the upstream text distribution
     changed and the model is due a retrain. State is the additive
     (source, z) class histogram (score range ≅ dozens of rows, the
-    clipped-feature bound), mergeable forever; same MVCC rev-dir
-    snapshot + replay guard as every twin."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        auc_hist_apply_batch(
-            batch_df, batch_id, state_path, weights_path,
-            holdout_frac,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    clipped-feature bound), mergeable forever."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: auc_hist_apply_batch(
+            df, i, state_path, weights_path, holdout_frac
+        ),
     )
 
 
@@ -2774,9 +2359,7 @@ def auc_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     derivation, no spelling drift)."""
     from zappy_spark.operators.training import auc_from_hist
 
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no auc state at {state_path}")
+    per = _committed(spark, state_path, "auc")
     return auc_from_hist(per, "source").orderBy("source")
 
 
@@ -2802,40 +2385,17 @@ def kn3_ledger_apply_batch(
     the per-document verdict depends only on the document and the
     counters are exactly additive. The partial IS
     operators/text.py::kn3_ledger_with_model, so batch/stream
-    spelling drift is structurally impossible; redelivered batch
-    ids are guarded like every twin."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    last = applied_revision(state_path)
-    if last is not None and last >= batch_id:
-        return
+    spelling drift is structurally impossible."""
     from zappy_spark.operators.text import kn3_ledger_with_model
 
-    spark = batch_df.sparkSession
-    model = spark.read.parquet(model_path)
-    part = kn3_ledger_with_model(
-        batch_df, "text", "doc_id", "source", model, ppl_cutoff
-    )
-    cur = latest_snapshot(spark, state_path)
-    if cur is not None:
-        part = (
-            cur.unionByName(part)
-            .groupBy("source")
-            .agg(
-                *[
-                    F.sum(c).cast("bigint").alias(c)
-                    for c in _PPL_COUNT_COLS
-                ]
-            )
+    def step(batch_df: DataFrame, cur: "DataFrame | None") -> DataFrame:
+        model = batch_df.sparkSession.read.parquet(model_path)
+        part = kn3_ledger_with_model(
+            batch_df, "text", "doc_id", "source", model, ppl_cutoff
         )
-    rev_dir = os.path.join(state_path, f"rev={batch_id}")
-    part.write.mode("overwrite").parquet(rev_dir)
-    tmp = os.path.join(state_path, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(state_path, "_LATEST"))
+        return _sum_counts(cur, part, ["source"], _PPL_COUNT_COLS)
+
+    _commit(batch_df, batch_id, state_path, step)
 
 
 def incremental_kn3_state(
@@ -2846,27 +2406,21 @@ def incremental_kn3_state(
 ) -> "Any":
     """Streaming twin of t53's deploy side: the trigram-KN
     perplexity drift monitor at a FIXED stored model — four
-    integer counters per source, mergeable forever, same MVCC
-    rev-dir snapshot + replay guard as the
-    filter/stopword/kappa/piece-usage/ppl/absdisc/kn twins."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kn3_ledger_apply_batch(
-            batch_df, batch_id, state_path, model_path, ppl_cutoff
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", state_path + "_ckpt")
-        .start()
+    integer counters per source, mergeable forever."""
+    return _start(
+        stream,
+        state_path,
+        lambda df, i: kn3_ledger_apply_batch(
+            df, i, state_path, model_path, ppl_cutoff
+        ),
     )
 
 
 def kn3_from_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The fixed-model trigram-KN ledger over the streaming-
     maintained counters."""
-    per = latest_snapshot(spark, state_path)
-    if per is None:
-        raise ValueError(f"no kn3 state at {state_path}")
-    return per.select("source", *_PPL_COUNT_COLS).orderBy("source")
+    return (
+        _committed(spark, state_path, "kn3-ledger")
+        .select("source", *_PPL_COUNT_COLS)
+        .orderBy("source")
+    )
