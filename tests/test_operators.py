@@ -5024,7 +5024,11 @@ def test_perplexity_empty_reference_raises(spark):
     import pytest
 
     from zappy_spark.operators.text import (
+        absdisc_ledger_with_model,
         absdisc_perplexity_ledger,
+        kn3_ledger_with_model,
+        kn3_perplexity_ledger,
+        kn_ledger_with_model,
         kneser_ney_perplexity_ledger,
         xcorpus_ledger_with_model,
         xcorpus_perplexity_ledger,
@@ -5036,16 +5040,23 @@ def test_perplexity_empty_reference_raises(spark):
         xcorpus_perplexity_ledger,
         absdisc_perplexity_ledger,
         kneser_ney_perplexity_ledger,
+        kn3_perplexity_ledger,
     ):
         with pytest.raises(Exception, match="empty reference slice/model"):
             fn(
                 df, "text", "doc_id", "source", ref_frac=0.0, ppl_cutoff=2.0
             ).collect()
-    empty_model = spark.createDataFrame([], "gram string, bc bigint")
-    with pytest.raises(Exception, match="empty reference slice/model"):
-        xcorpus_ledger_with_model(
-            df, "text", "doc_id", "source", empty_model, ppl_cutoff=2.0
-        ).collect()
+    for fn, schema in (
+        (xcorpus_ledger_with_model, "gram string, bc bigint"),
+        (absdisc_ledger_with_model, "kind string, gram string, c bigint"),
+        (kn_ledger_with_model, "kind string, gram string, c bigint"),
+        (kn3_ledger_with_model, "kind string, g string, c bigint"),
+    ):
+        empty_model = spark.createDataFrame([], schema)
+        with pytest.raises(Exception, match="empty reference slice/model"):
+            fn(
+                df, "text", "doc_id", "source", empty_model, ppl_cutoff=2.0
+            ).collect()
 
 
 def test_filter_agreement_grid_accounts_for_every_scored_doc(spark):
@@ -6446,8 +6457,8 @@ def test_kn3_doc_nll_pure_python_replay(spark):
     )
     from zappy_spark.operators.text import (
         T53_PARAMS,
-        _kn3_doc_nll,
-        _kn3_docs,
+        _KN3 as _kn3_doc_nll,
+        _docs as _kn3_docs,
     )
 
     texts = [
@@ -6535,6 +6546,94 @@ def test_kn3_doc_nll_pure_python_replay(spark):
         assert abs(got[i] - nll) < 1e-9, i
     # the fixture must actually exercise every tier
     assert {"tri", "p2"} <= tiers, tiers
+
+
+def test_bigram_doc_nll_pure_python_replay(spark):
+    """Per-document nll of the three bigram rungs (t46 add-one, t48
+    absolute discounting, t49 Kneser–Ney) vs a pure-Python replay on a
+    hand corpus whose scored documents hit every tier: a bigram seen
+    in the reference, an unseen bigram in a seen context, and an
+    unseen context."""
+    import math
+    from collections import Counter, defaultdict
+
+    from zappy_spark.operators.sampling import (
+        _hash_key,
+        sample_threshold,
+    )
+    from zappy_spark.operators.text import (
+        T53_PARAMS,
+        _ABSDISC,
+        _ADD1,
+        _KN,
+        _docs,
+    )
+
+    texts = [
+        "a b c a b d",
+        "b c d a",
+        "c a b b",
+        "d d a c",
+        "x y a b",
+    ]
+    rows = [
+        (
+            i,
+            "g",
+            # per-doc-unique tail: its first bigram has a seen context
+            # but is unseen, its second has an unseen context
+            texts[i % len(texts)] + (f" u{i} v{i}" if i >= 30 else ""),
+        )
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "src", "text"])
+    docs = _docs(df, "text", "doc_id", "src", 0.5)
+    ref_ids = {
+        r["doc_id"]
+        for r in df.filter(
+            _hash_key("doc_id") < sample_threshold(0.5)
+        ).collect()
+    }
+    toks = {i: t.split(" ") for i, _, t in rows}
+    big = {i: list(zip(toks[i], toks[i][1:])) for i in toks}
+    bc = Counter(g for i in ref_ids for g in big[i])
+    uni = Counter(w for i in ref_ids for w in toks[i])
+    cc, n1p, cont = Counter(), Counter(), Counter()
+    for (w1, w2), c in bc.items():
+        cc[w1] += c
+        n1p[w1] += 1
+        cont[w2] += 1
+    D = float(T53_PARAMS["discount"])
+    tiers = defaultdict(set)
+
+    def discounted(name, w1, w2, backoff):
+        if w1 not in cc:
+            tiers[name].add("context")
+            return backoff
+        tiers[name].add("seen" if (w1, w2) in bc else "unseen")
+        return (max(bc[(w1, w2)] - D, 0) + D * n1p[w1] * backoff) / cc[w1]
+
+    probs = {
+        "add1": lambda w1, w2: (bc[(w1, w2)] + 1.0) / (cc[w1] + len(cc)),
+        "absdisc": lambda w1, w2: discounted(
+            "absdisc", w1, w2,
+            (uni[w2] + 1.0) / (sum(uni.values()) + len(uni)),
+        ),
+        "kn": lambda w1, w2: discounted(
+            "kn", w1, w2, (cont[w2] + 1.0) / (len(bc) + len(uni))
+        ),
+    }
+    for name, lm in (("add1", _ADD1), ("absdisc", _ABSDISC), ("kn", _KN)):
+        got = {r["_id"]: r["_nll"] for r in lm(docs).collect()}
+        assert set(got) == set(toks) - ref_ids, name
+        for i, nll in got.items():
+            cs = Counter(big[i])
+            want = -sum(
+                c * math.log(probs[name](*g)) for g, c in cs.items()
+            ) / sum(cs.values())
+            assert abs(nll - want) < 1e-9, (name, i)
+    for name in ("absdisc", "kn"):
+        assert tiers[name] == {"seen", "unseen", "context"}, tiers
 
 
 def test_kn3_fit_model_roundtrip_matches_in_pass_verdicts(

@@ -9,6 +9,9 @@ the hot path — so a 100 TB corpus pays one pass per operator.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
@@ -1026,116 +1029,137 @@ def bigram_nll(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-# t46 cross-corpus perplexity filter: the single shared definition
-# of (reference fraction, perplexity cutoff, add-k) used by the
-# operator default, the corpus entry, its oracle, and the margin
-# pin — the d50 precedent for parameter drift.
+# The reference-slice perplexity ladder (the CCNet setup): t46
+# add-one bigram → t48 absolute discounting → t49 bigram Kneser–Ney →
+# t53 trigram Kneser–Ney. Each rung is an ``_LM``: its gram order, its
+# fit (reference-slice docs → the stored artifact ``*_fit_model``
+# returns), the read of its scoring tables from that artifact, and its
+# probability Column. Every operator below is one of two paths over an
+# ``_LM``: in-pass (fit on the md5-keyed reference slice, score the
+# rest) or with-model (score every document against a stored
+# artifact); both score through ``_doc_nll`` and verdict through
+# ``_keep_drop_ledger``.
+#
+# Exactness: every model quantity is an exact BIGINT count, each
+# probability is a handful of IEEE ops on sub-2^53 integers spelled in
+# the SAME operator order as the DuckDB oracles (queries/
+# pipeline_ops.py), and the per-document sum's partial-order residue
+# (~1e-13) is absorbed by each cutoff's calibrated margin (the
+# T*_PARAMS records and the margin tests). Every ledger column is an
+# exact BIGINT; n_short counts documents with no n-gram, so the ledger
+# accounts for every document.
+#
+# Scale: one corpus scan feeds the (doc, gram) hash agg; the model is
+# a gram-keyed agg of the reference rows, and the tables derived from
+# it are bounded aggregates; scoring joins carry counts only, never
+# text; the 1-row constants are a broadcast; no doc-keyed join.
+
+# t46 add-one: the single shared definition of (reference fraction,
+# perplexity cutoff) used by the operator default, the corpus entry,
+# its oracle, and the margin pin — the d50 precedent for parameter
+# drift. The nearest document sits >= 1.2e-5 from ln(30.5) across all
+# 3 SFs and both synth fixtures.
 T46_PARAMS: dict[str, float] = {
     "ref_frac": 0.25,
     "ppl_cutoff": 30.5,
 }
 
+# t48 absolute discounting (the T46_PARAMS precedent); margin >= 4.6e-4
+# at cutoff 28.5 across all 3 SFs and both fixtures.
+T48_PARAMS: dict[str, float] = {
+    "ref_frac": 0.25,
+    "ppl_cutoff": 28.5,
+}
 
-def xcorpus_perplexity_ledger(
+# t49 bigram Kneser–Ney. The cutoff was chosen by a gap scan over the
+# merged nll distribution of all 3 SFs + both synth fixtures (~416k
+# scored docs): ln(45.5) sits in a real inter-cluster gap — nearest
+# document >= 8.5e-3 on every dataset — and the split is non-vacuous
+# at every scale the drop branch is verified at (sf0.01 2 drops, sf0.1
+# 5, 10x 181, 100x 1923; sf0.001's 360 eval docs all keep). Mid-range
+# "balanced" cutoffs were rejected by the same scan: the densest
+# achievable margin there is ~6.5e-6 at the 100x fixture — a
+# float-vs-hash coin flip, the failure the margin discipline exists to
+# engineer away.
+T49_PARAMS: dict[str, float] = {
+    "ref_frac": 0.25,
+    "ppl_cutoff": 45.5,
+}
+
+# t53 trigram Kneser–Ney, imported by the operator, the oracle builder
+# and the tests. Cutoff 39.048 (perplexity) was chosen by the same gap
+# scan: the widest interior gap is nll (3.6647322, 3.6648348) and
+# ln(39.048) = 3.66479166 sits inside it, >= 4.3e-5 from the nearest
+# document at every scale — ~8 orders above the per-doc sum's residue.
+# Keeps and drops are both non-empty at every SF (209/151 at sf0.01,
+# 369378/5265 at 100x). ``discount`` is the D every rung uses.
+T53_PARAMS: dict[str, float] = {
+    "ref_frac": 0.25,
+    "ppl_cutoff": 39.048,
+    "discount": 0.75,
+}
+
+
+def _docs(
     df: DataFrame,
     text_col: str,
     id_col: str,
     group_col: str,
-    ref_frac: float = 0.25,
-    ppl_cutoff: float = 30.5,
+    ref_frac: float | None = None,
 ) -> DataFrame:
-    """Cross-corpus perplexity filtering — the CCNet/KenLM setup
-    (round 11, VERDICT r10 item 1): unlike t20/t23 (which score
-    documents against counts from the SAME corpus), this trains an
-    add-one-smoothed bigram LM on a deterministic REFERENCE SLICE
-    and scores only the REMAINING documents with it — the
-    train/score split a production quality pipeline runs, with
-    smoothing handling n-grams the reference never saw.
-
-    The reference slice is the house md5-keyed hex-prefix rule
+    """The ladder's one scan-side select: (_id, _grp, _ref, _txt). The
+    reference flag is the house md5-keyed hex-prefix rule
     (operators/sampling.py — deterministic, engine-portable,
-    append-stable; the d07/v30 spelling), so the slice restriction
-    is STRUCTURAL on both sides: model counts aggregate only rows
-    with the ref flag, scoring only rows without it — a scored
-    document cannot leak into the model by construction.
+    append-stable), so the slice restriction is structural: the model
+    aggregates only ``_ref`` rows and scoring reads only the others.
+    With no ``ref_frac`` (stored-model scoring) no row is reference."""
+    from zappy_spark.operators.sampling import _hash_key, sample_threshold
 
-    Exactness: all model quantities are exact BIGINT counts;
-    p(w2|w1) = (c(w1 w2)+1)/(c(w1 .)+V) is ONE IEEE division of
-    sub-2^53 integers (identical on both engines), ln is one libm
-    call on that double, and the per-document sum's partial-order
-    noise (~1e-13 relative) is absorbed by the cutoff margin: the
-    keep rule compares nll to the ln(ppl_cutoff) literal, and the
-    round-11 calibration measured the nearest document >= 1.2e-5
-    from the cutoff across all 3 SFs and both synth fixtures
-    (pinned by the margin test). Every OUTPUT column is an exact
-    BIGINT (the probe discipline) — (group, n_ref, n_eval, n_short,
-    n_keep, n_drop); n_short counts unscoreable (<2-token)
-    documents so the ledger always accounts for every document.
-
-    Scale (100 TB): ONE corpus scan feeds the per-(doc, bigram)
-    hash agg (map-side combinable); the model is a second agg of
-    the ref rows on the same gram key (exchange reuse), contexts
-    reduce the model again, V is a 1-row broadcast. Scoring joins
-    counts to the model on the gram key — shuffle equi-joins
-    carrying counts only, never text — and the ledger is two
-    |groups|-row aggregates joined at |groups| rows. No doc-id-
-    keyed join anywhere; nothing all-pairs; nothing collected."""
-    import math
-
-    lncut = math.log(ppl_cutoff)
-    docs = _xcorpus_docs(df, text_col, id_col, group_col, ref_frac)
-    sc = _xcorpus_doc_nll(docs)
-    counts = docs.groupBy("_grp").agg(
-        F.sum(F.col("_ref").cast("bigint")).alias("n_ref"),
-        F.sum((~F.col("_ref")).cast("bigint")).alias("n_eval"),
-        F.sum(
-            ((~F.col("_ref")) & (F.size("_gs") == 0)).cast("bigint")
-        ).alias("n_short"),
+    ref = (
+        F.lit(False)
+        if ref_frac is None
+        else _hash_key(id_col) < sample_threshold(ref_frac)
     )
-    return _keep_drop_ledger(
-        counts, sc, group_col, lncut, ["n_ref", "n_eval", "n_short"]
-    )
-
-
-def _xcorpus_docs_ws(
-    df: "DataFrame",
-    text_col: str,
-    id_col: str,
-    group_col: str,
-    ref_frac: float,
-) -> "DataFrame":
-    """t48/t49's base frame: ``_xcorpus_docs`` plus the raw token
-    array ``_ws`` (the discounted estimators also need unigram /
-    vocabulary counts, which the add-one chain derives from
-    contexts instead) — one scan-side select, shared by both
-    in-one-pass ledgers and the v32 agreement cube."""
-    from zappy_spark.operators.dedup import word_shingles
-    from zappy_spark.operators.sampling import (
-        _hash_key,
-        sample_threshold,
-    )
-
     return df.select(
         F.col(id_col).alias("_id"),
         F.col(group_col).alias("_grp"),
-        (_hash_key(id_col) < sample_threshold(ref_frac)).alias("_ref"),
-        word_shingles(F.col(text_col), 2, filter_empty=True).alias("_gs"),
-        F.filter(F.split(F.col(text_col), " "), lambda x: x != "").alias(
+        ref.alias("_ref"),
+        F.col(text_col).alias("_txt"),
+    )
+
+
+def _grams(docs: DataFrame, n: int) -> DataFrame:
+    """``docs`` plus its order-``n`` word shingles ``_gs`` and token
+    array ``_ws`` as projected columns, so each explode and size reads
+    a column: a higher-order expression inside a Generate or an
+    aggregate would run interpreted, outside whole-stage codegen."""
+    from zappy_spark.operators.dedup import word_shingles
+
+    return docs.select(
+        "*",
+        word_shingles(F.col("_txt"), n, filter_empty=True).alias("_gs"),
+        F.filter(F.split(F.col("_txt"), " "), lambda x: x != "").alias(
             "_ws"
         ),
     )
 
 
-def _positive_or_raise(col, what: str):
-    """Lazy degenerate-case guard (round-12 ADVICE): pass the model
-    size through when positive, raise loudly when the trained
-    model/vocabulary is empty — without it V=0 turns the smoothed
-    probability into a NULL-producing division and scored documents
-    silently vanish from n_keep/n_drop, breaking the 'ledger
-    accounts for every document' invariant (same shape in every
-    perplexity-family operator). A per-row WHEN on a 1-row
-    broadcast frame: zero cost on the healthy path, no eager
-    driver job, and the raise carries the operator name."""
+def _counts(ref: DataFrame, items: str, kind: str, g: str = "gram"):
+    """Exact BIGINT count table (kind, g, c) of an exploded array."""
+    return (
+        ref.select(F.lit(kind).alias("kind"), F.explode(items).alias(g))
+        .groupBy("kind", g)
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+
+
+def _positive_or_raise(col: Column, what: str) -> Column:
+    """Pass the model size through when positive, raise naming the
+    operator when the trained model/vocabulary is empty: V=0 would turn
+    the smoothed probability into a NULL-producing division and every
+    scored document would silently vanish from n_keep/n_drop. A per-row
+    WHEN on a 1-row broadcast frame: no cost on the healthy path and no
+    eager driver job."""
     return F.when(col > 0, col).otherwise(
         F.raise_error(
             F.lit(
@@ -1147,23 +1171,133 @@ def _positive_or_raise(col, what: str):
     )
 
 
-def _keep_drop_ledger(counts, sc, group_col, lncut, count_cols):
-    """Shared keep/drop ledger assembly for the perplexity family
-    (round-12 ADVICE dedup — this block was triplicated across
-    xcorpus_perplexity_ledger / xcorpus_ledger_with_model /
-    absdisc_perplexity_ledger): verdict the per-doc nll frame at
-    ln(cutoff), left-join onto the per-group base counts (a group
-    can have zero scored docs), coalesce to exact-BIGINT zeros,
-    order by group."""
+def _add_one(count: str, total: Column, v: str) -> Column:
+    return (F.coalesce(F.col(count), F.lit(0)) + F.lit(1.0)) / (
+        total + F.col(v)
+    )
+
+
+def _discounted(count: str, total: str, n1p: str, backoff: Column):
+    """Interpolated absolute discounting, (max(c − D, 0) + D·N1+·backoff)
+    / total, falling back to ``backoff`` for an unseen context."""
+    d = F.lit(T53_PARAMS["discount"])
+    return F.when(F.col(total).isNull(), backoff).otherwise(
+        (
+            F.greatest(F.coalesce(F.col(count), F.lit(0)) - d, F.lit(0.0))
+            + d * F.col(n1p) * backoff
+        )
+        / F.col(total)
+    )
+
+
+@dataclass(frozen=True)
+class _LM:
+    """One rung of the ladder. ``name`` is what the in-pass V guard
+    raises with; ``fit`` maps reference-slice ``_grams`` rows to the
+    stored artifact; ``tables`` reads (left-joined tables with their
+    keys, 1-row constants) from an artifact; ``p`` is the
+    probability."""
+
+    name: str
+    n: int
+    fit: Callable[[DataFrame], DataFrame]
+    tables: Callable[[DataFrame, str], tuple[list, DataFrame]]
+    p: Callable[[], Column]
+
+    def __call__(self, docs: DataFrame) -> DataFrame:
+        """In-pass per-document scores (_id, _grp, _nll) of ``_docs``
+        rows: fit on the reference slice, score the rest."""
+        return self.score(_grams(docs, self.n))
+
+    def score(
+        self, grams: DataFrame, model: DataFrame | None = None, what=""
+    ) -> DataFrame:
+        """Per-document scores of the non-reference ``_grams`` rows
+        against a stored ``model``, or, with none, against the model
+        fit on the reference rows."""
+        if model is None:
+            # The model feeds every derived table and the scoring join;
+            # the lazy checkpoint makes them read one materialization
+            # (inside the consuming action) instead of each re-running
+            # the corpus scan + shingle + aggregate chain.
+            model = self.fit(grams.filter(F.col("_ref"))).localCheckpoint(
+                eager=False
+            )
+            what = self.name
+        return _doc_nll(grams, self, self.tables(model, what))
+
+
+def _doc_nll(grams: DataFrame, lm: _LM, tables) -> DataFrame:
+    """Per-document scores (_id, _grp, _nll) of the non-reference rows:
+    the (doc, gram) count split into word columns _w1.._wn, left-joined
+    to the estimator's tables, the 1-row constants broadcast, and
+    nll = −Σ c·ln p / Σ c."""
+    joins, consts = tables
+    words = F.split("_g", " ")
+    sc = (
+        grams.filter(~F.col("_ref"))
+        .select("_id", "_grp", F.explode("_gs").alias("_g"))
+        .groupBy("_id", "_grp", "_g")
+        .agg(F.count("*").alias("_c"))
+        .select(
+            "*", *[words.getItem(i).alias(f"_w{i + 1}") for i in range(lm.n)]
+        )
+    )
+    for table, keys in joins:
+        sc = sc.join(table, keys, "left")
+    return (
+        sc.crossJoin(F.broadcast(consts))
+        .groupBy("_id", "_grp")
+        .agg(
+            (-F.sum(F.col("_c") * F.log(lm.p())) / F.sum("_c")).alias("_nll")
+        )
+    )
+
+
+def _keep_drop_ledger(
+    lm: _LM,
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    group_col: str,
+    ppl_cutoff: float,
+    ref_frac: float | None = None,
+    model: DataFrame | None = None,
+    what: str = "",
+) -> DataFrame:
+    """The per-group keep/drop ledger of either path. In-pass (no
+    ``model``): (group, n_ref, n_eval, n_short, n_keep, n_drop). Against
+    a stored ``model``: (group, n_docs, n_short, n_keep, n_drop), whose
+    verdicts depend only on the document and the artifact, so the
+    counters are additive. keep = nll < ln(ppl_cutoff); a group with no
+    scored document reports exact-BIGINT zeros; ordered by group."""
+    import math
+
+    lncut = F.lit(math.log(ppl_cutoff))
+    grams = _grams(_docs(df, text_col, id_col, group_col, ref_frac), lm.n)
+    sc = lm.score(grams, model, what)
+    cols = (
+        ["n_ref", "n_eval", "n_short"]
+        if model is None
+        else ["n_docs", "n_short"]
+    )
+    base = grams.groupBy("_grp").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.col("_ref").cast("bigint")).alias("n_ref"),
+        F.sum((~F.col("_ref")).cast("bigint")).alias("n_eval"),
+        F.sum(
+            ((~F.col("_ref")) & (F.size("_gs") == 0)).cast("bigint")
+        ).alias("n_short"),
+    )
     scored = sc.groupBy("_grp").agg(
-        F.sum((F.col("_nll") < F.lit(lncut)).cast("bigint")).alias("_nk"),
-        F.sum((F.col("_nll") >= F.lit(lncut)).cast("bigint")).alias("_nd"),
+        F.sum((F.col("_nll") < lncut).cast("bigint")).alias("_nk"),
+        F.sum((F.col("_nll") >= lncut).cast("bigint")).alias("_nd"),
     )
     return (
-        counts.join(scored, "_grp", "left")
+        base.join(scored, "_grp", "left")
         .select(
             F.col("_grp").alias(group_col),
-            *count_cols,
+            *cols,
             F.coalesce(F.col("_nk"), F.lit(0)).cast("bigint").alias("n_keep"),
             F.coalesce(F.col("_nd"), F.lit(0)).cast("bigint").alias("n_drop"),
         )
@@ -1171,79 +1305,197 @@ def _keep_drop_ledger(counts, sc, group_col, lncut, count_cols):
     )
 
 
-def _xcorpus_docs(
-    df: "DataFrame",
+def _add1_tables(m: DataFrame, what: str):
+    bg = m.select(F.col("gram").alias("_g"), F.col("bc").alias("_bc"))
+    ctx = bg.groupBy(F.split("_g", " ").getItem(0).alias("_w1")).agg(
+        F.sum("_bc").alias("_cc")
+    )
+    v = ctx.agg(F.count("*").cast("bigint").alias("_v")).select(
+        _positive_or_raise(F.col("_v"), what).alias("_v")
+    )
+    return [(bg, "_g"), (ctx, "_w1")], v
+
+
+# t46: p(w2|w1) = (c(w1 w2)+1)/(c(w1·)+V), V = distinct reference
+# contexts; an unseen context scores 1/V.
+_ADD1 = _LM(
+    "xcorpus_perplexity",
+    2,
+    lambda ref: _counts(ref, "_gs", "bg").select(
+        "gram", F.col("c").alias("bc")
+    ),
+    _add1_tables,
+    lambda: _add_one("_bc", F.coalesce(F.col("_cc"), F.lit(0)), "_v"),
+)
+
+
+def _bigram_fit(ref: DataFrame) -> DataFrame:
+    return _counts(ref, "_gs", "bg").unionByName(_counts(ref, "_ws", "ug"))
+
+
+def _bigram_tables(m: DataFrame):
+    """Bigram counts and per-context (c(w1·), N1+(w1·)) of a
+    (kind, gram, c) artifact."""
+    bg = m.filter(F.col("kind") == "bg").select(
+        F.col("gram").alias("_g"), F.col("c").alias("_bc")
+    )
+    ctx = bg.groupBy(F.split("_g", " ").getItem(0).alias("_w1")).agg(
+        F.sum("_bc").alias("_cc"),
+        F.count("*").cast("bigint").alias("_n1p"),
+    )
+    return bg, ctx
+
+
+def _absdisc_tables(m: DataFrame, what: str):
+    bg, ctx = _bigram_tables(m)
+    uni = m.filter(F.col("kind") == "ug").select(
+        F.col("gram").alias("_w2"), F.col("c").alias("_uc")
+    )
+    uv = uni.agg(
+        F.count("*").cast("bigint").alias("_vu"),
+        F.sum("_uc").cast("bigint").alias("_totu"),
+    ).select(_positive_or_raise(F.col("_vu"), what).alias("_vu"), "_totu")
+    return [(bg, "_g"), (ctx, "_w1"), (uni, "_w2")], uv
+
+
+# t48: discounting backed off to the add-one reference unigram
+# p_u(w2) = (c(w2)+1)/(N+V).
+_ABSDISC = _LM(
+    "absdisc_perplexity",
+    2,
+    _bigram_fit,
+    _absdisc_tables,
+    lambda: _discounted(
+        "_bc", "_cc", "_n1p", _add_one("_uc", F.col("_totu"), "_vu")
+    ),
+)
+
+
+def _kn_tables(m: DataFrame, what: str):
+    bg, ctx = _bigram_tables(m)
+    cont = bg.groupBy(F.split("_g", " ").getItem(1).alias("_w2")).agg(
+        F.count("*").cast("bigint").alias("_cw2")
+    )
+    bv = m.agg(
+        F.count(F.when(F.col("kind") == "bg", 1)).alias("_bt"),
+        F.count(F.when(F.col("kind") == "ug", 1)).alias("_vu"),
+    ).select("_bt", _positive_or_raise(F.col("_vu"), what).alias("_vu"))
+    return [(bg, "_g"), (ctx, "_w1"), (cont, "_w2")], bv
+
+
+# t49: discounting backed off to the continuation distribution
+# p_c(w2) = (N1+(·w2)+1)/(N1+(··)+V).
+_KN = _LM(
+    "kneser_ney_perplexity",
+    2,
+    _bigram_fit,
+    _kn_tables,
+    lambda: _discounted(
+        "_bc", "_cc", "_n1p", _add_one("_cw2", F.col("_bt"), "_vu")
+    ),
+)
+
+
+def _kn3_fit(ref: DataFrame) -> DataFrame:
+    vocab = ref.select(F.explode("_ws").alias("_w")).agg(
+        F.count_distinct("_w").cast("bigint").alias("c")
+    )
+    return _counts(ref, "_gs", "tri", "g").unionByName(
+        vocab.select(
+            F.lit("vocab").alias("kind"),
+            F.lit(None).cast("string").alias("g"),
+            "c",
+        )
+    )
+
+
+def _kn3_tables(m: DataFrame, what: str):
+    words = F.split("g", " ")
+    tri = m.filter(F.col("kind") == "tri").select(
+        *[words.getItem(i).alias(f"_w{i + 1}") for i in range(3)],
+        F.col("c").alias("_tc"),
+    )
+    ctx3 = tri.groupBy("_w1", "_w2").agg(
+        F.sum("_tc").alias("_c3"),
+        F.count("*").cast("bigint").alias("_n1p3"),
+    )
+    # bgc feeds ctx2, uc, the constants and the scoring join
+    bgc = (
+        tri.groupBy("_w2", "_w3")
+        .agg(F.count("*").cast("bigint").alias("_n1pb"))
+        .localCheckpoint(eager=False)
+    )
+    ctx2 = bgc.groupBy("_w2").agg(
+        F.sum("_n1pb").alias("_cb"),
+        F.count("*").cast("bigint").alias("_n1p2"),
+    )
+    uc = bgc.groupBy("_w3").agg(F.count("*").cast("bigint").alias("_cw"))
+    # N1+(··) counts the bgc rows, V sums the vocab row: one aggregate
+    bv = (
+        bgc.select(F.lit(1).alias("_b"))
+        .unionByName(
+            m.filter(F.col("kind") == "vocab"), allowMissingColumns=True
+        )
+        .agg(F.count("_b").alias("_bt"), F.sum("c").alias("_vu"))
+        .select("_bt", _positive_or_raise(F.col("_vu"), what).alias("_vu"))
+    )
+    joins = [
+        (tri, ["_w1", "_w2", "_w3"]),
+        (ctx3, ["_w1", "_w2"]),
+        (bgc, ["_w2", "_w3"]),
+        (ctx2, "_w2"),
+        (uc, "_w3"),
+    ]
+    return joins, bv
+
+
+# t53: the two-level KN recursion. The bigram level runs on
+# continuation counts of the deduped trigram table and backs off to
+# t49's add-one continuation floor.
+_KN3 = _LM(
+    "kn3_perplexity",
+    3,
+    _kn3_fit,
+    _kn3_tables,
+    lambda: _discounted(
+        "_tc",
+        "_c3",
+        "_n1p3",
+        _discounted(
+            "_n1pb", "_cb", "_n1p2", _add_one("_cw", F.col("_bt"), "_vu")
+        ),
+    ),
+)
+
+
+def _fit(lm: _LM, df, text_col: str, id_col: str, ref_frac: float):
+    ref = _docs(df, text_col, id_col, id_col, ref_frac).filter(F.col("_ref"))
+    return lm.fit(_grams(ref, lm.n))
+
+
+def xcorpus_perplexity_ledger(
+    df: DataFrame,
     text_col: str,
     id_col: str,
     group_col: str,
-    ref_frac: float,
-) -> "DataFrame":
-    """t46's base frame: (_id, _grp, _ref, _gs) — md5-keyed ref
-    flag + overlapping word-bigram shingles, one scan-side select
-    (shared by the ledger and the v31 agreement audit)."""
-    from zappy_spark.operators.dedup import word_shingles
-    from zappy_spark.operators.sampling import (
-        _hash_key,
-        sample_threshold,
-    )
+    ref_frac: float = 0.25,
+    ppl_cutoff: float = 30.5,
+) -> DataFrame:
+    """Cross-corpus perplexity filtering — the CCNet/KenLM setup: unlike
+    t20/t23 (which score documents against counts from the SAME
+    corpus), this trains an add-one-smoothed bigram LM on a
+    deterministic REFERENCE SLICE and scores only the REMAINING
+    documents with it — the train/score split a production quality
+    pipeline runs, with smoothing handling n-grams the reference never
+    saw:
 
-    return df.select(
-        F.col(id_col).alias("_id"),
-        F.col(group_col).alias("_grp"),
-        (_hash_key(id_col) < sample_threshold(ref_frac)).alias("_ref"),
-        word_shingles(F.col(text_col), 2, filter_empty=True).alias("_gs"),
-    )
+        p(w2|w1) = (c(w1 w2)+1)/(c(w1·)+V), unseen context → 1/V
 
+    with V the number of distinct reference contexts.
 
-def _xcorpus_doc_nll(docs: "DataFrame") -> "DataFrame":
-    """t46's per-document scores: (_id, _grp, _nll) over the
-    NON-reference slice under the reference-only add-one bigram LM
-    (exact BIGINT model counts, vocab V = distinct reference
-    contexts as a 1-row broadcast; unseen bigram -> (0+1)/(cc+V),
-    unseen context -> 1/V — always defined)."""
-    cnt = (
-        docs.select("_id", "_grp", "_ref", F.explode("_gs").alias("_g"))
-        .groupBy("_id", "_grp", "_ref", "_g")
-        .agg(F.count("*").alias("_c"))
-    )
-    # r13 (VERDICT r12 item 7): the Heaps-bounded model table is
-    # built DIRECTLY (total gram count over the reference slice —
-    # identical BIGINTs to the former sum of per-doc counts, one
-    # gram-keyed map-side-combinable agg instead of a doc-gram-keyed
-    # one) and LAZILY localCheckpointed, so ctx / V / the scoring
-    # join all read ONE materialization instead of each consumer
-    # re-running the corpus scan + shingle + aggregate chain (the
-    # r12 plans carried 3–7 copies of that subtree; the `_ref`
-    # filters push below the aggregate so the copies never
-    # canonicalize equal and ReuseExchange cannot fire). Lazy (the
-    # blocks materialize inside the consuming action and are
-    # ContextCleaner-managed) — nothing eager at query-build time.
-    model = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_gs").alias("_g"))
-        .groupBy("_g")
-        .agg(F.count("*").alias("_bc"))
-        .localCheckpoint(eager=False)
-    )
-    ctx = model.groupBy(
-        F.split("_g", " ").getItem(0).alias("_w1")
-    ).agg(F.sum("_bc").alias("_cc"))
-    v = ctx.agg(F.count("*").cast("bigint").alias("_v")).select(
-        _positive_or_raise(F.col("_v"), "xcorpus_perplexity").alias("_v")
-    )
-    p = (F.coalesce(F.col("_bc"), F.lit(0)) + F.lit(1.0)) / (
-        F.coalesce(F.col("_cc"), F.lit(0)) + F.col("_v")
-    )
-    return (
-        cnt.filter(~F.col("_ref"))
-        .withColumn("_w1", F.split("_g", " ").getItem(0))
-        .join(model, "_g", "left")
-        .join(ctx, "_w1", "left")
-        .crossJoin(F.broadcast(v))
-        .groupBy("_id", "_grp")
-        .agg(
-            ((-F.sum(F.col("_c") * F.log(p))) / F.sum("_c")).alias("_nll")
-        )
+    Returns (group, n_ref, n_eval, n_short, n_keep, n_drop)."""
+    return _keep_drop_ledger(
+        _ADD1, df, text_col, id_col, group_col, ppl_cutoff, ref_frac
     )
 
 
@@ -1253,21 +1505,11 @@ def xcorpus_fit_model(
     id_col: str,
     ref_frac: float = 0.25,
 ) -> DataFrame:
-    """The DEPLOYABLE artifact of t46's training half: the exact
-    BIGINT bigram count table (gram, bc) from the md5-keyed
-    reference slice — everything scoring needs (context totals,
-    vocabulary size) re-derives from it with two aggregates, so
-    ONE small table is the whole model (write it to parquet, ship
-    it; the v29/t47 train-offline pattern)."""
-    docs = _xcorpus_docs(df, text_col, id_col, id_col, ref_frac)
-    return (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_gs").alias("gram"), "_id")
-        .groupBy("gram", "_id")
-        .agg(F.count("*").alias("_c"))
-        .groupBy("gram")
-        .agg(F.sum("_c").cast("bigint").alias("bc"))
-    )
+    """The deployable artifact of t46's training half: the exact BIGINT
+    bigram count table (gram, bc) of the md5-keyed reference slice.
+    Context totals and V re-derive from it, so one small table is the
+    whole model (write it to parquet, ship it)."""
+    return _fit(_ADD1, df, text_col, id_col, ref_frac)
 
 
 def xcorpus_ledger_with_model(
@@ -1278,68 +1520,21 @@ def xcorpus_ledger_with_model(
     model: DataFrame,
     ppl_cutoff: float = 30.5,
 ) -> DataFrame:
-    """Score EVERY document against a FIXED trained bigram model
-    (the deployment half of t46 — training happened offline via
-    ``xcorpus_fit_model``): per-group keep/drop ledger
-    (group, n_docs, n_short, n_keep, n_drop), all exact BIGINTs.
-    The per-document verdict depends only on the document and the
-    fixed model, so the counters are ADDITIVE — the streaming
-    drift monitor's micro-batch partial IS this operator.
-
-    The smoothed probability is t46's spelling exactly:
-    p = (bc+1)/(cc+V), unseen context -> 1/V, with cc/V re-derived
-    from the model table (two bounded aggregates per call)."""
-    import math
-
-    from zappy_spark.operators.dedup import word_shingles
-
-    lncut = math.log(ppl_cutoff)
-    docs = df.select(
-        F.col(group_col).alias("_grp"),
-        word_shingles(F.col(text_col), 2, filter_empty=True).alias("_gs"),
-        F.col(id_col).alias("_rid"),
-    )
-    ctx = model.groupBy(
-        F.split("gram", " ").getItem(0).alias("_w1")
-    ).agg(F.sum("bc").alias("_cc"))
-    v = ctx.agg(F.count("*").cast("bigint").alias("_v")).select(
-        _positive_or_raise(F.col("_v"), "xcorpus_ledger_with_model").alias(
-            "_v"
-        )
-    )
-    cnt = (
-        docs.select("_rid", "_grp", F.explode("_gs").alias("_g"))
-        .groupBy("_rid", "_grp", "_g")
-        .agg(F.count("*").alias("_c"))
-    )
-    p = (F.coalesce(F.col("bc"), F.lit(0)) + F.lit(1.0)) / (
-        F.coalesce(F.col("_cc"), F.lit(0)) + F.col("_v")
-    )
-    sc = (
-        cnt.withColumn("_w1", F.split("_g", " ").getItem(0))
-        .join(model.withColumnRenamed("gram", "_g"), "_g", "left")
-        .join(ctx, "_w1", "left")
-        .crossJoin(F.broadcast(v))
-        .groupBy("_rid", "_grp")
-        .agg(
-            ((-F.sum(F.col("_c") * F.log(p))) / F.sum("_c")).alias("_nll")
-        )
-    )
-    base = docs.groupBy("_grp").agg(
-        F.count("*").alias("n_docs"),
-        F.sum((F.size("_gs") == 0).cast("bigint")).alias("n_short"),
-    )
+    """Score EVERY document against a fixed ``xcorpus_fit_model``
+    artifact under t46's probability: per-group keep/drop ledger
+    (group, n_docs, n_short, n_keep, n_drop), all exact BIGINTs and
+    additive — the streaming drift monitor's micro-batch partial IS
+    this operator."""
     return _keep_drop_ledger(
-        base, sc, group_col, lncut, ["n_docs", "n_short"]
+        _ADD1,
+        df,
+        text_col,
+        id_col,
+        group_col,
+        ppl_cutoff,
+        model=model,
+        what="xcorpus_ledger_with_model",
     )
-
-
-# t48 absolute-discounting perplexity filter: shared parameters
-# (the T46_PARAMS precedent). D is the textbook 0.75 discount.
-T48_PARAMS: dict[str, float] = {
-    "ref_frac": 0.25,
-    "ppl_cutoff": 28.5,
-}
 
 
 def absdisc_perplexity_ledger(
@@ -1351,105 +1546,20 @@ def absdisc_perplexity_ledger(
     ppl_cutoff: float = 28.5,
 ) -> DataFrame:
     """Cross-corpus perplexity filtering with INTERPOLATED ABSOLUTE
-    DISCOUNTING and unigram backoff (round 11 — the production
-    smoothing family; t46 is the add-one baseline, this is the
-    KenLM-style estimator CCNet actually deploys): a bigram LM
-    trained on the deterministic md5-keyed reference slice scores
-    the remaining documents with
+    DISCOUNTING and unigram backoff — the KenLM-style estimator CCNet
+    deploys (t46 is the add-one baseline). A bigram LM trained on the
+    md5-keyed reference slice scores the remaining documents with
 
-        p(w2|w1) = (max(c(w1 w2) − D, 0) + D·N1+(w1)·p_u(w2)) / c(w1·)
+        p(w2|w1) = (max(c(w1 w2) − D, 0) + D·N1+(w1·)·p_u(w2)) / c(w1·)
 
-    (D = 0.75, N1+(w1) = distinct continuations of w1, p_u =
-    add-one unigram over the reference vocabulary), backing off to
-    p_u entirely for unseen contexts — high-frequency bigrams keep
-    nearly their ML estimate while the discount mass D·N1+ funds
-    the backoff, the behavior add-k lacks.
-
-    Split/exactness/scale contract identical to
-    ``xcorpus_perplexity_ledger`` (same structural slice isolation,
-    same all-BIGINT ledger, same margin discipline — calibrated
-    >= 4.6e-4 at cutoff 28.5 across all 3 SFs + both fixtures);
-    the probability expression is spelled in ONE shared operator
-    order on both engines so the only cross-engine residue is the
-    per-doc sum's partial order (~1e-13), absorbed by the margin.
+    (D = 0.75, N1+(w1·) = distinct continuations of w1, p_u = add-one
+    unigram over the reference vocabulary), backing off to p_u entirely
+    for unseen contexts — frequent bigrams keep nearly their ML
+    estimate while the discount mass D·N1+ funds the backoff.
 
     Returns (group, n_ref, n_eval, n_short, n_keep, n_drop)."""
-    import math
-
-    lncut = math.log(ppl_cutoff)
-    docs = _xcorpus_docs_ws(df, text_col, id_col, group_col, ref_frac)
-    cnt = (
-        docs.select("_id", "_grp", "_ref", F.explode("_gs").alias("_g"))
-        .groupBy("_id", "_grp", "_ref", "_g")
-        .agg(F.count("*").alias("_c"))
-    )
-    # r13 (VERDICT r12 item 7): both Heaps-bounded model tables are
-    # built directly (identical BIGINTs — see _xcorpus_doc_nll) and
-    # lazily localCheckpointed so their derived aggregates (ctx, uv)
-    # and the scoring joins read one materialization each instead of
-    # re-running the corpus chain per consumer.
-    model = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_gs").alias("_g"))
-        .groupBy("_g")
-        .agg(F.count("*").alias("_bc"))
-        .localCheckpoint(eager=False)
-    )
-    ctx = model.groupBy(
-        F.split("_g", " ").getItem(0).alias("_w1")
-    ).agg(
-        F.sum("_bc").alias("_cc"),
-        F.count("*").cast("bigint").alias("_n1p"),
-    )
-    uni = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_ws").alias("_w"))
-        .groupBy("_w")
-        .agg(F.count("*").alias("_uc"))
-        .localCheckpoint(eager=False)
-    )
-    uv = uni.agg(
-        F.count("*").cast("bigint").alias("_vu"),
-        F.sum("_uc").cast("bigint").alias("_totu"),
-    ).select(
-        _positive_or_raise(F.col("_vu"), "absdisc_perplexity").alias("_vu"),
-        "_totu",
-    )
-    pu = (F.coalesce(F.col("_uc"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("_totu") + F.col("_vu")
-    )
-    p = F.when(F.col("_cc").isNull(), pu).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_bc"), F.lit(0)) - F.lit(0.75),
-                F.lit(0.0),
-            )
-            + F.lit(0.75) * F.col("_n1p") * pu
-        )
-        / F.col("_cc")
-    )
-    sc = (
-        cnt.filter(~F.col("_ref"))
-        .withColumn("_w1", F.split("_g", " ").getItem(0))
-        .withColumn("_w2", F.split("_g", " ").getItem(1))
-        .join(model, "_g", "left")
-        .join(ctx, "_w1", "left")
-        .join(uni.select(F.col("_w").alias("_w2"), "_uc"), "_w2", "left")
-        .crossJoin(F.broadcast(uv))
-        .groupBy("_id", "_grp")
-        .agg(
-            ((-F.sum(F.col("_c") * F.log(p))) / F.sum("_c")).alias("_nll")
-        )
-    )
-    counts = docs.groupBy("_grp").agg(
-        F.sum(F.col("_ref").cast("bigint")).alias("n_ref"),
-        F.sum((~F.col("_ref")).cast("bigint")).alias("n_eval"),
-        F.sum(
-            ((~F.col("_ref")) & (F.size("_gs") == 0)).cast("bigint")
-        ).alias("n_short"),
-    )
     return _keep_drop_ledger(
-        counts, sc, group_col, lncut, ["n_ref", "n_eval", "n_short"]
+        _ABSDISC, df, text_col, id_col, group_col, ppl_cutoff, ref_frac
     )
 
 
@@ -1459,48 +1569,14 @@ def absdisc_fit_model(
     id_col: str,
     ref_frac: float = 0.25,
 ) -> DataFrame:
-    """The DEPLOYABLE artifact of t48's training half (round 12,
-    VERDICT r11 item 4 — the xcorpus_fit_model pattern extended to
-    the two-table discounted estimator): ONE parquet table
-    (kind, gram, c) holding BOTH exact-BIGINT count tables the
-    absolute-discounting estimator needs — ``kind='bg'`` rows are
-    the bigram counts c(w1 w2), ``kind='ug'`` rows the unigram
-    token counts c(w) — aggregated from the md5-keyed reference
-    slice only. Everything scoring needs (context totals c(w1·),
-    continuation funding N1+(w1·), vocabulary V, token total)
-    re-derives from the stored rows with bounded aggregates, so one
-    small artifact is the whole model: write it to parquet, ship
-    it, score against it forever (``absdisc_ledger_with_model``)."""
-    from zappy_spark.operators.dedup import word_shingles
-    from zappy_spark.operators.sampling import (
-        _hash_key,
-        sample_threshold,
-    )
-
-    ref = df.filter(_hash_key(id_col) < sample_threshold(ref_frac))
-    bg = (
-        ref.select(
-            F.explode(
-                word_shingles(F.col(text_col), 2, filter_empty=True)
-            ).alias("gram")
-        )
-        .groupBy("gram")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit("bg").alias("kind"), "gram", "c")
-    )
-    ug = (
-        ref.select(
-            F.explode(
-                F.filter(
-                    F.split(F.col(text_col), " "), lambda x: x != ""
-                )
-            ).alias("gram")
-        )
-        .groupBy("gram")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit("ug").alias("kind"), "gram", "c")
-    )
-    return bg.unionByName(ug)
+    """The deployable artifact of t48's training half: ONE table
+    (kind, gram, c) holding both exact-BIGINT count tables of the
+    md5-keyed reference slice — ``kind='bg'`` rows are the bigram
+    counts c(w1 w2), ``kind='ug'`` rows the unigram token counts c(w).
+    Context totals, N1+, V and the token total re-derive from it, so
+    one small artifact is the whole model for both discounted
+    estimators (``absdisc_ledger_with_model``, ``kn_ledger_with_model``)."""
+    return _fit(_ABSDISC, df, text_col, id_col, ref_frac)
 
 
 def absdisc_ledger_with_model(
@@ -1511,86 +1587,49 @@ def absdisc_ledger_with_model(
     model: DataFrame,
     ppl_cutoff: float = 28.5,
 ) -> DataFrame:
-    """Score EVERY document against a FIXED stored discounted model
-    (the deployment half of t48 — training happened offline via
-    ``absdisc_fit_model``): per-group keep/drop ledger (group,
-    n_docs, n_short, n_keep, n_drop), all exact BIGINTs. The
-    per-document verdict depends only on the document and the fixed
-    artifact, so the counters are ADDITIVE — the streaming drift
-    monitor's micro-batch partial IS this operator.
-
-    The smoothed probability is t48's spelling exactly — p_u =
-    (uc+1)/(totu+vu), p = (max(bc−0.75, 0) + 0.75·N1+(w1)·p_u)/cc,
-    full backoff to p_u on unseen contexts — with cc/N1+/V/totu
-    re-derived from the stored (kind, gram, c) rows by bounded
-    aggregates per call; the V=0 degenerate guard raises loudly."""
-    import math
-
-    from zappy_spark.operators.dedup import word_shingles
-
-    lncut = math.log(ppl_cutoff)
-    docs = df.select(
-        F.col(group_col).alias("_grp"),
-        word_shingles(F.col(text_col), 2, filter_empty=True).alias("_gs"),
-        F.col(id_col).alias("_rid"),
-    )
-    bgm = model.filter(F.col("kind") == "bg").select(
-        F.col("gram").alias("_g"), F.col("c").alias("_bc")
-    )
-    uni = model.filter(F.col("kind") == "ug").select(
-        F.col("gram").alias("_w2"), F.col("c").alias("_uc")
-    )
-    ctx = bgm.groupBy(
-        F.split("_g", " ").getItem(0).alias("_w1")
-    ).agg(
-        F.sum("_bc").alias("_cc"),
-        F.count("*").cast("bigint").alias("_n1p"),
-    )
-    uv = uni.agg(
-        F.count("*").cast("bigint").alias("_vu"),
-        F.sum("_uc").cast("bigint").alias("_totu"),
-    ).select(
-        _positive_or_raise(
-            F.col("_vu"), "absdisc_ledger_with_model"
-        ).alias("_vu"),
-        "_totu",
-    )
-    cnt = (
-        docs.select("_rid", "_grp", F.explode("_gs").alias("_g"))
-        .groupBy("_rid", "_grp", "_g")
-        .agg(F.count("*").alias("_c"))
-    )
-    pu = (F.coalesce(F.col("_uc"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("_totu") + F.col("_vu")
-    )
-    p = F.when(F.col("_cc").isNull(), pu).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_bc"), F.lit(0)) - F.lit(0.75),
-                F.lit(0.0),
-            )
-            + F.lit(0.75) * F.col("_n1p") * pu
-        )
-        / F.col("_cc")
-    )
-    sc = (
-        cnt.withColumn("_w1", F.split("_g", " ").getItem(0))
-        .withColumn("_w2", F.split("_g", " ").getItem(1))
-        .join(bgm, "_g", "left")
-        .join(ctx, "_w1", "left")
-        .join(uni, "_w2", "left")
-        .crossJoin(F.broadcast(uv))
-        .groupBy("_rid", "_grp")
-        .agg(
-            ((-F.sum(F.col("_c") * F.log(p))) / F.sum("_c")).alias("_nll")
-        )
-    )
-    base = docs.groupBy("_grp").agg(
-        F.count("*").alias("n_docs"),
-        F.sum((F.size("_gs") == 0).cast("bigint")).alias("n_short"),
-    )
+    """Score EVERY document against a fixed ``absdisc_fit_model``
+    artifact under t48's probability: per-group keep/drop ledger
+    (group, n_docs, n_short, n_keep, n_drop), all exact BIGINTs and
+    additive — the streaming drift monitor's micro-batch partial IS
+    this operator."""
     return _keep_drop_ledger(
-        base, sc, group_col, lncut, ["n_docs", "n_short"]
+        _ABSDISC,
+        df,
+        text_col,
+        id_col,
+        group_col,
+        ppl_cutoff,
+        model=model,
+        what="absdisc_ledger_with_model",
+    )
+
+
+def kneser_ney_perplexity_ledger(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    group_col: str,
+    ref_frac: float = 0.25,
+    ppl_cutoff: float = 45.5,
+) -> DataFrame:
+    """Cross-corpus perplexity filtering with INTERPOLATED KNESER–NEY
+    smoothing — the KenLM default, the ladder's next rung after t48:
+    absolute discounting where the backoff uses CONTINUATION counts
+    instead of raw unigram frequency,
+
+        p(w2|w1) = (max(c(w1 w2) − D, 0) + D·N1+(w1·)·p_c(w2)) / c(w1·)
+        p_c(w2)  = (N1+(·w2) + 1) / (N1+(··) + V)
+
+    with D = 0.75, N1+(·w2) = distinct left contexts of w2 ("in how
+    many novel combinations has w2 appeared" — 'Francisco' is frequent
+    but only ever follows 'San'), N1+(··) = bigram types, V = reference
+    unigram vocabulary (the +1/+V floor keeps p_c defined for words the
+    reference never saw as a continuation). Unseen contexts back off to
+    p_c entirely.
+
+    Returns (group, n_ref, n_eval, n_short, n_keep, n_drop)."""
+    return _keep_drop_ledger(
+        _KN, df, text_col, id_col, group_col, ppl_cutoff, ref_frac
     )
 
 
@@ -1602,259 +1641,89 @@ def kn_ledger_with_model(
     model: DataFrame,
     ppl_cutoff: float = 45.5,
 ) -> DataFrame:
-    """Score EVERY document against a FIXED stored model under
-    INTERPOLATED KNESER–NEY smoothing (the deployment half of t49 —
-    round 12): the artifact is the SAME (kind, gram, c) table
-    ``absdisc_fit_model`` writes — bigram counts give the contexts
-    (c(w1·), N1+(w1·)), the continuation counts (N1+(·w2)), and the
-    bigram-type total N1+(··); unigram rows give V — so ONE stored
-    artifact serves BOTH discounted estimator families, and
-    switching families is a scoring-time decision, not a retrain.
-    Per-group keep/drop ledger (group, n_docs, n_short, n_keep,
-    n_drop), all exact BIGINTs; verdicts depend only on the
-    document and the fixed artifact, so the counters are ADDITIVE —
-    the streaming drift monitor's micro-batch partial IS this
-    operator.
-
-    The probability is t49's spelling exactly — p_c = (cw2+1)/
-    (bt+V), p = (max(bc−0.75, 0) + 0.75·N1+(w1)·p_c)/cc, full
-    backoff to p_c on unseen contexts — with every model quantity
-    re-derived from the stored rows by bounded aggregates; the V=0
-    degenerate guard raises loudly."""
-    import math
-
-    from zappy_spark.operators.dedup import word_shingles
-
-    lncut = math.log(ppl_cutoff)
-    docs = df.select(
-        F.col(group_col).alias("_grp"),
-        word_shingles(F.col(text_col), 2, filter_empty=True).alias("_gs"),
-        F.col(id_col).alias("_rid"),
-    )
-    bgm = model.filter(F.col("kind") == "bg").select(
-        F.col("gram").alias("_g"), F.col("c").alias("_bc")
-    )
-    ctx = bgm.groupBy(
-        F.split("_g", " ").getItem(0).alias("_w1")
-    ).agg(
-        F.sum("_bc").alias("_cc"),
-        F.count("*").cast("bigint").alias("_n1p"),
-    )
-    cont = bgm.groupBy(
-        F.split("_g", " ").getItem(1).alias("_w2")
-    ).agg(F.count("*").cast("bigint").alias("_cw2"))
-    vocab = (
-        model.filter(F.col("kind") == "ug")
-        .agg(F.count("*").cast("bigint").alias("_vu"))
-    )
-    bv = (
-        bgm.agg(F.count("*").cast("bigint").alias("_bt"))
-        .crossJoin(vocab)
-        .select(
-            "_bt",
-            _positive_or_raise(F.col("_vu"), "kn_ledger_with_model").alias(
-                "_vu"
-            ),
-        )
-    )
-    cnt = (
-        docs.select("_rid", "_grp", F.explode("_gs").alias("_g"))
-        .groupBy("_rid", "_grp", "_g")
-        .agg(F.count("*").alias("_c"))
-    )
-    pc = (F.coalesce(F.col("_cw2"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("_bt") + F.col("_vu")
-    )
-    p = F.when(F.col("_cc").isNull(), pc).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_bc"), F.lit(0)) - F.lit(0.75),
-                F.lit(0.0),
-            )
-            + F.lit(0.75) * F.col("_n1p") * pc
-        )
-        / F.col("_cc")
-    )
-    sc = (
-        cnt.withColumn("_w1", F.split("_g", " ").getItem(0))
-        .withColumn("_w2", F.split("_g", " ").getItem(1))
-        .join(bgm, "_g", "left")
-        .join(ctx, "_w1", "left")
-        .join(cont, "_w2", "left")
-        .crossJoin(F.broadcast(bv))
-        .groupBy("_rid", "_grp")
-        .agg(
-            ((-F.sum(F.col("_c") * F.log(p))) / F.sum("_c")).alias("_nll")
-        )
-    )
-    base = docs.groupBy("_grp").agg(
-        F.count("*").alias("n_docs"),
-        F.sum((F.size("_gs") == 0).cast("bigint")).alias("n_short"),
-    )
+    """Score EVERY document against a fixed ``absdisc_fit_model``
+    artifact under t49's Kneser–Ney probability — one stored artifact
+    serves both discounted families, so switching families is a
+    scoring-time decision, not a retrain. Per-group keep/drop ledger
+    (group, n_docs, n_short, n_keep, n_drop), all exact BIGINTs and
+    additive — the streaming drift monitor's micro-batch partial IS
+    this operator."""
     return _keep_drop_ledger(
-        base, sc, group_col, lncut, ["n_docs", "n_short"]
+        _KN,
+        df,
+        text_col,
+        id_col,
+        group_col,
+        ppl_cutoff,
+        model=model,
+        what="kn_ledger_with_model",
     )
 
 
-# t49 interpolated Kneser–Ney perplexity filter: shared parameters
-# (the T46/T48 precedent — one definition for the operator default,
-# the corpus entry, its oracle, and the margin pin). D is the
-# textbook 0.75 discount; the cutoff was chosen BY the round-12
-# gap scan over the merged nll distribution of all 3 SFs + both
-# synth fixtures (~416k scored docs): ln(45.5) sits in a real
-# inter-cluster gap — nearest document >= 8.5e-3 on every dataset
-# (85x the >= 1e-4 brief) — and the split is non-vacuous at every
-# scale the drop branch is verified at (sf0.01 2 drops, sf0.1 5,
-# 10x 181, 100x 1923; sf0.001's 360 eval docs all keep — the one
-# scale with no drop rows, documented, driver checks run at
-# sf0.01). Mid-range "balanced" cutoffs were REJECTED by the same
-# scan: the densest achievable margin there is ~6.5e-6 at the 100x
-# fixture — a float-vs-hash coin flip, the exact failure the
-# margin discipline exists to engineer away.
-T49_PARAMS: dict[str, float] = {
-    "ref_frac": 0.25,
-    "ppl_cutoff": 45.5,
-}
-
-
-def kneser_ney_perplexity_ledger(
+def kn3_perplexity_ledger(
     df: DataFrame,
     text_col: str,
     id_col: str,
     group_col: str,
     ref_frac: float = 0.25,
-    ppl_cutoff: float = 45.5,
+    ppl_cutoff: float = 39.048,
 ) -> DataFrame:
-    """Cross-corpus perplexity filtering with INTERPOLATED
-    KNESER–NEY smoothing (round 12, VERDICT r11 item 3 — the
-    production KenLM DEFAULT, completing the ladder t46 add-one →
-    t48 absolute discounting → this): absolute discounting where
-    the backoff distribution uses CONTINUATION counts instead of
-    raw unigram frequency —
+    """Cross-corpus perplexity filtering with TRIGRAM interpolated
+    Kneser–Ney smoothing — order 3 is where the KN recursion
+    (discounted raw counts at the top, continuation counts at every
+    lower level) first fully exercises:
 
-        p(w2|w1) = (max(c(w1 w2) − D, 0) + D·N1+(w1·)·p_c(w2))
-                   / c(w1·)
-        p_c(w2)  = (N1+(·w2) + 1) / (N1+(··) + V)
+        p(w3|w1w2) = (max(c(w1w2w3)−D, 0) + D·N1+(w1w2·)·p2) / c(w1w2·)
+        p2(w3|w2)  = (max(N1+(·w2w3)−D, 0) + D·N1+(w2·)·p_c) / N1+(·w2·)
+        p_c(w3)    = (N1+(·w3) + 1) / (N1+(··) + V)
 
-    with D = 0.75, N1+(w1·) = distinct continuations of w1,
-    N1+(·w2) = distinct LEFT-CONTEXTS of w2 ("in how many novel
-    combinations has w2 appeared" — the KN insight that 'Francisco'
-    is frequent but only ever follows 'San'), N1+(··) = total
-    bigram types, V = reference unigram vocabulary (the +1/+V
-    add-one floor keeps p_c defined for words the reference never
-    saw as a continuation — t48's backoff discipline applied to the
-    continuation distribution). Unseen contexts back off to p_c
-    entirely.
-
-    Split/exactness contract identical to t46/t48 (same md5-keyed
-    structural slice isolation on both engines, same all-BIGINT
-    ledger): every model quantity is an exact BIGINT — c(w1 w2) and
-    c(w1·) are count sums, N1+(w1·)/N1+(·w2)/N1+(··) are distinct-
-    bigram-type counts (COUNT(*) over the deduped model table), V a
-    distinct-token count — so the probability is a handful of IEEE
-    ops on sub-2^53 integers spelled in ONE shared operator order
-    on both engines; the per-doc sum's partial-order residue
-    (~1e-13) is absorbed by the margin scan's cutoff (>= 8.5e-3
-    pinned across all 3 SFs + both synth fixtures — see
-    T49_PARAMS for the full calibration record).
-
-    Scale (100 TB): identical shuffle topology to t48 — ONE corpus
-    scan feeds the (doc, bigram) hash agg; model / ctx / cont are
-    successive aggregates on the gram key (cont is COUNT(*) of the
-    already-deduped model table grouped by w2 — no extra corpus
-    pass); (N1+(··), V) is a 1-row broadcast; scoring joins carry
-    counts only, never text; no doc-keyed join anywhere.
+    Unseen trigram contexts back off to p2, unseen bigram contexts to
+    p_c. n_short counts docs with fewer than 3 tokens.
 
     Returns (group, n_ref, n_eval, n_short, n_keep, n_drop)."""
-    import math
-
-    lncut = math.log(ppl_cutoff)
-    docs = _xcorpus_docs_ws(df, text_col, id_col, group_col, ref_frac)
-    sc = _kn_doc_nll(docs)
-    counts = docs.groupBy("_grp").agg(
-        F.sum(F.col("_ref").cast("bigint")).alias("n_ref"),
-        F.sum((~F.col("_ref")).cast("bigint")).alias("n_eval"),
-        F.sum(
-            ((~F.col("_ref")) & (F.size("_gs") == 0)).cast("bigint")
-        ).alias("n_short"),
-    )
     return _keep_drop_ledger(
-        counts, sc, group_col, lncut, ["n_ref", "n_eval", "n_short"]
+        _KN3, df, text_col, id_col, group_col, ppl_cutoff, ref_frac
     )
 
 
-def _kn_doc_nll(docs: "DataFrame") -> "DataFrame":
-    """t49's per-document scores: (_id, _grp, _nll) over the
-    NON-reference slice under the reference-only interpolated-KN
-    bigram LM (exact BIGINT model / context / continuation /
-    vocabulary counts; continuation distribution p_c = (N1+(.w2)+1)
-    / (N1+(..)+V) with the V=0 degenerate guard; unseen context ->
-    p_c entirely). Shared verbatim by the t49 ledger and the v32
-    three-filter agreement cube — one definition, zero drift."""
-    cnt = (
-        docs.select("_id", "_grp", "_ref", F.explode("_gs").alias("_g"))
-        .groupBy("_id", "_grp", "_ref", "_g")
-        .agg(F.count("*").alias("_c"))
-    )
-    # r13 (VERDICT r12 item 7): direct-count model table, lazily
-    # localCheckpointed — ctx / cont / bv / the scoring join read
-    # one materialization (see _xcorpus_doc_nll for the rationale)
-    model = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_gs").alias("_g"))
-        .groupBy("_g")
-        .agg(F.count("*").alias("_bc"))
-        .localCheckpoint(eager=False)
-    )
-    ctx = model.groupBy(
-        F.split("_g", " ").getItem(0).alias("_w1")
-    ).agg(
-        F.sum("_bc").alias("_cc"),
-        F.count("*").cast("bigint").alias("_n1p"),
-    )
-    cont = model.groupBy(
-        F.split("_g", " ").getItem(1).alias("_w2")
-    ).agg(F.count("*").cast("bigint").alias("_cw2"))
-    vocab = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_ws").alias("_w"))
-        .agg(F.count_distinct("_w").cast("bigint").alias("_vu"))
-    )
-    bv = (
-        model.agg(F.count("*").cast("bigint").alias("_bt"))
-        .crossJoin(vocab)
-        .select(
-            "_bt",
-            _positive_or_raise(F.col("_vu"), "kneser_ney_perplexity").alias(
-                "_vu"
-            ),
-        )
-    )
-    pc = (F.coalesce(F.col("_cw2"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("_bt") + F.col("_vu")
-    )
-    p = F.when(F.col("_cc").isNull(), pc).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_bc"), F.lit(0)) - F.lit(0.75),
-                F.lit(0.0),
-            )
-            + F.lit(0.75) * F.col("_n1p") * pc
-        )
-        / F.col("_cc")
-    )
-    return (
-        cnt.filter(~F.col("_ref"))
-        .withColumn("_w1", F.split("_g", " ").getItem(0))
-        .withColumn("_w2", F.split("_g", " ").getItem(1))
-        .join(model, "_g", "left")
-        .join(ctx, "_w1", "left")
-        .join(cont, "_w2", "left")
-        .crossJoin(F.broadcast(bv))
-        .groupBy("_id", "_grp")
-        .agg(
-            ((-F.sum(F.col("_c") * F.log(p))) / F.sum("_c")).alias("_nll")
-        )
+def kn3_fit_model(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    ref_frac: float = 0.25,
+) -> DataFrame:
+    """The deployable artifact of t53's training half: ONE table
+    (kind, g, c) carrying the reference trigram counts (kind='tri',
+    g = 'w1 w2 w3') and the reference unigram vocabulary size
+    (kind='vocab', g NULL). Every other model quantity re-derives from
+    the trigram rows; V ships explicitly because words in sub-trigram
+    documents never reach the trigram table."""
+    return _fit(_KN3, df, text_col, id_col, ref_frac)
+
+
+def kn3_ledger_with_model(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    group_col: str,
+    model: DataFrame,
+    ppl_cutoff: float = 39.048,
+) -> DataFrame:
+    """Score EVERY document against a fixed ``kn3_fit_model`` artifact
+    under t53's probability: per-group keep/drop ledger (group, n_docs,
+    n_short, n_keep, n_drop), all exact BIGINTs and additive — the
+    streaming drift monitor's micro-batch partial IS this operator. V
+    is read from the stored vocab row by an aggregate, so an empty or
+    degenerate model hits the V guard."""
+    return _keep_drop_ledger(
+        _KN3,
+        df,
+        text_col,
+        id_col,
+        group_col,
+        ppl_cutoff,
+        model=model,
+        what="kn3_ledger_with_model",
     )
 
 
@@ -3416,384 +3285,4 @@ def textrank_keywords(
             F.col("node").alias("word"),
             F.col("r").alias("rank_fp"),
         )
-    )
-
-
-# t53 trigram interpolated Kneser–Ney — ONE definition imported by
-# the Spark operator, the oracle builder, and the tests (the
-# T46/T49 shared-params doctrine). Cutoff 39.048 (perplexity) was
-# chosen BY the round-12 gap scan over the merged non-ref nll
-# distribution of all 3 SFs + both synth fixtures (~416k docs):
-# the widest interior gap is nll (3.6647322, 3.6648348) and
-# ln(39.048) = 3.66479166 sits inside it with measured distance
-# >= 4.3e-5 to the nearest document at EVERY scale — ~8 orders
-# above the per-doc sum's partial-order residue (~1e-13). Keeps
-# and drops are both non-empty at every SF (209/151 at sf0.01,
-# 369378/5265 at 100x).
-T53_PARAMS: dict[str, float] = {
-    "ref_frac": 0.25,
-    "ppl_cutoff": 39.048,
-    "discount": 0.75,
-}
-
-
-def _kn3_docs(
-    df: "DataFrame",
-    text_col: str,
-    id_col: str,
-    group_col: str,
-    ref_frac: float,
-) -> "DataFrame":
-    """t53's base frame: md5-keyed ref flag, TRIGRAM shingles and
-    the raw token array (for the reference vocabulary) — one
-    scan-side select."""
-    from zappy_spark.operators.dedup import word_shingles
-    from zappy_spark.operators.sampling import (
-        _hash_key,
-        sample_threshold,
-    )
-
-    return df.select(
-        F.col(id_col).alias("_id"),
-        F.col(group_col).alias("_grp"),
-        (_hash_key(id_col) < sample_threshold(ref_frac)).alias("_ref"),
-        word_shingles(F.col(text_col), 3, filter_empty=True).alias("_gs"),
-        F.filter(F.split(F.col(text_col), " "), lambda x: x != "").alias(
-            "_ws"
-        ),
-    )
-
-
-def _kn3_doc_nll(docs: "DataFrame") -> "DataFrame":
-    """t53's per-document scores: (_id, _grp, _nll) over the
-    NON-reference slice under the reference-only TRIGRAM
-    interpolated-KN LM — the full two-level KN recursion:
-
-        p(w3|w1w2) = (max(c(w1w2w3)−D, 0) + D·N1+(w1w2·)·p2) / c(w1w2·)
-        p2(w3|w2)  = (max(N1+(·w2w3)−D, 0) + D·N1+(w2·)·p_c) / N1+(·w2·)
-        p_c(w3)    = (N1+(·w3) + 1) / (N1+(··) + V)
-
-    where the bigram level runs entirely on CONTINUATION counts
-    derived from the deduped trigram-type table (the KN insight
-    applied at order 2), the unigram floor is t49's add-one
-    continuation, unseen trigram contexts back off to p2, unseen
-    bigram contexts to p_c. Every model quantity is an exact
-    BIGINT; the probability is IEEE ops in ONE shared spelling on
-    both engines; the per-doc sum residue is absorbed by the gap
-    margin (T53_PARAMS).
-
-    Scale: ONE corpus scan feeds the (doc, trigram) hash agg; tri /
-    ctx3 / bgc / ctx2 / uc are successive aggregates on gram-part
-    keys of the already-deduped model table (no extra corpus
-    pass); (N1+(··), V) is a 1-row broadcast; scoring joins carry
-    counts only, never text; no doc-keyed join anywhere."""
-    D = float(T53_PARAMS["discount"])
-    cnt = (
-        docs.select(
-            "_id", "_grp", "_ref", F.explode("_gs").alias("_g")
-        )
-        .groupBy("_id", "_grp", "_ref", "_g")
-        .agg(F.count("*").alias("_c"))
-        .select(
-            "_id",
-            "_grp",
-            "_ref",
-            "_c",
-            F.split("_g", " ").getItem(0).alias("_w1"),
-            F.split("_g", " ").getItem(1).alias("_w2"),
-            F.split("_g", " ").getItem(2).alias("_w3"),
-        )
-    )
-    # r13 (VERDICT r12 item 7): direct-count trigram model table,
-    # lazily localCheckpointed — ctx3 / bgc (and through it ctx2 /
-    # uc / bv) and the scoring join read ONE materialization instead
-    # of each re-running the corpus scan + trigram shingle + agg
-    # chain (the r12 t53 plan carried 6 copies / 18 parquet scans)
-    tri = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_gs").alias("_g"))
-        .select(
-            F.split("_g", " ").getItem(0).alias("_w1"),
-            F.split("_g", " ").getItem(1).alias("_w2"),
-            F.split("_g", " ").getItem(2).alias("_w3"),
-        )
-        .groupBy("_w1", "_w2", "_w3")
-        .agg(F.count("*").alias("_tc"))
-        .localCheckpoint(eager=False)
-    )
-    ctx3 = tri.groupBy("_w1", "_w2").agg(
-        F.sum("_tc").alias("_c3"),
-        F.count("*").cast("bigint").alias("_n1p3"),
-    )
-    # bgc feeds ctx2 / uc / bv / the scoring join (4 consumers) —
-    # derived from the checkpointed tri, but its own agg would still
-    # replay per consumer; bigram-type-bounded, materialize lazily
-    bgc = (
-        tri.groupBy("_w2", "_w3")
-        .agg(F.count("*").cast("bigint").alias("_n1pb"))
-        .localCheckpoint(eager=False)
-    )
-    ctx2 = bgc.groupBy("_w2").agg(
-        F.sum("_n1pb").alias("_cb"),
-        F.count("*").cast("bigint").alias("_n1p2"),
-    )
-    uc = bgc.groupBy("_w3").agg(
-        F.count("*").cast("bigint").alias("_cw")
-    )
-    vocab = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_ws").alias("_w"))
-        .agg(F.count_distinct("_w").cast("bigint").alias("_vu"))
-    )
-    bv = (
-        bgc.agg(F.count("*").cast("bigint").alias("_bt"))
-        .crossJoin(vocab)
-        .select(
-            "_bt",
-            _positive_or_raise(
-                F.col("_vu"), "kn3_perplexity"
-            ).alias("_vu"),
-        )
-    )
-    pc = (F.coalesce(F.col("_cw"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("_bt") + F.col("_vu")
-    )
-    p2 = F.when(F.col("_cb").isNull(), pc).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_n1pb"), F.lit(0)) - F.lit(D),
-                F.lit(0.0),
-            )
-            + F.lit(D) * F.col("_n1p2") * pc
-        )
-        / F.col("_cb")
-    )
-    p = F.when(F.col("_c3").isNull(), p2).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_tc"), F.lit(0)) - F.lit(D),
-                F.lit(0.0),
-            )
-            + F.lit(D) * F.col("_n1p3") * p2
-        )
-        / F.col("_c3")
-    )
-    return (
-        cnt.filter(~F.col("_ref"))
-        .join(tri, ["_w1", "_w2", "_w3"], "left")
-        .join(ctx3, ["_w1", "_w2"], "left")
-        .join(bgc, ["_w2", "_w3"], "left")
-        .join(ctx2, ["_w2"], "left")
-        .join(uc, ["_w3"], "left")
-        .crossJoin(F.broadcast(bv))
-        .groupBy("_id", "_grp")
-        .agg(
-            (
-                -F.sum(F.col("_c") * F.ln(p)) / F.sum("_c")
-            ).alias("_nll")
-        )
-    )
-
-
-def kn3_perplexity_ledger(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    group_col: str,
-    ref_frac: float = 0.25,
-    ppl_cutoff: float = 39.048,
-) -> DataFrame:
-    """Cross-corpus perplexity filtering with TRIGRAM interpolated
-    Kneser–Ney smoothing (round 12 — the order-3 rung of the
-    ladder t46 add-one → t48 absolute discounting → t49 bigram KN
-    → this; production KenLM ships order 4–5, and order 3 is where
-    the RECURSION — discounted raw counts at the top, continuation
-    counts at every lower level — first fully exercises): the
-    reference-slice trigram LM scores every non-reference document
-    and the per-source keep/drop ledger comes back all-BIGINT.
-
-    Split/exactness contract identical to t46/t48/t49 (same
-    md5-keyed structural slice isolation on both engines, same
-    all-BIGINT ledger, cutoff chosen BY the gap scan — see
-    T53_PARAMS for the calibration record). n_short counts docs
-    with no trigram (fewer than 3 tokens).
-
-    Returns (group, n_ref, n_eval, n_short, n_keep, n_drop)."""
-    import math
-
-    lncut = math.log(ppl_cutoff)
-    docs = _kn3_docs(df, text_col, id_col, group_col, ref_frac)
-    sc = _kn3_doc_nll(docs)
-    counts = docs.groupBy("_grp").agg(
-        F.sum(F.col("_ref").cast("bigint")).alias("n_ref"),
-        F.sum((~F.col("_ref")).cast("bigint")).alias("n_eval"),
-        F.sum(
-            ((~F.col("_ref")) & (F.size("_gs") == 0)).cast("bigint")
-        ).alias("n_short"),
-    )
-    return _keep_drop_ledger(
-        counts, sc, group_col, lncut, ["n_ref", "n_eval", "n_short"]
-    )
-
-
-def kn3_fit_model(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    ref_frac: float = 0.25,
-) -> DataFrame:
-    """The DEPLOYABLE artifact of t53's training half: ONE table
-    (kind, g, c) carrying the deduped reference trigram counts
-    (kind='tri', g = 'w1 w2 w3') and the reference unigram
-    vocabulary size (kind='vocab', g NULL) — every other model
-    quantity (ctx3, continuation tables, N1+(··)) re-derives from
-    the trigram rows with bounded aggregates, so this one parquet
-    IS the whole order-3 model (the xcorpus/absdisc train-offline
-    pattern; V must ship explicitly because words in sub-trigram
-    documents never reach the trigram table)."""
-    docs = _kn3_docs(df, text_col, id_col, id_col, ref_frac)
-    tri = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_gs").alias("g"))
-        .groupBy("g")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit("tri").alias("kind"), "g", "c")
-    )
-    vocab = (
-        docs.filter(F.col("_ref"))
-        .select(F.explode("_ws").alias("_w"))
-        .agg(F.count_distinct("_w").cast("bigint").alias("c"))
-        .select(
-            F.lit("vocab").alias("kind"),
-            F.lit(None).cast("string").alias("g"),
-            "c",
-        )
-    )
-    return tri.unionByName(vocab)
-
-
-def kn3_ledger_with_model(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    group_col: str,
-    model: DataFrame,
-    ppl_cutoff: float = 39.048,
-) -> DataFrame:
-    """Score EVERY document against a FIXED trained trigram-KN
-    model (the deployment half of t53 — training happened offline
-    via ``kn3_fit_model``): per-group keep/drop ledger (group,
-    n_docs, n_short, n_keep, n_drop), all exact BIGINTs. The
-    per-document verdict depends only on the document and the
-    fixed model, so the counters are ADDITIVE — the streaming
-    drift monitor's micro-batch partial IS this operator.
-
-    The probability is t53's spelling exactly, with ctx3 / the
-    continuation tables / N1+(··) re-derived from the stored
-    trigram rows (bounded aggregates per call) and V read from the
-    stored vocab row; the V guard raises loudly on an empty or
-    degenerate model (aggregate extraction, never a bare filter —
-    the nb_eval_with_model discipline)."""
-    import math
-
-    D = float(T53_PARAMS["discount"])
-    lncut = math.log(ppl_cutoff)
-    from zappy_spark.operators.dedup import word_shingles
-
-    docs = df.select(
-        F.col(group_col).alias("_grp"),
-        word_shingles(F.col(text_col), 3, filter_empty=True).alias(
-            "_gs"
-        ),
-        F.col(id_col).alias("_rid"),
-    )
-    tri = model.filter(F.col("kind") == "tri").select(
-        F.split("g", " ").getItem(0).alias("_w1"),
-        F.split("g", " ").getItem(1).alias("_w2"),
-        F.split("g", " ").getItem(2).alias("_w3"),
-        F.col("c").alias("_tc"),
-    )
-    ctx3 = tri.groupBy("_w1", "_w2").agg(
-        F.sum("_tc").alias("_c3"),
-        F.count("*").cast("bigint").alias("_n1p3"),
-    )
-    bgc = tri.groupBy("_w2", "_w3").agg(
-        F.count("*").cast("bigint").alias("_n1pb")
-    )
-    ctx2 = bgc.groupBy("_w2").agg(
-        F.sum("_n1pb").alias("_cb"),
-        F.count("*").cast("bigint").alias("_n1p2"),
-    )
-    uc = bgc.groupBy("_w3").agg(
-        F.count("*").cast("bigint").alias("_cw")
-    )
-    vocab = (
-        model.filter(F.col("kind") == "vocab")
-        .agg(F.sum("c").alias("_vu"))
-        .select(
-            _positive_or_raise(
-                F.col("_vu"), "kn3_ledger_with_model"
-            ).alias("_vu")
-        )
-    )
-    bv = (
-        bgc.agg(F.count("*").cast("bigint").alias("_bt"))
-        .crossJoin(vocab)
-    )
-    cnt = (
-        docs.select("_rid", "_grp", F.explode("_gs").alias("_g"))
-        .groupBy("_rid", "_grp", "_g")
-        .agg(F.count("*").alias("_c"))
-        .select(
-            "_rid",
-            "_grp",
-            "_c",
-            F.split("_g", " ").getItem(0).alias("_w1"),
-            F.split("_g", " ").getItem(1).alias("_w2"),
-            F.split("_g", " ").getItem(2).alias("_w3"),
-        )
-    )
-    pc = (F.coalesce(F.col("_cw"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("_bt") + F.col("_vu")
-    )
-    p2 = F.when(F.col("_cb").isNull(), pc).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_n1pb"), F.lit(0)) - F.lit(D),
-                F.lit(0.0),
-            )
-            + F.lit(D) * F.col("_n1p2") * pc
-        )
-        / F.col("_cb")
-    )
-    p = F.when(F.col("_c3").isNull(), p2).otherwise(
-        (
-            F.greatest(
-                F.coalesce(F.col("_tc"), F.lit(0)) - F.lit(D),
-                F.lit(0.0),
-            )
-            + F.lit(D) * F.col("_n1p3") * p2
-        )
-        / F.col("_c3")
-    )
-    sc = (
-        cnt.join(tri, ["_w1", "_w2", "_w3"], "left")
-        .join(ctx3, ["_w1", "_w2"], "left")
-        .join(bgc, ["_w2", "_w3"], "left")
-        .join(ctx2, ["_w2"], "left")
-        .join(uc, ["_w3"], "left")
-        .crossJoin(F.broadcast(bv))
-        .groupBy("_rid", "_grp")
-        .agg(
-            (
-                -F.sum(F.col("_c") * F.ln(p)) / F.sum("_c")
-            ).alias("_nll")
-        )
-    )
-    base = docs.groupBy("_grp").agg(
-        F.count("*").alias("n_docs"),
-        F.sum((F.size("_gs") == 0).cast("bigint")).alias("n_short"),
-    )
-    return _keep_drop_ledger(
-        base, sc, group_col, lncut, ["n_docs", "n_short"]
     )

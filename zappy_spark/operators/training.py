@@ -344,7 +344,7 @@ def filter_agreement_ledger(
     lr_den: int = 2,
 ) -> DataFrame:
     """Agreement audit between the two deployed quality-filter
-    families (round 11 — the decision artifact a data team reviews
+    families (the decision artifact a data team reviews
     before switching filters): the trained logistic classifier
     (v28) and the cross-corpus perplexity LM (t46) each produce a
     keep/drop verdict; this emits the per-source 2x2 grid over the
@@ -360,15 +360,13 @@ def filter_agreement_ledger(
     operation is ONE narrow equi-join of the two verdict frames on
     the id — both sides are (id, verdict) projections, hash-
     partitioned on the same key, carrying two columns each."""
-    from zappy_spark.operators.text import (
-        _xcorpus_doc_nll,
-        _xcorpus_docs,
-    )
     import math
+
+    from zappy_spark.operators.text import _ADD1, _docs
 
     s = LOGREG_SCALE
     lncut = math.log(ppl_cutoff)
-    # r13: one materialized feature frame for fit + verdict scoring
+    # one materialized feature frame for fit + verdict scoring
     feat = logreg_features(df, text_col, extra=(id_col,)).localCheckpoint(
         eager=False
     )
@@ -385,9 +383,7 @@ def filter_agreement_ledger(
         feat.select(F.col(id_col).alias("_id"), z.alias("_z"))
         .select("_id", _hard_sigmoid_keep(p).cast("int").alias("_kc"))
     )
-    lm = _xcorpus_doc_nll(
-        _xcorpus_docs(df, text_col, id_col, group_col, ref_frac)
-    ).select(
+    lm = _ADD1(_docs(df, text_col, id_col, group_col, ref_frac)).select(
         "_id", "_grp", (F.col("_nll") < F.lit(lncut)).cast("int").alias("_kl")
     )
     both = lm.join(clf, "_id")
@@ -435,9 +431,9 @@ def filter_agreement_cube(
     n_iter: int = 8,
     lr_den: int = 2,
 ) -> DataFrame:
-    """Three-filter agreement audit (round 12, VERDICT r11 item 6 —
-    the decision artifact that picks WHICH perplexity family drives
-    mixture weights once three filters are deployed): the v28
+    """Three-filter agreement audit (the decision artifact that picks
+    WHICH perplexity family drives mixture weights once three filters
+    are deployed): the v28
     trained logistic classifier, the t46 add-one LM, and the t49
     interpolated-KN LM each verdict every document both LMs score
     (the shared md5-keyed non-reference slice — identical for both
@@ -450,23 +446,18 @@ def filter_agreement_cube(
     Francisco' unit pin demonstrates at document scale.
 
     Zero re-spelling: the classifier verdict is the shared
-    ``_logreg_z``/``_hard_sigmoid_keep`` chain, the LM scores are
-    ``_xcorpus_doc_nll`` and ``_kn_doc_nll`` verbatim (the same
-    helpers t46/t49 build their ledgers from), and the oracle
+    ``_logreg_z``/``_hard_sigmoid_keep`` chain, the LM scores are the
+    in-pass scores of text.py's ``_ADD1`` and ``_KN`` (the same
+    scorer t46/t49 build their ledgers from), and the oracle
     concatenates the logistic-GD prefix with the VERBATIM
     ``_t46_chain`` and ``_t49_chain``. The only doc-keyed ops are
     two narrow (id, verdict) equi-joins — both sides 2–3 column
     frames hash-partitioned on the id."""
     import math
 
-    from zappy_spark.operators.text import (
-        _kn_doc_nll,
-        _xcorpus_doc_nll,
-        _xcorpus_docs,
-        _xcorpus_docs_ws,
-    )
+    from zappy_spark.operators.text import _ADD1, _KN, _docs
 
-    # r13: one materialized feature frame for fit + verdict scoring
+    # one materialized feature frame for fit + verdict scoring
     feat = logreg_features(df, text_col, extra=(id_col,)).localCheckpoint(
         eager=False
     )
@@ -482,18 +473,15 @@ def filter_agreement_cube(
         feat.select(F.col(id_col).alias("_id"), z.alias("_z"))
         .select("_id", _hard_sigmoid_keep(p).cast("int").alias("_kc"))
     )
-    lm = _xcorpus_doc_nll(
-        _xcorpus_docs(df, text_col, id_col, group_col, ref_frac)
-    ).select(
+    docs = _docs(df, text_col, id_col, group_col, ref_frac)
+    lm = _ADD1(docs).select(
         "_id",
         "_grp",
         (F.col("_nll") < F.lit(math.log(cutoff_lm)))
         .cast("int")
         .alias("_kl"),
     )
-    kn = _kn_doc_nll(
-        _xcorpus_docs_ws(df, text_col, id_col, group_col, ref_frac)
-    ).select(
+    kn = _KN(docs).select(
         "_id",
         (F.col("_nll") < F.lit(math.log(cutoff_kn)))
         .cast("int")

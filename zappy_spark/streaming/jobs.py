@@ -61,16 +61,36 @@ def _replay_dir(
     rows in ``order``, one file after the other, so a file-source
     stream (which triggers by modification time) replays them in
     that order."""
-    from pyspark.sql import Window
-
-    ranked = load_table(spark, sf_dir, table).withColumn(
-        "_rn", F.row_number().over(Window.orderBy(*order))
+    # One distributed sort, checkpointed. Its range partitions are in
+    # key order and monotonically_increasing_id is (partition << 33) +
+    # row-in-partition, so _i increases along the sort; the partition
+    # sizes turn a rank into its _i.
+    ranked = (
+        load_table(spark, sf_dir, table)
+        .orderBy(*order)
+        .withColumn("_i", F.monotonically_increasing_id())
+        .localCheckpoint()
     )
-    per = (ranked.count() + n_files - 1) // n_files
-    for i in range(n_files):
+    sizes = (
+        ranked.groupBy(F.shiftright("_i", 33).alias("p"))
+        .count()
+        .orderBy("p")
+        .collect()
+    )
+
+    def at(rank: int) -> int:
+        for p, c in sizes:
+            if rank < c:
+                return (p << 33) + rank
+            rank -= c
+        return (sizes[-1][0] + 1) << 33 if sizes else 0
+
+    per = (sum(c for _, c in sizes) + n_files - 1) // n_files
+    bounds = [at(i * per) for i in range(n_files + 1)]
+    for lo, hi in zip(bounds, bounds[1:]):
         (
-            ranked.filter(F.col("_rn").between(i * per + 1, (i + 1) * per))
-            .drop("_rn")
+            ranked.filter((F.col("_i") >= lo) & (F.col("_i") < hi))
+            .drop("_i")
             .coalesce(1)
             .write.mode("append")
             .parquet(out_dir)
