@@ -2058,6 +2058,21 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         assert abs(got[i] - r[i]) < 1e-6, (i, got[i], r[i])
 
 
+def test_graph_non_convergence_raises(spark):
+    """An iterative operator that runs out of rounds before its
+    convergence probe passes raises, naming itself, instead of
+    returning a partial answer."""
+    from zappy_spark.operators.graph import connected_components, pagerank
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "i bigint, j bigint"
+    )
+    with pytest.raises(RuntimeError, match="connected_components"):
+        connected_components(chain, max_iter=3).collect()
+    with pytest.raises(RuntimeError, match="pagerank"):
+        pagerank(chain, max_iter=3, tol=0.0).collect()
+
+
 @pytest.mark.slow
 def test_batch_ivfpq_probe_full_equals_exact(spark, tmp_path):
     """Batch IVF-PQ: with every cell probed and a full shortlist the
@@ -2139,6 +2154,20 @@ def test_personalized_pagerank_concentrates_on_seed(spark):
     )
     alt = {r.node: r.rank for r in every.collect()}
     assert all(abs(std[k] - alt[k]) < 1e-9 for k in std)
+
+    # the teleport mass splits over the DISTINCT seeds IN the graph:
+    # an absent or a repeated seed changes nothing
+    for seeds in ([0, 99], [0, 0]):
+        got = {
+            r.node: r.rank
+            for r in pagerank(
+                df, max_iter=200, tol=1e-12, restart=seeds
+            ).collect()
+        }
+        assert abs(sum(got.values()) - 1.0) < 1e-12, seeds
+        assert all(abs(got[k] - ppr[k]) < 1e-12 for k in ppr), seeds
+    with pytest.raises(ValueError, match="restart"):
+        pagerank(df, max_iter=200, tol=1e-12, restart=[99])
 
 
 def test_publish_with_audit_gates_bad_data(spark, tmp_path):

@@ -1,4 +1,5 @@
-"""Iterative DataFrame algorithms: connected components, PageRank.
+"""Iterative DataFrame graph algorithms: connected components,
+PageRank, HITS, label propagation, BFS, and triangle counting.
 
 Near-duplicate pairs form a graph; production dedup keeps one
 representative per CONNECTED COMPONENT (transitive closure), not per
@@ -6,15 +7,22 @@ pair — (a,b) and (b,c) near-dups mean a,b,c are one cluster even if
 (a,c) was never generated. This is also the missing piece most
 pair-based dedup implementations get subtly wrong.
 
-Algorithm: iterative min-label propagation (each node adopts the
-smallest component id among itself and its neighbors, until
-fixpoint). Per iteration: one join + one aggregation — both
-hash-partitioned on the node id, so at 100 TB each round is two
-shuffles over (node, label) pairs. Lineage is cut every iteration
-with localCheckpoint, or Catalyst plans grow exponentially — the
-standard pattern for iterative DataFrame algorithms.
-Converges in O(diameter) rounds; near-dup clusters are shallow
-(diameter ≲ 5), so 10 rounds is a generous default.
+Every iterative operator here is one vertex program (the Pregel /
+GraphX ``aggregateMessages`` model). ``_edge_table`` builds the
+distinct (a, b) edge set, checkpointed once; ``_send`` joins
+node-sized state onto it by ``a`` and emits messages to
+``node = b``; each operator combines the messages per node (min for
+CC and BFS, the mode for label propagation, a sum for PageRank and
+HITS); and ``_rounds`` runs the rounds, cutting lineage every round
+and applying an optional convergence probe. Per round: one join +
+one aggregation, both hash-partitioned on the node id, so at
+100 TB each round is two shuffles over (node, value) pairs.
+
+Connected components is iterative min-label propagation (each node
+adopts the smallest component id among itself and its neighbors,
+until fixpoint). It converges in O(diameter) rounds; near-dup
+clusters are shallow (diameter ≲ 5), so 20 rounds is a generous
+default.
 """
 
 from __future__ import annotations
@@ -61,18 +69,72 @@ _NODE_ROW_BYTES = 32
 
 
 def _node_broadcast_ok(spark, n_nodes: int) -> bool:
-    """r13 (VERDICT r12 item 1): ``F.broadcast`` is a hard hint with
-    no size fallback — at 100 TB a graph's node set can exceed
-    driver/executor memory and the hint OOMs instead of degrading to
-    a shuffle join. Gate the node-frame broadcast on the same budget
-    the planner uses for automatic broadcasts
-    (spark.sql.autoBroadcastJoinThreshold; -1 disables, matching the
-    planner's semantics); above it the per-round join falls back to
-    the shuffle strategies, which spill gracefully."""
+    """``F.broadcast`` is a hard hint with no size fallback — at
+    100 TB a graph's node set can exceed driver/executor memory and
+    the hint OOMs instead of degrading to a shuffle join. Gate the
+    node-frame broadcast on the same budget the planner uses for
+    automatic broadcasts (spark.sql.autoBroadcastJoinThreshold; -1
+    disables, matching the planner's semantics); above it the
+    per-round join falls back to the shuffle strategies, which spill
+    gracefully."""
     thresh = _parse_byte_conf(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
     )
     return thresh > 0 and n_nodes * _NODE_ROW_BYTES <= thresh
+
+
+def _edge_table(
+    edges: DataFrame, src: str, dst: str, undirected: bool
+) -> DataFrame:
+    """The distinct (a, b) edge set of ``edges``, with both
+    directions when ``undirected`` is set. Callers checkpoint it
+    once: ``edges`` may be an expensive upstream plan (e.g. the full
+    MinHash-LSH pipeline), and every round joins against it."""
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    if undirected:
+        e = e.union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+    return e.distinct()
+
+
+def _send(
+    e: DataFrame, state: DataFrame, cols: list, bcast: bool = False
+) -> DataFrame:
+    """One message step: join node-sized ``state`` (keyed ``node``)
+    onto the edge table ``e`` by ``a`` and emit ``cols`` to
+    ``node = b``. Broadcasting the state keeps the much larger edge
+    table from re-shuffling every round, but ``F.broadcast`` has no
+    size fallback, so ``bcast`` is set only where
+    ``_node_broadcast_ok`` admits the node count."""
+    s = F.broadcast(state) if bcast else state
+    return e.join(s, e["a"] == s["node"]).select(
+        F.col("b").alias("node"), *cols
+    )
+
+
+def _min_over(own: DataFrame, msgs: DataFrame, *cols: str) -> DataFrame:
+    """Per node, the min of each of ``cols`` over the node's own row
+    and its messages: the CC and BFS combine."""
+    return (
+        own.unionByName(msgs)
+        .groupBy("node")
+        .agg(*[F.min(c).alias(c) for c in cols])
+    )
+
+
+def _rounds(state: DataFrame, step, rounds: int, done=None, op: str = ""):
+    """Run ``rounds`` rounds of ``state = step(state)``. Lineage is
+    cut every round: each round's plan stacks on the last, so an
+    uncut loop plans (and re-executes) every earlier round again.
+    ``done`` is an optional probe on the cut state; when it is given
+    and never passes, raise RuntimeError naming ``op`` — silent
+    partial convergence would return wrong answers."""
+    for _ in range(rounds):
+        state = step(state).localCheckpoint()
+        if done is not None and done(state):
+            return state
+    if done is not None:
+        raise RuntimeError(f"{op} did not converge in {rounds} iterations")
+    return state
 
 
 def connected_components(
@@ -87,62 +149,30 @@ def connected_components(
     Raises RuntimeError if not converged within ``max_iter`` —
     silent partial convergence would mis-cluster.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        # edges may be an expensive upstream plan (e.g. the full
-        # MinHash-LSH pipeline); materialize once so each round is a
-        # cheap join instead of a full recompute
-        .localCheckpoint()
-    )
+    sym = _edge_table(edges, src, dst, True).localCheckpoint()
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
     comp_t = dict(labels.dtypes)["component"]
-    for _ in range(max_iter):
-        # each node's candidate label: min over its own label and its
-        # neighbors' labels. r12 (guide §2.4): the previous label
-        # rides along as ``_old`` (non-null only on the own-label
-        # branch — exactly one row per node, so min() recovers it),
-        # which fuses the convergence check into the same aggregate:
-        # ``changed`` becomes a filter over the already-checkpointed
-        # node-sized frame instead of a per-round node-keyed
-        # join+count job. min(component) is over the identical
-        # own ∪ neighbors row multiset, so labels are unchanged.
-        neighbor_labels = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .select(
-                F.col("a").alias("node"),
-                "component",
-                F.lit(None).cast(comp_t).alias("_old"),
-            )
+
+    def step(s: DataFrame) -> DataFrame:
+        # the previous label rides along as ``_old``, non-null only on
+        # the node's own row, so min() recovers it and the convergence
+        # probe is a filter over the cut frame instead of a join
+        own = s.select("node", "component", F.col("component").alias("_old"))
+        msgs = _send(
+            sym, s, ["component", F.lit(None).cast(comp_t).alias("_old")]
         )
-        own_labels = labels.select(
-            "node", "component", F.col("component").alias("_old")
-        )
-        new_labels = (
-            own_labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.min("_old").alias("_old"),
-            )
-            .localCheckpoint()  # cut lineage each round
-        )
-        changed = (
-            new_labels.filter(F.col("component") != F.col("_old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select("node", "component")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations"
-    )
+        return _min_over(own, msgs, "component", "_old")
+
+    def done(s: DataFrame) -> bool:
+        changed = s.filter(F.col("component") != F.col("_old"))
+        return changed.limit(1).count() == 0
+
+    labels = _rounds(labels, step, max_iter, done, "connected_components")
+    return labels.select("node", "component")
 
 
 def drop_cluster_dups(
@@ -174,14 +204,13 @@ def pagerank(
     sources, which pages anchor a crawl). Returns (node, rank),
     ranks summing to 1.
 
-    Same iterative-DataFrame discipline as connected_components:
-    per round ONE join (ranks onto out-edges) + ONE aggregation
+    Per round ONE join (ranks onto out-edges) + ONE aggregation
     (sum of incoming contributions), both hash-partitioned on node
-    ids, lineage cut with localCheckpoint every round. Dangling-node
-    mass (nodes with no out-edges) is redistributed uniformly — the
-    standard stochastic-matrix completion — via one tiny scalar agg
-    per round. Convergence is checked on the L1 delta (one scalar
-    per round); raises RuntimeError if not converged, like CC.
+    ids, lineage cut every round. Dangling-node mass (nodes with no
+    out-edges) is redistributed uniformly — the standard
+    stochastic-matrix completion — via one tiny scalar agg per
+    round. Convergence is checked on the L1 delta (one scalar per
+    round); raises RuntimeError if not converged, like CC.
     ``exact_iters`` runs EXACTLY that many rounds, no early stop and
     no convergence requirement — the deterministic mode a
     fixed-iteration SQL oracle can replay.
@@ -189,37 +218,23 @@ def pagerank(
     lands uniformly on the given SEED NODES instead of all nodes —
     Personalized PageRank, the "importance relative to this seed
     set" variant behind related-document ranking. Seeds absent from
-    the graph are ignored.
+    the graph and repeated seeds are ignored; raises ValueError when
+    no seed is in the graph.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0,1), got {damping}")
     if restart is not None and not restart:
         raise ValueError("restart set must be non-empty when given")
-    # r12 (guide §2.4/§1.2): attach out-degrees to edges ONCE instead
-    # of re-joining out_deg inside every round, and keep the dangling
-    # mass IN-PLAN as a 1-row broadcast instead of a per-round
-    # .first() driver job. r13 (VERDICT r12 item 3): the degree
-    # attach is now a WINDOW count over the distinct edge list
-    # instead of groupBy+self-join — count(*) over (partition by a)
-    # IS the out-degree (same exact BIGINT), but it shuffles the
-    # edge table once instead of twice and drops the separate
-    # materialization of the bare edge list (setup was 2 edge-sized
-    # checkpoints + an edge⋈degree SortMergeJoin; now 1 checkpoint,
-    # no join). The per-round arithmetic still spells the former
-    # Python constant-folding exactly ((d·dangling)/n,
-    # ((1−d)+d·dangling)/|seeds|).
+    # out-degrees ride on the edge table, so no round re-joins them;
+    # count(*) over (partition by a) of the distinct edges IS the
+    # out-degree
     e_deg = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .distinct()
+        _edge_table(edges, src, dst, False)
         .withColumn("deg", F.count("*").over(Window.partitionBy("a")))
         .localCheckpoint()
     )
-    # r13: the node set and the dangling probe come out of ONE
-    # aggregate — a source-marker rides the same union/dedup shuffle
-    # (max(_src)=0 ⇔ the node never appears as a source ⇔ it
-    # dangles), so the r12 probe's separate node⋈edge anti-join job
-    # disappears; the probe is a filter over the checkpointed
-    # node-sized frame. Same node set, same truth value.
+    # node set and dangling marker from ONE aggregate: max(_src) = 0
+    # iff the node never appears as a source, i.e. it dangles
     node_info = (
         e_deg.select(F.col("a").alias("node"), F.lit(1).alias("_src"))
         .union(e_deg.select(F.col("b").alias("node"), F.lit(0).alias("_src")))
@@ -230,112 +245,71 @@ def pagerank(
     n = node_info.count()
     if n == 0:
         raise ValueError("pagerank of an empty graph")
-    nodes = node_info.select("node")
-    # r12: if NO node dangles, the per-round dangling mass is the
-    # sum over an empty set ≡ 0.0 for every round regardless of
-    # ranks, and x + d·0.0/n == x bit-exactly in IEEE — so the whole
-    # per-round dangling broadcast subtree can be dropped up front.
-    # Symmetrized graphs (v16's trade graph, every CC/LPA-style sym
-    # edge set) always take this path.
-    has_dangling = (
-        node_info.filter(F.col("_src") == 0).limit(1).count() > 0
-    )
-    # ranks is |nodes|-sized — broadcasting it keeps the edge table
-    # (checkpointed once, orders of magnitude larger) from ever
-    # re-shuffling, and the contrib agg's map-side partials reduce
-    # each scan partition to <= |nodes| rows before the only
-    # per-round exchange (guide §2.3/§2.4). r13: gated on the node
-    # count (_node_broadcast_ok) — above the broadcast budget the
-    # join falls back to the planner's shuffle strategies instead of
-    # OOMing on a graph-sized hard hint.
-    bcast_ranks = _node_broadcast_ok(edges.sparkSession, n)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    rounds = exact_iters if exact_iters is not None else max_iter
-    for _ in range(rounds):
-        contrib = (
-            e_deg.join(
-                F.broadcast(ranks) if bcast_ranks else ranks,
-                e_deg["a"] == ranks["node"],
-            )
-            .select(
-                F.col("b").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
+    dangling = node_info.filter(F.col("_src") == 0).select("node")
+    # with no dangling node the per-round mass is a sum over an empty
+    # set, 0.0 every round, and x + d·0.0/n == x bit-exactly in IEEE,
+    # so the dangling subquery can be dropped up front (symmetrized
+    # graphs, like v16's trade graph, always take this path)
+    has_dangling = dangling.limit(1).count() > 0
+    dangling_col = F.col("_dangling") if has_dangling else F.lit(0.0)
+    if restart is None:
+        base_col = F.lit((1.0 - damping) / n) + (
+            F.lit(damping) * dangling_col
+        ) / F.lit(float(n))
+    else:
+        seeds = [int(x) for x in restart]
+        # teleport mass splits over the distinct seeds in the graph
+        k = node_info.filter(F.col("node").isin(seeds)).count()
+        if k == 0:
+            raise ValueError("restart set has no node in the graph")
+        per_seed = (
+            F.lit(1.0 - damping) + F.lit(damping) * dangling_col
+        ) / F.lit(float(k))
+        base_col = F.when(F.col("node").isin(seeds), per_seed).otherwise(
+            F.lit(0.0)
         )
-        # dangling mass: rank held by nodes with no out-edges —
-        # a 1-row aggregate broadcast into the update plan (skipped
-        # when the probe above proved the set empty: the mass is
-        # 0.0 every round and x + d·0/n == x bit-exactly)
-        # r12 (guide §2.4): in convergence mode the previous rank
-        # rides along as ``_prev`` so the L1-delta check aggregates
-        # over the checkpointed frame instead of re-joining old and
-        # new ranks per round (the CC changed-check fusion). ranks
-        # has exactly one row per node, so the join keys and the new
-        # rank expression are unchanged; exact_iters mode (the v16
-        # plan) keeps the node-only left side.
-        # (r13 measured negative: hinting F.broadcast(contrib) into
-        # this update join added an eager broadcast build per round
-        # for +0.8 s — AQE already converts the small-side join at
-        # runtime. Left unhinted.)
-        if exact_iters is None:
-            updated = ranks.select(
-                "node", F.col("rank").alias("_prev")
-            ).join(contrib, "node", "left")
-        else:
-            updated = nodes.join(contrib, "node", "left")
+    rank_col = (
+        base_col + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
+    ).alias("rank")
+    bcast = _node_broadcast_ok(edges.sparkSession, n)
+
+    def step(ranks: DataFrame) -> DataFrame:
+        # each node's own row rides the message shuffle with its
+        # previous rank as ``_prev`` (for the L1 probe) and a null
+        # contribution, which sum() skips. A left join of a node frame
+        # onto the summed contributions would re-shuffle that frame
+        # every round: AQE turns the join into a broadcast with a
+        # local read, so no checkpoint keeps a hash partitioning. The
+        # own rows come first in the union, so the contributions'
+        # partial sums merge in the same order as without them.
+        none = F.lit(None).cast("double")
+        own = ranks.select(
+            "node", F.col("rank").alias("_prev"), none.alias("c")
+        )
+        c = (F.col("rank") / F.col("deg")).alias("c")
+        msgs = _send(e_deg, ranks, [none.alias("_prev"), c], bcast)
+        upd = (
+            own.unionByName(msgs)
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"), F.max("_prev").alias("_prev"))
+        )
         if has_dangling:
-            # r13: the dangling node SET is static — read it from
-            # the checkpointed node_info marker instead of
-            # re-anti-joining the (much larger) edge table per round
-            dang = F.broadcast(
-                ranks.join(
-                    node_info.filter(F.col("_src") == 0).select("node"),
-                    "node",
-                    "left_semi",
-                ).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-                )
+            mass = ranks.join(dangling, "node", "left_semi").agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
             )
-            updated = updated.crossJoin(dang)
-            dangling_col = F.col("_dangling")
-        else:
-            dangling_col = F.lit(0.0)
-        if restart is None:
-            base_col = F.lit((1.0 - damping) / n) + (
-                F.lit(damping) * dangling_col
-            ) / F.lit(float(n))
-        else:
-            seeds = [int(x) for x in restart]
-            per_seed = (
-                F.lit(1.0 - damping) + F.lit(damping) * dangling_col
-            ) / F.lit(float(len(seeds)))
-            base_col = F.when(
-                F.col("node").isin(seeds), per_seed
-            ).otherwise(F.lit(0.0))
-        rank_col = (
-            base_col + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-        ).alias("rank")
-        if exact_iters is None:
-            new_ranks = updated.select(
-                "node", rank_col, "_prev"
-            ).localCheckpoint()
-            delta = (
-                new_ranks.agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_prev")))
-                ).first()[0]
-            )
-            ranks = new_ranks.select("node", "rank")
-            if delta < tol:
-                return ranks
-        else:
-            ranks = updated.select("node", rank_col).localCheckpoint()
+            upd = upd.crossJoin(F.broadcast(mass))
+        return upd.select("node", rank_col, "_prev")
+
+    def done(ranks: DataFrame) -> bool:
+        delta = F.sum(F.abs(F.col("rank") - F.col("_prev")))
+        return ranks.agg(delta).first()[0] < tol
+
+    ranks = node_info.select("node").withColumn("rank", F.lit(1.0 / n))
     if exact_iters is not None:
-        return ranks
-    raise RuntimeError(
-        f"pagerank did not converge within {max_iter} iterations"
-    )
+        ranks = _rounds(ranks, step, exact_iters)
+    else:
+        ranks = _rounds(ranks, step, max_iter, done, "pagerank")
+    return ranks.select("node", "rank")
 
 
 def hits_bipartite(
@@ -364,39 +338,23 @@ def hits_bipartite(
     thousand-degree graphs — raise to DECIMAL(38,0) beyond.
 
     Per half-round: ONE join (scores onto edges) + ONE integer sum
-    aggregate, hash-partitioned on node ids; lineage cut per round
-    (localCheckpoint), same iterative discipline as
-    connected_components/pagerank."""
+    aggregate, hash-partitioned on node ids; lineage cut per
+    hub → authority → hub round."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = (
-        edges.select(F.col(src).alias("o"), F.col(dst).alias("p"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _edge_table(edges, src, dst, False).localCheckpoint()
+    rev = e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+
+    def half(edge: DataFrame, s: DataFrame) -> DataFrame:
+        return _send(edge, s, ["v"]).groupBy("node").agg(F.sum("v").alias("v"))
+
     hub = (
-        e.select(F.col("o").alias("node"))
+        e.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("v", F.lit(1).cast("bigint"))
     )
-    auth = None
-    for k in range(iters):
-        auth = (
-            e.join(hub, e["o"] == hub["node"])
-            .groupBy("p")
-            .agg(F.sum("v").alias("v"))
-            .select(F.col("p").alias("node"), "v")
-            .localCheckpoint()
-        )
-        if k < iters - 1:
-            hub = (
-                e.join(auth, e["p"] == auth["node"])
-                .groupBy("o")
-                .agg(F.sum("v").alias("v"))
-                .select(F.col("o").alias("node"), "v")
-                .localCheckpoint()
-            )
-    return auth.select("node", F.col("v").alias("auth"))
+    hub = _rounds(hub, lambda h: half(rev, half(e, h)), iters - 1)
+    return half(e, hub).select("node", F.col("v").alias("auth"))
 
 
 def label_propagation(
@@ -420,44 +378,27 @@ def label_propagation(
     (count DESC, label ASC) tie-break), so a fixed-iteration
     recursive-CTE oracle replays it exactly — the same trick as
     pagerank's exact_iters and the d19 closure. Per round: ONE join
-    (labels onto edges) + ONE count aggregate + ONE per-node
-    row_number pick, all hash-partitioned on node ids; lineage cut
-    with localCheckpoint every round. At 100 TB: rounds are
-    constant-cost joins; iters bounds wall-clock regardless of
-    graph diameter (unlike CC, LPA is run for a fixed budget)."""
+    (labels onto edges) + ONE count aggregate + ONE per-node mode
+    aggregate, all hash-partitioned on node ids; lineage cut every
+    round. At 100 TB: rounds are constant-cost joins; iters bounds
+    wall-clock regardless of graph diameter (unlike CC, LPA is run
+    for a fixed budget)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _edge_table(edges, src, dst, True).localCheckpoint()
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    # r13 (VERDICT r12 item 1): one up-front node count gates the
-    # per-round broadcast hint — labels can be graph-sized in
-    # general, and a hard hint has no fallback (see
-    # _node_broadcast_ok). The count is a bounded probe over the
-    # checkpointed sym frame; the label values are unchanged either
-    # way (exact-int counts, total-order tie-break).
-    bcast_labels = _node_broadcast_ok(edges.sparkSession, labels.count())
-    for _ in range(iters):
-        # r12: labels is |nodes|-sized — broadcast it so the edge
-        # table never re-shuffles, and pick the modal label with ONE
-        # aggregate (min over the (-count, label) struct ≡ the old
-        # row_number window's (count DESC, label ASC) pick — counts
-        # are exact ints, so the winner is identical) instead of a
-        # per-round shuffle+sort window (guide §2.3/§2.4).
-        votes = sym.join(
-            F.broadcast(labels) if bcast_labels else labels,
-            sym["b"] == labels["node"],
-        ).select(F.col("a").alias("node"), "label")
-        labels = (
-            votes.groupBy("node", "label")
+    bcast = _node_broadcast_ok(edges.sparkSession, labels.count())
+
+    def step(s: DataFrame) -> DataFrame:
+        # the mode in ONE aggregate: min over the (-count, label)
+        # struct is the (count DESC, label ASC) pick
+        return (
+            _send(sym, s, ["label"], bcast)
+            .groupBy("node", "label")
             .agg(F.count("*").alias("c"))
             .groupBy("node")
             .agg(
@@ -469,9 +410,9 @@ def label_propagation(
                 ).alias("_m")
             )
             .select("node", F.col("_m.label").alias("label"))
-            .localCheckpoint()
         )
-    return labels
+
+    return _rounds(labels, step, iters)
 
 
 def triangle_count(edges: DataFrame, src: str = "i", dst: str = "j") -> DataFrame:
@@ -562,33 +503,19 @@ def bfs_hops(
     a bounded recursive CTE, which is what makes the corpus oracle
     possible). Per round: one join + one min-agg, both
     hash-partitioned on the node id — two shuffles over (node, hops)
-    pairs regardless of corpus size; lineage cut per round with
-    localCheckpoint like connected_components. Returns (node, hops)
-    for nodes within ``max_hops`` of a seed, seeds at 0.
+    pairs regardless of corpus size; lineage cut every round like
+    connected_components. Returns (node, hops) for nodes within
+    ``max_hops`` of a seed, seeds at 0.
     """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        sym = sym.union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-    sym = sym.distinct().localCheckpoint()
-    seed_col = seeds.columns[0]
+    e = _edge_table(edges, src, dst, not directed).localCheckpoint()
     dist = (
-        seeds.select(F.col(seed_col).alias("node"))
+        seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
         .withColumn("hops", F.lit(0))
-        .localCheckpoint()
     )
-    for _ in range(max_hops):
-        # expand the frontier FORWARD along a→b (for the undirected
-        # case both directions are already in sym)
-        nbr = sym.join(dist, sym["a"] == dist["node"]).select(
-            F.col("b").alias("node"), (F.col("hops") + 1).alias("hops")
-        )
-        dist = (
-            dist.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint()
-        )
-    return dist
+
+    def step(s: DataFrame) -> DataFrame:
+        msgs = _send(e, s, [(F.col("hops") + 1).alias("hops")])
+        return _min_over(s, msgs, "hops")
+
+    return _rounds(dist, step, max_hops)
